@@ -110,6 +110,17 @@ def bilinear_at(field: np.ndarray, pts: np.ndarray) -> np.ndarray:
     )
 
 
+def hessian_det(
+    sb1: np.ndarray, sb2: np.ndarray, m0: np.ndarray, m1: np.ndarray
+) -> np.ndarray:
+    """Hessian determinant of ψ from gradients of the smoothed fields
+    on mesh (m0, m1) (vpicdataset.py:378-380):
+    det = db1_d2·(−db2_d1) − (−db2_d2)·db1_d1."""
+    db1_d1, db1_d2 = np.gradient(sb1, m0, m1)
+    db2_d1, db2_d2 = np.gradient(sb2, m0, m1)
+    return db1_d2 * (-db2_d1) - (-db2_d2) * db1_d1
+
+
 def classify_nulls(hess_det: np.ndarray, nulls: np.ndarray):
     """X vs O by the sign of the interpolated Hessian determinant of ψ
     (vpicdataset.py:431-439): positive → O point, negative → X."""

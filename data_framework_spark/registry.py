@@ -1042,7 +1042,8 @@ QUERIES: dict[str, Query] = {
 # (b) the 18 remaining r17-rewritten/touched paths with no r17
 #     driver row (TOUCH policy: plan/kernel change outranks merely-
 #     old rows) — 9 from the r14 cohort (minhash_near_dup_pairs,
-#     dedup_clusters, ivf_persist_roundtrip + the ivfpq family) and
+#     dedup_clusters, ivf_persist_roundtrip, halo_smooth_multi_t +
+#     the 5-query ivfpq family) and
 #     9 from the r15 cohort (sketch/hll splits, simhash pair
 #     enumeration, the pq widens, pagerank_neardup_lsh,
 #     semantic_dedup_scaled), registry order within each;

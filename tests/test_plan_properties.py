@@ -144,6 +144,50 @@ def test_partitioned_write_prunes_partitions(spark):
     assert "source" not in scan  # partition col is path-derived
 
 
+def test_island_family_build_no_exchange(spark):
+    """The find_structures family upstream is built in one worker pass:
+    no shuffle, window or join stands between the generator and the
+    parquet write."""
+    from data_framework_spark.plans.structures import (
+        _build_island_family_fields,
+    )
+
+    p = plan_text(_build_island_family_fields(spark))
+    assert "MapInPandas" in p
+    for op in ("Exchange", "Window", "Join"):
+        assert op not in p, op
+
+
+def test_find_structures_nulls_no_hessian_join(spark, monkeypatch):
+    """find_structures' null-finding job (its one collect) computes the
+    Hessian inside the nulls kernel: its plan runs a single pandas
+    kernel over the family slice, with no join to a Hessian kernel."""
+    from data_framework_spark.plans.structures import (
+        _island_field_t0,
+        find_structures,
+        island_family_upstream,
+    )
+
+    ds = _island_field_t0(spark)
+    up = island_family_upstream(spark, SF, [(0.0, 0)])
+    frame_cls = type(up)  # the session's concrete DataFrame class
+    collect = frame_cls.collect
+    plans = []
+
+    def recording_collect(self):
+        plans.append(plan_text(self))
+        return collect(self)
+
+    monkeypatch.setattr(frame_cls, "collect", recording_collect)
+    find_structures(ds, "b1", "b2", smoothing=1, upstream=up)
+    monkeypatch.undo()
+    for d in ds.scratch_cached:
+        d.unpersist()
+    (p,) = plans
+    assert p.count("FlatMapGroupsInPandas (") == 1  # one kernel node
+    assert "Join" not in p
+
+
 @pytest.mark.slow  # r18: >10 s; slow lane (see pytest.ini)
 def test_no_accidental_cartesian_products(spark):
     """Sweep EVERY registry query's physical plan: CartesianProduct

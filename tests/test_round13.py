@@ -264,6 +264,39 @@ def test_ivfpq_partial_books_fail_loudly(spark, tmp_path):
         _load_index_driver_side(spark, path)
 
 
+def test_ivfpq_rebuild_at_reused_path_serves_new_components(spark, tmp_path):
+    """Rebuilding an index at a path this session already searched
+    must serve the NEW build's centroids, not the session-cached
+    components of the old one (ivfpq_index_write drops the entry)."""
+    from data_framework_spark.similarity.ivfpq import (
+        _load_index_driver_side,
+        ivfpq_index_write,
+    )
+
+    rng = np.random.default_rng(5)
+    path = str(tmp_path / "idx")
+
+    def build(offset: float) -> list:
+        emb = spark.createDataFrame(
+            [
+                (vid, [float(x) for x in rng.normal(size=64) + offset])
+                for vid in range(60)
+            ],
+            "vec_id long, embedding array<float>",
+        )
+        ivfpq_index_write(emb, path, ncells=4)
+        return _load_index_driver_side(spark, path)[0]
+
+    old = build(0.0)
+    new = build(10.0)
+    on_disk = [
+        [float(x) for x in r["embedding"]]
+        for r in spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
+    ]
+    assert new == on_disk
+    assert new != old
+
+
 # --- distributed-label coordinate contract (r12 advisory) ---------------------
 
 

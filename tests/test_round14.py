@@ -10,6 +10,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import struct
 
 import pytest
 
@@ -209,6 +210,53 @@ def _island_2t_dataset(spark):
     return ds
 
 
+def _value_bits(df, col: str = "value") -> list:
+    """Sorted (t, i0, i1, bit pattern of `col`) rows: bitwise, so
+    -0.0 and +0.0 differ."""
+    return sorted(
+        (r[0], r[1], r[2], struct.pack("<d", r[3]))
+        for r in df.select("t", "i0", "i1", col).collect()
+    )
+
+
+def test_family_build_bitwise_equals_spark_primitives(spark):
+    """The one-pass family build must equal, bitwise on every row and
+    field, the derivation from the Spark primitives the standalone
+    find_structures path uses: tile_apply smoothing of b1/b2/jy and
+    calc_fluxfn's window prefix sums on the same 8-phase dataset."""
+    from data_framework_spark.plans.structures import (
+        ISLAND_FAMILY_SMOOTHING,
+        _build_island_family_fields,
+        _island_family_dataset,
+        _norm_smoothing,
+        _smooth_gaussian,
+        calc_fluxfn,
+    )
+
+    ds = _island_family_dataset(spark)
+    sig = _norm_smoothing(ISLAND_FAMILY_SMOOTHING)
+    calc_fluxfn(ds, "b1", "b2")
+    want = {"psi": ds.variables["flux_fn"].df}
+    for col, name in (("sb1", "b1"), ("sb2", "b2"), ("jys", "jy")):
+        want[col] = _smooth_gaussian(ds.variables[name], sig[1], sig[2])
+    fam = _build_island_family_fields(spark).cache()
+    try:
+        assert fam.count() == 8 * 120 * 64
+        base = sorted(
+            tuple(r) for r in fam.select("t", "i0", "i1", "c0", "c1").collect()
+        )
+        assert base == sorted(
+            tuple(r)
+            for r in ds.variables["b1"].df.select(
+                "t", "i0", "i1", "c0", "c1"
+            ).collect()
+        )
+        for col, df in want.items():
+            assert _value_bits(fam, col) == _value_bits(df), col
+    finally:
+        fam.unpersist()
+
+
 def test_family_upstream_bitwise_equals_standalone(spark):
     """find_structures fed the sliced 8-phase family upstream must
     produce BITWISE the null coordinates and mask cells the standalone
@@ -241,16 +289,11 @@ def test_family_upstream_bitwise_equals_standalone(spark):
         tuple(r) for r in ds_b.masks_df.orderBy(*key).collect()
     )
     assert rows_a == rows_b
-    # flux_fn registered for API parity and bitwise equal
-    fa = sorted(
-        tuple(r)
-        for r in ds_a.variables["flux_fn"].df.select(*key, "value").collect()
-    )
-    fb = sorted(
-        tuple(r)
-        for r in ds_b.variables["flux_fn"].df.select(*key, "value").collect()
-    )
-    assert fa == fb
+    # the variables registered for API parity, bitwise equal
+    for name in ("b1_smooth", "b2_smooth", "flux_fn"):
+        assert _value_bits(ds_a.variables[name].df) == _value_bits(
+            ds_b.variables[name].df
+        ), name
     for d in getattr(ds_a, "scratch_cached", []) + getattr(
         ds_b, "scratch_cached", []
     ):

@@ -271,3 +271,54 @@ def test_smooth_gaussian_halo_route_bit_identical(spark, monkeypatch):
     }
     assert whole.keys() == tiled.keys()
     assert all(whole[k] == tiled[k] for k in whole)  # bit-identical
+
+
+def test_flux_fn_dense_folds_as_spark_windows(spark):
+    """flux_fn_dense (the one-pass family build's ψ) must equal
+    calc_fluxfn's Spark window sums BITWISE, signed zeros included.
+    b2's first row and column and b1's first row hold -0.0, b1's first
+    column +0.0: Spark's running sum starts from `0.0 + x`, so its ψ
+    down the first column is +0.0 - +0.0 = +0.0, while a bare
+    np.cumsum keeps b2's -0.0 and yields -0.0 there."""
+    from data_framework_spark.plans.structures import flux_fn_dense
+
+    rng = np.random.default_rng(3)
+    z = np.linspace(-1.0, 2.0, 13)
+    x = np.linspace(0.0, 1.0, 9)
+    b1 = rng.normal(size=(13, 9))
+    b2 = rng.normal(size=(13, 9))
+    b2[0, :] = -0.0
+    b2[:, 0] = -0.0
+    b1[0, :] = -0.0
+    b1[:, 0] = 0.0
+    ts = np.array([0.0])
+    ds = SparkDataset()
+    ds.add_var(SparkVariable.from_numpy(spark, "b1", ts, [z, x], b1[None]))
+    ds.add_var(SparkVariable.from_numpy(spark, "b2", ts, [z, x], b2[None]))
+    calc_fluxfn(ds, "b1", "b2")
+    spark_psi = ds.variables["flux_fn"].to_numpy()[0]
+
+    d0, d1 = float(z[1] - z[0]), float(x[1] - x[0])
+    dense = flux_fn_dense(b1, b2, d0, d1)
+    assert np.array_equal(dense.view(np.int64), spark_psi.view(np.int64))
+    # the fixture discriminates: the unfolded cumsum differs in sign bits
+    bare = np.cumsum(b2[:, 0] * d0)[:, None] - np.cumsum(b1 * d1, axis=1)
+    assert not np.array_equal(bare.view(np.int64), spark_psi.view(np.int64))
+
+
+def test_hessian_variable_matches_kernel(found):
+    """The registered fluxfn_hessian_det (lazy, read by no pipeline
+    step) equals hessian_det on the registered smoothed fields — the
+    determinant the nulls kernel classifies by."""
+    from data_framework_spark.kernels.structures import hessian_det
+
+    ds, _ = found
+    m0, m1 = ds.variables["b1"].mesh
+    want = hessian_det(
+        ds.variables["b1_smooth"].to_numpy()[0],
+        ds.variables["b2_smooth"].to_numpy()[0],
+        m0,
+        m1,
+    )
+    got = ds.variables["fluxfn_hessian_det"].to_numpy()[0]
+    assert np.array_equal(got.view(np.int64), want.view(np.int64))
