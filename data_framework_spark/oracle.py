@@ -8,6 +8,7 @@ so hash mismatches surface during development, not at round end.
 
 from __future__ import annotations
 
+import hashlib
 import math
 from datetime import date, datetime
 from decimal import Decimal
@@ -60,12 +61,16 @@ def _digest(rows: list[tuple], colnames: list[str]) -> int:
     (a wrongly duplicated row plus a dropped one) XOR to the same
     value at equal row counts — a false green (round-9 review).
     Under summation a multiset collision requires equal row-hash
-    sums, not mere pairing."""
+    sums, not mere pairing. Rows hash with an 8-byte blake2b, not the
+    builtin `hash()`, which is salted per process
+    (`PYTHONHASHSEED`): the digest of a result is the same in every
+    process, so it can be committed and compared across runs."""
     order = sorted(range(len(colnames)), key=lambda i: colnames[i])
     acc = 0
     for row in rows:
         key = "|".join(_norm(row[i]) for i in order)
-        acc = (acc + hash(key)) % (1 << 64)
+        h = hashlib.blake2b(key.encode(), digest_size=8).digest()
+        acc = (acc + int.from_bytes(h, "big")) % (1 << 64)
     return acc
 
 

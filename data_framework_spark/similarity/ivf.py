@@ -50,18 +50,22 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from data_framework_spark.similarity.ann import cosine
-from data_framework_spark.sources.tables import load_table
+from data_framework_spark.sources.tables import collect_bounded, load_table
+
+#: Bound on a persisted index's coarse quantizer, checked when its
+#: centroids are collected to the driver. ncells grows as ~sqrt(N), so
+#: 65,536 cells cover a corpus of ~4 billion vectors.
+MAX_CELLS = 1 << 16
 
 
 def _centroid_rows(emb: DataFrame, ncells: int) -> list:
     """Deterministic coarse quantizer: the `ncells` lowest vec_ids.
     Bounded driver-side collect (ncells rows), exactly like the null-
     point params in plans/structures.py."""
-    rows = (
-        emb.filter(F.col("vec_id") < ncells)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
+    rows = collect_bounded(
+        emb.filter(F.col("vec_id") < ncells).select("vec_id", "embedding"),
+        ncells,
+        "vec_id",
     )
     if len(rows) != ncells:
         raise ValueError(f"need vec_ids 0..{ncells-1} as centroids")
@@ -69,14 +73,18 @@ def _centroid_rows(emb: DataFrame, ncells: int) -> list:
 
 
 def _rounded_centroid_cosines(cents: list):
-    """Returns f(Series of embeddings) -> (n, ncells) float64 matrix of
-    cosines to each centroid, rounded half-away-from-zero to 9 decimals
-    (SQL round() semantics — np.round would banker's-round)."""
+    """Returns f(Series of embeddings, or an (n, dim) float64 matrix)
+    -> (n, ncells) float64 matrix of cosines to each centroid, rounded
+    half-away-from-zero to 9 decimals (SQL round() semantics —
+    np.round would banker's-round)."""
     C = np.asarray(cents, dtype=np.float64)
     Cn = np.sqrt((C * C).sum(axis=1))
 
     def cos_matrix(embs):
-        X = np.stack(embs.to_numpy()).astype(np.float64)
+        if isinstance(embs, np.ndarray):
+            X = embs
+        else:
+            X = np.stack(embs.to_numpy()).astype(np.float64)
         n = np.sqrt((X * X).sum(axis=1))
         cos = (X @ C.T) / (n[:, None] * Cn[None, :])
         return np.sign(cos) * np.floor(np.abs(cos) * 1e9 + 0.5) / 1e9
@@ -220,7 +228,9 @@ def ivf_index_read(spark: SparkSession, path: str) -> tuple[list, DataFrame]:
     """Reload a persisted IVF index: (centroid list in cid order,
     inverted-lists DataFrame). The centroid fetch is a bounded
     ncells-row collect; the lists load is a lazy partitioned scan."""
-    cent_rows = spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
+    cent_rows = collect_bounded(
+        spark.read.parquet(f"{path}/centroids"), MAX_CELLS, "cid"
+    )
     cents = [[float(x) for x in r["embedding"]] for r in cent_rows]
     lists = spark.read.parquet(f"{path}/lists")
     return cents, lists

@@ -67,6 +67,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from data_framework_spark.similarity.ivf import (
+    MAX_CELLS,
     _centroid_rows,
     _rounded_centroid_cosines,
 )
@@ -76,8 +77,9 @@ from data_framework_spark.similarity.pq import (
     _SUB,
     _round9,
     assign_pq_codes,
+    sq_l2_fold,
 )
-from data_framework_spark.sources.tables import load_table
+from data_framework_spark.sources.tables import collect_bounded, load_table
 
 # 32 coarse cells since round 13 (was 16 through r12): the r13
 # cell-count ablation (scripts/ablate_ivfpq_ncells.py +
@@ -140,13 +142,12 @@ def _residual_codebooks(
     codebook); with trained centroids every residual is nonzero, but
     the seed ids stay for oracle continuity. Bounded PQ_K-row
     collect."""
-    rows = (
+    rows = collect_bounded(
         res.filter(
             (F.col("vec_id") >= ncells) & (F.col("vec_id") < ncells + PQ_K)
-        )
-        .select("vec_id", "residual")
-        .orderBy("vec_id")
-        .collect()
+        ).select("vec_id", "residual"),
+        PQ_K,
+        "vec_id",
     )
     # contiguous-prefix relaxation (see pq._codebooks): a corpus with
     # fewer than ncells+PQ_K vectors seeds a smaller codebook, exactly
@@ -270,8 +271,8 @@ def _load_index_driver_side(spark: SparkSession, path: str):
         return hit
     for k in [k for k in _INDEX_COMPONENTS if k[0] != key[0]]:
         del _INDEX_COMPONENTS[k]  # dead sessions' entries
-    cent_rows = (
-        spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
+    cent_rows = collect_bounded(
+        spark.read.parquet(f"{path}/centroids"), MAX_CELLS, "cid"
     )
     cents = [[float(x) for x in r["embedding"]] for r in cent_rows]
     book_rows = spark.read.parquet(f"{path}/pq_books").collect()
@@ -322,7 +323,7 @@ def _adc_lut(cents: list, books: np.ndarray, queries: list, nprobe: int):
     cell_ids = np.arange(len(cents))
     q_ids = [int(q[0]) for q in queries]
     Q = np.asarray([q[1] for q in queries], dtype=np.float64)
-    cos = cos_matrix(pd.Series(list(Q)))
+    cos = cos_matrix(Q)
     kk = books.shape[1]  # K' ≤ PQ_K on small corpora
     meta: list[tuple[int, int, int]] = []
     dmats: list[np.ndarray] = []
@@ -332,13 +333,8 @@ def _adc_lut(cents: list, books: np.ndarray, queries: list, nprobe: int):
             qres = Q[qi] - C[cell]
             dmat = np.empty((PQ_M, kk), dtype=np.float64)
             for s in range(PQ_M):
-                qs = qres[s * _SUB : (s + 1) * _SUB]
-                diff = books[s] - qs[None, :]  # (K, sub)
-                sq = diff * diff
-                acc = sq[:, 0]
-                for j in range(1, _SUB):  # sequential fold, oracle order
-                    acc = acc + sq[:, j]
-                dmat[s] = _round9(acc)
+                qs = qres[None, s * _SUB : (s + 1) * _SUB]
+                dmat[s] = _round9(sq_l2_fold(qs, books[s])[0])
             meta.append((qid, int(cell), rank))
             dmats.append(dmat)
     n_blk = len(meta)
@@ -512,11 +508,10 @@ def _ivfpq_persist_topk_build(
     spark: SparkSession, sf_dir: str, path: str
 ) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    q_rows = (
-        emb.filter(F.col("vec_id") < IVFPQ_NQ)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
+    q_rows = collect_bounded(
+        emb.filter(F.col("vec_id") < IVFPQ_NQ).select("vec_id", "embedding"),
+        IVFPQ_NQ,
+        "vec_id",
     )
     queries = [
         (r["vec_id"], [float(x) for x in r["embedding"]]) for r in q_rows
@@ -818,11 +813,10 @@ def ivfpq_refine_topk(
     emb = load_table(spark, sf_dir, "embeddings")
     if r is None:
         r = refine_shortlist_r(emb.count(), nprobe)
-    q_rows = (
-        emb.filter(F.col("vec_id") < IVFPQ_NQ)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
+    q_rows = collect_bounded(
+        emb.filter(F.col("vec_id") < IVFPQ_NQ).select("vec_id", "embedding"),
+        IVFPQ_NQ,
+        "vec_id",
     )
     queries = [
         (row["vec_id"], [float(x) for x in row["embedding"]]) for row in q_rows
@@ -956,11 +950,10 @@ def q_ivfpq_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     _nprobe_curve_sql)."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = session_ivfpq_index(spark, sf_dir)
-    q_rows = (
-        emb.filter(F.col("vec_id") < IVFPQ_NQ)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
+    q_rows = collect_bounded(
+        emb.filter(F.col("vec_id") < IVFPQ_NQ).select("vec_id", "embedding"),
+        IVFPQ_NQ,
+        "vec_id",
     )
     queries = [
         (row["vec_id"], [float(x) for x in row["embedding"]]) for row in q_rows

@@ -46,7 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_framework_spark.sources.tables import load_table
+from data_framework_spark.sources.tables import collect_bounded, load_table
 
 PQ_M = 8  # subspaces
 #: Codes per subspace. 16 (4 bits) through round 11; 256 (8 bits, the
@@ -66,11 +66,10 @@ def _codebooks(emb: DataFrame) -> np.ndarray:
     """(PQ_M, PQ_K, _SUB) deterministic codebook SEEDS: the first PQ_K
     vectors' subspace slices — a bounded PQ_K-row collect, same as
     ivf._centroid_rows."""
-    rows = (
-        emb.filter(F.col("vec_id") < PQ_K)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
+    rows = collect_bounded(
+        emb.filter(F.col("vec_id") < PQ_K).select("vec_id", "embedding"),
+        PQ_K,
+        "vec_id",
     )
     # A corpus smaller than PQ_K seeds a smaller codebook — the faiss
     # small-trainset convention, and exactly what the oracle's
@@ -278,13 +277,29 @@ def _round9(x: np.ndarray) -> np.ndarray:
     return np.sign(x) * np.floor(np.abs(x) * 1e9 + 0.5) / 1e9
 
 
+def sq_l2_fold(Xs: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """(n, sub) rows × (K, sub) entries → (n, K) squared L2 distances,
+    accumulated SEQUENTIALLY over the sub dims in dim order (explicit
+    left-to-right adds, not np.sum's pairwise tree) to mirror the
+    oracle's list_sum fold. One (n, K) work buffer is reused in place
+    for every term, so no (n, K, sub) temporary is built. Symmetric
+    bit for bit: (c − q)² equals (q − c)², so a lookup table for one
+    query is `sq_l2_fold(q[None, :], C)[0]`."""
+    d = np.subtract(Xs[:, 0, None], C[None, :, 0])
+    acc = d * d
+    for j in range(1, Xs.shape[1]):
+        np.subtract(Xs[:, j, None], C[None, :, j], out=d)
+        np.multiply(d, d, out=d)
+        acc += d
+    return acc
+
+
 def assign_pq_codes(emb: DataFrame, books: np.ndarray) -> DataFrame:
     """corpus → (vec_id, subspace, code, err): per-subspace argmin of
     the 9dp-rounded squared L2 distance to the PQ_K codebook entries,
-    ties to the smallest code. One Arrow-batched pass; the per-term
-    distance accumulation is SEQUENTIAL over the _SUB dims (explicit
-    left-to-right adds, not np.sum's pairwise tree) to mirror the
-    oracle's list_sum fold."""
+    ties to the smallest code. One Arrow-batched pass; the distances
+    come from sq_l2_fold, the sequential fold that mirrors the
+    oracle's list_sum."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -295,14 +310,8 @@ def assign_pq_codes(emb: DataFrame, books: np.ndarray) -> DataFrame:
             out_sub = np.empty((n, PQ_M), dtype=np.int32)
             out_err = np.empty((n, PQ_M), dtype=np.float64)
             for s in range(PQ_M):
-                Xs = X[:, s * _SUB : (s + 1) * _SUB]  # (n, sub)
-                C = books[s]  # (K, sub)
-                diff = Xs[:, None, :] - C[None, :, :]  # (n, K, sub)
-                sq = diff * diff
-                acc = sq[:, :, 0]
-                for j in range(1, _SUB):  # sequential fold, oracle order
-                    acc = acc + sq[:, :, j]
-                d = _round9(acc)
+                Xs = X[:, s * _SUB : (s + 1) * _SUB]
+                d = _round9(sq_l2_fold(Xs, books[s]))
                 code = np.argmin(d, axis=1)  # first min → smallest code
                 out_sub[:, s] = code
                 out_err[:, s] = d[np.arange(n), code]
@@ -381,11 +390,10 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     *plan* (codes-only scan, broadcast LUTs), not a recall claim."""
     emb = load_table(spark, sf_dir, "embeddings")
     books = trained_codebooks(emb)
-    q_rows = (
-        emb.filter(F.col("vec_id") < 20)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
+    q_rows = collect_bounded(
+        emb.filter(F.col("vec_id") < 20).select("vec_id", "embedding"),
+        20,
+        "vec_id",
     )
     # vectorized assembly (numpy columns through Arrow), array form
     # since r13: one row per (query, subspace) carrying the K'-length
@@ -399,13 +407,8 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         qv = np.asarray([float(x) for x in qr["embedding"]], dtype=np.float64)
         dmat = np.empty((PQ_M, kk), dtype=np.float64)
         for s in range(PQ_M):
-            qs = qv[s * _SUB : (s + 1) * _SUB]
-            diff = books[s] - qs[None, :]  # (K, sub)
-            sq = diff * diff
-            acc = sq[:, 0]
-            for j in range(1, _SUB):  # same sequential fold as assign
-                acc = acc + sq[:, j]
-            dmat[s] = _round9(acc)
+            qs = qv[None, s * _SUB : (s + 1) * _SUB]
+            dmat[s] = _round9(sq_l2_fold(qs, books[s])[0])
         qids.append(int(qr["vec_id"]))
         dmats.append(dmat)
     import pandas as _pd

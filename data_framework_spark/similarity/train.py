@@ -28,15 +28,20 @@ sampled quantizers. Quantizing the TRAINING inputs to 2^-20 granularity
 perturbs the learned centroids by ~1e-6 — irrelevant to quality, and
 both engines see the identical perturbation.
 
-Scale shape (the reason for mapInPandas partials): each Lloyd round is
-ONE corpus-linear Arrow pass that emits per-(partition, cluster)
-partial integer sums — bounded rows (#batches × k), pre-reduced before
-any shuffle — followed by an exact integer groupBy over those bounded
-partials and a bounded driver-side collect (k × dim rows). At 100 TB
-that is the canonical distributed k-means step: no corpus shuffle, no
-unbounded group state, rounds × one-scan cost. Empty clusters keep
-their previous centroid (the usual k-means convention, mirrored by a
-LEFT JOIN + coalesce in the oracle CTEs).
+Scale shape: each Lloyd round is ONE Spark job over the corpus (two
+where the scan is widened: the repartition's map stage, then the
+result stage). Every task folds all of its Arrow batches into a
+single int64 tensor of shape (M, K, w+1) — per subspace and code,
+the w fixed-point coordinate sums plus the member count — and emits
+it as one `binary` row; a task that saw no rows emits nothing. The
+driver collects the P rows (one per task) and sums them exactly. No
+corpus shuffle, no groupBy over partials, no unbounded group state:
+rounds × one scan. The driver holds P partials of M·K·(w+1)·8 bytes —
+147 KB per task for the PQ books at K=256 (M=8, w=8), 17 KB for a
+32-cell coarse quantizer at dim 64; about 0.6 MB in total for the
+10× corpus at 4 cores. Empty clusters keep their previous centroid
+(the usual k-means convention, mirrored by a LEFT JOIN + coalesce in
+the oracle CTEs).
 """
 
 from __future__ import annotations
@@ -47,7 +52,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 FP_SCALE = 1048576.0  # 2^20: exact in double; 64-dim sums stay << 2^53
 
@@ -67,6 +71,48 @@ def _fixed_point(x: np.ndarray) -> np.ndarray:
     return (np.sign(xq) * np.floor(np.abs(xq) + 0.5)).astype(np.int64)
 
 
+def _lloyd_round(
+    parts: DataFrame, vec_col: str, assign, shape: tuple[int, int, int]
+) -> np.ndarray:
+    """One Lloyd round as one Spark job: the exact (M, K, w+1) int64
+    partial-sum tensor over every row of `parts[vec_col]`. `assign`
+    maps an (n, M·w) float64 batch to its (n, M) cluster ids; slot w
+    of each (subspace, code) row is the member count."""
+    m, k, w = shape
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        acc = None
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            XI = _fixed_point(X)
+            codes = assign(X)
+            if acc is None:
+                acc = np.zeros((m, k, w + 1), dtype=np.int64)
+            for s in range(m):
+                np.add.at(acc[s, :, :w], codes[:, s], XI[:, s * w : (s + 1) * w])
+                acc[s, :, w] += np.bincount(codes[:, s], minlength=k)
+        if acc is not None:
+            yield pd.DataFrame({"p": [acc.tobytes()]})
+
+    total = np.zeros((m, k, w + 1), dtype=np.int64)
+    for r in parts.mapInPandas(gen, schema="p binary").collect():
+        total += np.frombuffer(r["p"], dtype=np.int64).reshape(total.shape)
+    return total
+
+
+def _lloyd_update(prev: np.ndarray, total: np.ndarray) -> np.ndarray:
+    """New (M, K, w) centroids from a round's exact sums: ONE double
+    division of exact integers per coordinate; empty clusters keep
+    their previous centroid."""
+    n = total[:, :, -1]
+    live = n > 0
+    new = prev.copy()
+    new[live] = total[:, :, :-1][live] / (n[live][:, None] * FP_SCALE)
+    return new
+
+
 def lloyd_coarse_centroids(
     emb: DataFrame, seed: list, rounds: int = COARSE_ROUNDS
 ) -> list:
@@ -74,59 +120,23 @@ def lloyd_coarse_centroids(
     (vec_id, embedding) corpus: cosine argmax assignment (the ivf.py
     9dp/ties-to-smallest convention), fixed-point mean update."""
     from data_framework_spark.similarity.ivf import _rounded_centroid_cosines
+    from data_framework_spark.sources.tables import widen_scan
 
-    cents = [list(map(float, c)) for c in seed]
-    ncells, dim = len(cents), len(cents[0])
+    cents = np.asarray(seed, dtype=np.float64)[None]  # (1, ncells, dim)
+    # widen past the one-row-group test scan (no-op at scale); the
+    # partials are FIXED-POINT INTEGER sums, so the partition layout
+    # cannot change a single bit of the trained centroids
+    parts = widen_scan(emb.select("embedding"))
     for _ in range(rounds):
-        cos_matrix = _rounded_centroid_cosines(cents)
+        cos_matrix = _rounded_centroid_cosines(cents[0])
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                cells = cos_matrix(pdf["embedding"]).argmax(axis=1)
-                XI = _fixed_point(X)
-                out_c, out_s = [], []
-                for c in np.unique(cells):
-                    m = cells == c
-                    out_c.append(int(c))
-                    # payload = dim integer sums + the member count in
-                    # the last slot: one aggregate, no separate count job
-                    out_s.append(XI[m].sum(axis=0).tolist() + [int(m.sum())])
-                yield pd.DataFrame({"cell": out_c, "s": out_s})
+        def assign(X: np.ndarray) -> np.ndarray:
+            return cos_matrix(X).argmax(axis=1)[:, None]
 
-        # widen past the one-row-group test scan (no-op at scale);
-        # the partials are FIXED-POINT INTEGER sums, so the partition
-        # layout cannot change a single bit of the trained centroids
-        from data_framework_spark.sources.tables import widen_scan
-
-        parts = widen_scan(emb.select("embedding")).mapInPandas(
-            gen, schema="cell int, s array<long>"
+        cents = _lloyd_update(
+            cents, _lloyd_round(parts, "embedding", assign, cents.shape)
         )
-        rows = (
-            parts.select("cell", F.posexplode("s").alias("pos", "v"))
-            .groupBy("cell", "pos")
-            .agg(F.sum("v").alias("sv"))
-            .collect()
-        )
-        sums: dict[tuple[int, int], int] = {}
-        counts: dict[int, int] = {}
-        for r in rows:
-            if r["pos"] == dim:
-                counts[r["cell"]] = int(r["sv"])
-            else:
-                sums[(r["cell"], r["pos"])] = int(r["sv"])
-        cents = [
-            [
-                sums[(c, p)] / (counts[c] * FP_SCALE)  # exact-int division
-                for p in range(dim)
-            ]
-            if counts.get(c)
-            else cents[c]
-            for c in range(ncells)
-        ]
-    return cents
+    return cents[0].tolist()
 
 
 def lloyd_subspace_books(
@@ -136,69 +146,25 @@ def lloyd_subspace_books(
     vectors in `df[vec_col]`: 9dp-rounded squared-L2 argmin assignment
     (the pq.assign_pq_codes convention, sequential fold), fixed-point
     mean update per (subspace, code)."""
-    from data_framework_spark.similarity.pq import _round9
+    from data_framework_spark.similarity.pq import _round9, sq_l2_fold
+    from data_framework_spark.sources.tables import widen_scan
 
-    books = np.asarray(books, dtype=np.float64).copy()
+    books = np.asarray(books, dtype=np.float64)
     M, K, SUB = books.shape
+    # widened for the same reason as lloyd_coarse_centroids above
+    parts = widen_scan(df.select(vec_col))
     for _ in range(rounds):
-        B = books.copy()
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                XI = _fixed_point(X)
-                out_s, out_k, out_p = [], [], []
-                for s in range(M):
-                    Xs = X[:, s * SUB : (s + 1) * SUB]
-                    diff = Xs[:, None, :] - B[s][None, :, :]
-                    sq = diff * diff
-                    acc = sq[:, :, 0]
-                    for j in range(1, SUB):  # sequential fold, oracle order
-                        acc = acc + sq[:, :, j]
-                    code = np.argmin(_round9(acc), axis=1)
-                    XIs = XI[:, s * SUB : (s + 1) * SUB]
-                    for k in np.unique(code):
-                        m = code == k
-                        out_s.append(s)
-                        out_k.append(int(k))
-                        out_p.append(
-                            XIs[m].sum(axis=0).tolist() + [int(m.sum())]
-                        )
-                yield pd.DataFrame(
-                    {"subspace": out_s, "code": out_k, "s": out_p}
-                )
+        def assign(X: np.ndarray) -> np.ndarray:
+            codes = np.empty((len(X), M), dtype=np.int64)
+            for s in range(M):
+                d = sq_l2_fold(X[:, s * SUB : (s + 1) * SUB], books[s])
+                codes[:, s] = np.argmin(_round9(d), axis=1)
+            return codes
 
-        # widen for the same reason as lloyd_coarse_centroids above:
-        # integer-sum partials, bitwise layout-independent
-        from data_framework_spark.sources.tables import widen_scan
-
-        parts = widen_scan(df.select(vec_col)).mapInPandas(
-            gen, schema="subspace int, code int, s array<long>"
+        books = _lloyd_update(
+            books, _lloyd_round(parts, vec_col, assign, books.shape)
         )
-        rows = (
-            parts.select("subspace", "code", F.posexplode("s").alias("pos", "v"))
-            .groupBy("subspace", "code", "pos")
-            .agg(F.sum("v").alias("sv"))
-            .collect()
-        )
-        sums: dict[tuple[int, int, int], int] = {}
-        counts: dict[tuple[int, int], int] = {}
-        for r in rows:
-            if r["pos"] == SUB:
-                counts[(r["subspace"], r["code"])] = int(r["sv"])
-            else:
-                sums[(r["subspace"], r["code"], r["pos"])] = int(r["sv"])
-        new = books.copy()
-        for s in range(M):
-            for k in range(K):
-                n = counts.get((s, k))
-                if n:
-                    new[s, k] = [
-                        sums[(s, k, p)] / (n * FP_SCALE) for p in range(SUB)
-                    ]
-        books = new
     return books
 
 

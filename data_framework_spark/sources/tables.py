@@ -133,6 +133,27 @@ def widen_scan(df: DataFrame) -> DataFrame:
     return df.repartition(n)
 
 
+def collect_bounded(df: DataFrame, max_rows: int, key: str) -> list:
+    """Collect a frame that is small by construction to the driver,
+    sorted by its unique column `key` — the replacement for a bounded
+    `orderBy(key).collect()`.
+
+    The sort runs on the driver over at most `max_rows` rows, so the
+    plan has no range exchange and no sampling job. The collect is a
+    plain `collect()`, not a `limit`/`take`, which would re-scan in
+    extra jobs. Past `max_rows` it raises instead of letting a
+    mis-sized frame (a wrong filter, a grown index) fill the driver:
+    the bound is declared at the call site rather than argued in a
+    comment."""
+    rows = df.collect()
+    if len(rows) > max_rows:
+        raise ValueError(
+            f"collect_bounded: {len(rows)} rows exceed the declared "
+            f"bound of {max_rows}"
+        )
+    return sorted(rows, key=lambda r: r[key])
+
+
 def normalize_ts(
     spark: SparkSession,
     df: DataFrame,
