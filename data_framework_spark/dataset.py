@@ -33,6 +33,7 @@ import numpy as np
 
 from pyspark.sql import SparkSession
 
+from data_framework_spark.sources.tables import read_parquet
 from data_framework_spark.variable import SparkVariable
 
 
@@ -149,6 +150,6 @@ class SparkDataset:
             meta = json.load(f)
         variables = {}
         for label, info in meta["variables"].items():
-            df = spark.read.parquet(os.path.join(path, info["dir"]))
+            df = read_parquet(spark, os.path.join(path, info["dir"]))
             variables[label] = SparkVariable(label, df, info["ndim"])
         return cls(variables, meta["params"])

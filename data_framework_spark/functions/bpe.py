@@ -135,7 +135,7 @@ def learned_merges(
     `sf_dir`. `split` names the training slice the caller's `words`
     frame represents (e.g. "all", "train25") — it is part of the cache
     key, so merge lists learned from different slices never mix."""
-    from data_framework_spark.sources.formats import _sf_fingerprint
+    from data_framework_spark.sources.tables import _sf_fingerprint
 
     app = spark.sparkContext.applicationId
     key = (app, sf_dir, _sf_fingerprint(sf_dir), split, n_merges)

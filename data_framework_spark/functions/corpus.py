@@ -780,7 +780,7 @@ _FUNNEL_SCRATCH: dict[tuple[str, str, tuple], DataFrame] = {}
 
 
 def _funnel_base_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_framework_spark.sources.formats import _sf_fingerprint
+    from data_framework_spark.sources.tables import _sf_fingerprint
 
     app = spark.sparkContext.applicationId
     # keyed on the same source fingerprint as session_index_dir: a

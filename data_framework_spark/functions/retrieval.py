@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_framework_spark.functions.text import tokens
-from data_framework_spark.sources.tables import load_table
+from data_framework_spark.sources.tables import load_table, read_parquet
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -125,7 +125,7 @@ def bm25_index_write(docs: DataFrame, path: str) -> None:
     postings.write.mode("overwrite").partitionBy("tbucket").parquet(
         f"{path}/postings"
     )
-    idx = postings.sparkSession.read.parquet(f"{path}/postings")
+    idx = read_parquet(postings.sparkSession, f"{path}/postings")
     idx.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("df")
     ).write.mode("overwrite").parquet(f"{path}/terms")
@@ -163,15 +163,15 @@ def bm25_topk_from_index(
         }
     )
     postings = (
-        spark.read.parquet(f"{path}/postings")
+        read_parquet(spark, f"{path}/postings")
         .filter(F.col("tbucket").isin(buckets))
         .join(F.broadcast(terms_df), "term")
     )
     # df only for the query terms — never broadcast the full vocab
-    dfreq = spark.read.parquet(f"{path}/terms").join(
+    dfreq = read_parquet(spark, f"{path}/terms").join(
         F.broadcast(terms_df.select("term")), "term"
     )
-    corpus = spark.read.parquet(f"{path}/stats")
+    corpus = read_parquet(spark, f"{path}/stats")
     k1, b = F.lit(BM25_K1), F.lit(BM25_B)
     contrib = (
         F.log(

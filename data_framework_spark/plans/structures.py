@@ -59,6 +59,7 @@ from data_framework_spark.plans.tile_kernel import (
     tile_apply_halo,
     tile_ranks,
 )
+from data_framework_spark.sources.tables import read_parquet
 from data_framework_spark.variable import SparkVariable
 
 # Above this many cells per timestep, smoothing runs through the
@@ -645,7 +646,7 @@ def island_family_upstream(
         spark,
         sf_dir,
         "island_family_fields",
-        lambda: spark.read.parquet(f"{fam_dir}/fields"),
+        lambda: read_parquet(spark, f"{fam_dir}/fields"),
     )
     remap = F.create_map(
         *[F.lit(v) for qt, p in tmap for v in (float(p), float(qt))]

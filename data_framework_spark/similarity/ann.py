@@ -318,10 +318,8 @@ _TAGGED_CACHE: dict[str, DataFrame] = {}
 def cached_route(
     spark: SparkSession, sf_dir: str, route: str, build
 ) -> DataFrame:
-    from data_framework_spark.sources.formats import (
-        _index_cache_root,
-        _sf_fingerprint,
-    )
+    from data_framework_spark.sources.formats import _index_cache_root
+    from data_framework_spark.sources.tables import _sf_fingerprint
 
     app = spark.sparkContext.applicationId
     fp = _sf_fingerprint(sf_dir)
@@ -357,10 +355,8 @@ def evict_route(spark: SparkSession, sf_dir: str, route: str) -> None:
     a dict lookup (round-5 verdict finding 2), while entries built by
     the OTHER route queries stay for the recall contracts' internal
     reuse."""
-    from data_framework_spark.sources.formats import (
-        _index_cache_root,
-        _sf_fingerprint,
-    )
+    from data_framework_spark.sources.formats import _index_cache_root
+    from data_framework_spark.sources.tables import _sf_fingerprint
 
     app = spark.sparkContext.applicationId
     key = (app, sf_dir, _sf_fingerprint(sf_dir), route, _index_cache_root())

@@ -50,7 +50,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from data_framework_spark.similarity.ann import cosine
-from data_framework_spark.sources.tables import collect_bounded, load_table
+from data_framework_spark.sources.tables import (
+    collect_bounded,
+    load_table,
+    read_parquet,
+)
 
 #: Bound on a persisted index's coarse quantizer, checked when its
 #: centroids are collected to the driver. ncells grows as ~sqrt(N), so
@@ -229,10 +233,10 @@ def ivf_index_read(spark: SparkSession, path: str) -> tuple[list, DataFrame]:
     inverted-lists DataFrame). The centroid fetch is a bounded
     ncells-row collect; the lists load is a lazy partitioned scan."""
     cent_rows = collect_bounded(
-        spark.read.parquet(f"{path}/centroids"), MAX_CELLS, "cid"
+        read_parquet(spark, f"{path}/centroids"), MAX_CELLS, "cid"
     )
     cents = [[float(x) for x in r["embedding"]] for r in cent_rows]
-    lists = spark.read.parquet(f"{path}/lists")
+    lists = read_parquet(spark, f"{path}/lists")
     return cents, lists
 
 

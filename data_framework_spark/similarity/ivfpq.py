@@ -79,7 +79,11 @@ from data_framework_spark.similarity.pq import (
     assign_pq_codes,
     sq_l2_fold,
 )
-from data_framework_spark.sources.tables import collect_bounded, load_table
+from data_framework_spark.sources.tables import (
+    collect_bounded,
+    load_table,
+    read_parquet,
+)
 
 # 32 coarse cells since round 13 (was 16 through r12): the r13
 # cell-count ablation (scripts/ablate_ivfpq_ncells.py +
@@ -272,10 +276,10 @@ def _load_index_driver_side(spark: SparkSession, path: str):
     for k in [k for k in _INDEX_COMPONENTS if k[0] != key[0]]:
         del _INDEX_COMPONENTS[k]  # dead sessions' entries
     cent_rows = collect_bounded(
-        spark.read.parquet(f"{path}/centroids"), MAX_CELLS, "cid"
+        read_parquet(spark, f"{path}/centroids"), MAX_CELLS, "cid"
     )
     cents = [[float(x) for x in r["embedding"]] for r in cent_rows]
-    book_rows = spark.read.parquet(f"{path}/pq_books").collect()
+    book_rows = read_parquet(spark, f"{path}/pq_books").collect()
     if not book_rows:
         raise ValueError(
             f"{path}/pq_books is empty — index missing or partially "
@@ -379,7 +383,7 @@ def ivfpq_topk_from_index(
     # read becomes a directory-pruned scan (PartitionFilters), not a
     # full-index scan filtered by the join
     probed_cells = sorted(int(c) for c in lut["cell"].unique())
-    codes = spark.read.parquet(f"{path}/codes").filter(
+    codes = read_parquet(spark, f"{path}/codes").filter(
         F.col("cell").isin(probed_cells)
     )
     # written-order fold over the 8 subspace lookups (NOT F.sum, whose
@@ -973,7 +977,7 @@ def q_ivfpq_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dlooks array<double>",
     )
     probed_cells = sorted(int(c) for c in lut["cell"].unique())
-    codes = spark.read.parquet(f"{path}/codes").filter(
+    codes = read_parquet(spark, f"{path}/codes").filter(
         F.col("cell").isin(probed_cells)
     )
     sweep_arr = F.array(*[F.lit(n) for n in IVFPQ_NPROBE_SWEEP])
@@ -1023,7 +1027,7 @@ def q_ivfpq_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     nids = sorted({nid for _, nid in exact_rows})
     cell_of = {
         r["vec_id"]: int(r["cell"])
-        for r in spark.read.parquet(f"{path}/codes")
+        for r in read_parquet(spark, f"{path}/codes")
         .select("vec_id", "cell")
         .distinct()
         .filter(F.col("vec_id").isin(nids))

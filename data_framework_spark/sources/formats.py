@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_framework_spark.functions.sampling import HASH_FRACTION_SQL_TMPL
-from data_framework_spark.sources.tables import load_table
+from data_framework_spark.sources.tables import _sf_fingerprint, load_table
 
 _SCRATCH_DIRS: list[str] = []
 
@@ -62,28 +62,6 @@ def _cleanup_scratch_dirs() -> None:
 # sessions are pruned on every call so a long-lived process never
 # reuses a stale path.
 _INDEX_DIRS: dict[tuple[str, str, str, tuple], str] = {}
-
-
-def _sf_fingerprint(sf_dir: str) -> tuple:
-    """Cheap content fingerprint of a data directory: sorted
-    (relpath, mtime_ns, size) over its parquet files (one os.walk,
-    no data read). A file that vanishes between the walk and the stat
-    (a concurrent overwrite-mode rewrite — exactly the scenario the
-    fingerprint exists for) is skipped rather than crashing: the
-    changed fingerprint then triggers the rebuild (round-9 review)."""
-    out = []
-    for root, _dirs, files in os.walk(sf_dir):
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(root, f)
-                try:
-                    st = os.stat(p)
-                except OSError:
-                    continue
-                out.append(
-                    (os.path.relpath(p, sf_dir), st.st_mtime_ns, st.st_size)
-                )
-    return tuple(sorted(out))
 
 
 def session_index_dir(spark, sf_dir: str, prefix: str, build) -> str:

@@ -1,9 +1,19 @@
 """Parquet table sources for the test star schema.
 
 The driver test data (/root/testdata/sf*/..., see TESTDATA.md) is one
-parquet file per table. Reads go through `spark.read.parquet` so
-column pruning and predicate pushdown reach the scan (verify with
+parquet file per table. Reads are parquet scans, so column pruning
+and predicate pushdown reach the scan (verify with
 `df.explain("formatted")` → `PushedFilters` / `ReadSchema`).
+
+Reads of stable paths skip schema inference. `spark.read.parquet(path)`
+without a schema runs one Spark job that reads the file footers
+(`ParquetFileFormat.inferSchema` → `mergeSchemasInParallel`), 60–70 ms
+on the driver for every table a query loads. `read_parquet` infers a
+path's schema once and replays it as an explicit schema for as long as
+the files (by their (relpath, mtime_ns, size) stamp) and the confs that
+steer inference are unchanged. The memo holds DDL strings only, so it
+needs no session pruning or unpersist and stays valid across session
+restarts.
 
 At 100 TB these tables would be directory-partitioned (e.g. orders by
 o_orderdate month); nothing in the query layer assumes single-file
@@ -13,6 +23,7 @@ inputs — paths are opaque to every operator.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -35,6 +46,72 @@ TABLES = (
 # (region/nation are fixed-cardinality; supplier/part/customer grow with
 # SF but stay orders of magnitude below the fact tables).
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
+
+#: session confs that change the schema Spark infers from parquet files;
+#: their values are part of the schema memo's key
+_PARQUET_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+#: absolute path -> ((stamp, conf values), inferred schema as DDL); one
+#: entry per path, replaced when its files or the confs change
+_PARQUET_SCHEMAS: dict[str, tuple[tuple, str]] = {}
+
+
+def _sf_fingerprint(path: str) -> tuple:
+    """Cheap content stamp of a parquet file or a data directory:
+    sorted (relpath, mtime_ns, size) over its parquet files (one
+    os.walk, no data read); a single file is stamped as
+    ((basename, mtime_ns, size),). A file that vanishes between the
+    walk and the stat (a concurrent overwrite-mode rewrite — exactly
+    the scenario the stamp exists for) is skipped rather than
+    crashing: the changed stamp then triggers the rebuild (round-9
+    review). A missing path stamps as ()."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return ()
+    if stat.S_ISREG(st.st_mode):
+        return ((os.path.basename(path), st.st_mtime_ns, st.st_size),)
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            if f.endswith(".parquet"):
+                p = os.path.join(root, f)
+                try:
+                    st = os.stat(p)
+                except OSError:
+                    continue
+                out.append((os.path.relpath(p, path), st.st_mtime_ns, st.st_size))
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` without the schema-inference job on
+    every call after the first: the inferred schema is memoized as DDL
+    under (absolute path, `_sf_fingerprint` stamp, the values of
+    `_PARQUET_SCHEMA_CONFS`) and replayed with `spark.read.schema`.
+    A rewritten file or a flipped conf misses and is re-inferred. Use
+    it for paths that outlive one call (tables, index directories); a
+    scratch path written fresh on every call could only miss."""
+    stamp = _sf_fingerprint(path)
+    if not stamp:
+        # nothing to stamp (a missing path raises here, as before)
+        return spark.read.parquet(path)
+    apath = os.path.abspath(path)
+    key = (stamp, tuple(spark.conf.get(k, None) for k in _PARQUET_SCHEMA_CONFS))
+    hit = _PARQUET_SCHEMAS.get(apath)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _PARQUET_SCHEMAS[apath] = (key, df._jdf.schema().toDDL())
+    return df
 
 
 def load_table(
@@ -75,7 +152,7 @@ def load_table(
         raise ValueError(
             f"ts_between is only supported for the events table, not {name!r}"
         )
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = normalize_ts(spark, df, ts_between=ts_between)
     return df

@@ -128,7 +128,7 @@ def chunked_events_source(
     import glob
     import shutil
 
-    from data_framework_spark.sources.formats import _sf_fingerprint
+    from data_framework_spark.sources.tables import _sf_fingerprint
 
     cache_key = (sf_dir, _sf_fingerprint(sf_dir), n_chunks)
     cached = _CHUNK_CACHE.get(cache_key)

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_framework_spark.sources.tables import load_table
+from data_framework_spark.sources.tables import load_table, read_parquet
 
 
 def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
@@ -99,7 +99,7 @@ def stream_tumbling_counts(
     # on driver generation), not load_table's converted one — a
     # readStream schema that disagrees with the files mis-reads
     # silently
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = read_parquet(spark, path).schema
     # the file stream source requires a directory/glob, not a bare
     # file path — a trailing glob makes the single test file listable
     stream = spark.readStream.schema(raw_schema).parquet(path + "*")

@@ -10,9 +10,10 @@ Usage: python scripts/profile_query.py <query> [<query> ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
 
 Each query runs twice (cold + warm); the warm pass is the one profiled
-(event-log jobs are tagged by query via setJobDescription). Output:
-per query, total wall, and the warm pass's jobs sorted by duration
-with their description/callsite.
+(event-log jobs are tagged by query via setJobGroup). Output: per
+query, total wall, and the warm pass's jobs sorted by duration with
+their stage names and the first frame of their call site (a
+`DataFrameReader.parquet` frame is a schema-inference job).
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ import sys
 import time
 
 
-def main() -> None:
+def main() -> int:
     names = sys.argv[1:]
     if not names:
         print("usage: profile_query.py <query> [...]", file=sys.stderr)
@@ -35,31 +36,19 @@ def main() -> None:
     shutil.rmtree(log_dir, ignore_errors=True)
     os.makedirs(log_dir, exist_ok=True)
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
+    # the event-log confs reach the JVM through the launcher, as in
+    # perfbench/harness.py, so the session is the engine's own
+    # (session.get_spark), not a second copy of its configuration
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join([
+        "--conf spark.eventLog.enabled=true",
+        f"--conf spark.eventLog.dir=file://{log_dir}",
+        "--conf spark.eventLog.compress=false",
+        "--conf spark.eventLog.rolling.enabled=false",
+        "pyspark-shell",
+    ])
+    from data_framework_spark.session import get_spark
 
-    from data_framework_spark.session import RUNTIME_CONVENTIONS
-
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile_query")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", log_dir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-    )
-    for k, v in RUNTIME_CONVENTIONS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark("profile_query")
 
     from data_framework_spark.operators.bucketed import bucketed_tables
     from data_framework_spark.registry import QUERIES
@@ -100,16 +89,16 @@ def main() -> None:
                 if e == "SparkListenerJobStart":
                     jid = ev["Job ID"]
                     props = ev.get("Properties") or {}
+                    infos = ev.get("Stage Infos", [])
                     jobs[jid] = {
                         "group": props.get("spark.jobGroup.id", ""),
-                        "desc": props.get("spark.job.description", "")[:90],
-                        "callsite": "",
                         "start": ev.get("Submission Time", 0),
-                        "n_stages": len(ev.get("Stage Infos", [])),
-                        "stages": [
-                            s.get("Stage Name", "")[:70]
-                            for s in ev.get("Stage Infos", [])
-                        ],
+                        "n_stages": len(infos),
+                        # "Details" is the stage's call site, innermost
+                        # frame first
+                        "frame": infos[0].get("Details", "").partition("\n")[0][:110]
+                        if infos else "",
+                        "stages": [s.get("Stage Name", "")[:70] for s in infos],
                     }
                 elif e == "SparkListenerJobEnd":
                     jid = ev["Job ID"]
@@ -131,6 +120,7 @@ def main() -> None:
         for j in tagged[:25]:
             label = " | ".join(dict.fromkeys(j["stages"]))[:150]
             print(f"   {j['dur']:7.3f}s  [{j['n_stages']:2d} stages]  {label}")
+            print(f"             at {j['frame']}")
     return 0
 
 

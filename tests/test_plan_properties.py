@@ -74,6 +74,56 @@ def test_bucketed_join_no_exchange(spark):
     assert p.count("Bucketed: true") == 2
 
 
+def test_bucketed_layout_persists_across_sessions(
+    spark, tmp_path, monkeypatch, jobs_started
+):
+    """The layout is written once into the index cache. A restarted
+    session (no catalog tables, no session index registry) registers
+    the persisted files without a write job, with the same no-Exchange
+    plan and the same rows; a changed source stamp rebuilds it under
+    new names."""
+    import os
+    import shutil
+
+    from data_framework_spark.operators.bucketed import (
+        bucketed_join,
+        bucketed_tables,
+        q_bucketed_join_lineitem,
+    )
+    from data_framework_spark.sources import formats
+
+    monkeypatch.setenv(formats.INDEX_CACHE_ENV, str(tmp_path / "index"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for t in ("lineitem", "orders"):
+        shutil.copyfile(f"{SF}/{t}.parquet", sf / f"{t}.parquet")
+    sf = str(sf)
+
+    names = bucketed_tables(spark, sf)
+    rows = q_bucketed_join_lineitem(spark, sf).collect()
+    assert rows
+
+    for name in names:
+        spark.sql(f"DROP TABLE {name}")
+    monkeypatch.setattr(formats, "_INDEX_DIRS", {})
+    got = []
+    assert jobs_started(spark, lambda: got.append(bucketed_tables(spark, sf))) == 0
+    assert got == [names]
+    p = plan_text(bucketed_join(spark, sf))
+    assert "SortMergeJoin" in p
+    assert "Exchange hashpartitioning" not in p
+    assert "BroadcastExchange" not in p
+    assert p.count("Bucketed: true") == 2
+    assert q_bucketed_join_lineitem(spark, sf).collect() == rows
+
+    orders = os.path.join(sf, "orders.parquet")
+    st = os.stat(orders)
+    os.utime(orders, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert jobs_started(spark, lambda: got.append(bucketed_tables(spark, sf))) >= 1
+    assert set(got[-1]).isdisjoint(names)
+    assert q_bucketed_join_lineitem(spark, sf).collect() == rows
+
+
 def test_q17_no_sort_merge_join(spark):
     """q17's decorrelated plan runs on broadcast joins only — a
     SortMergeJoin would mean the full-table shuffle crept back."""
