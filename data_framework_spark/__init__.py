@@ -17,7 +17,17 @@ Design principles (see SURVEY.md §1.3, §4):
   per-partition state is bounded at 100 TB inputs.
 """
 
-from data_framework_spark.session import get_spark
-
 __all__ = ["get_spark"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # `get_spark` is loaded on first use (PEP 562): importing the package
+    # must not import pyspark, because the Python-worker daemon
+    # (`worker_daemon`) runs inside it and has to order `sys.path`
+    # before pyspark is first imported.
+    if name == "get_spark":
+        from data_framework_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -9,6 +9,21 @@ partitions sized to the local core count rather than the 200 default.
 On a real cluster the same factory applies; only `master` and the
 shuffle-partition count change (cores × executors × 2-3 is the usual
 starting point — AQE coalescing trims the excess at runtime).
+
+Python workers start from the engine's worker daemon
+(`spark.python.daemon.module = data_framework_spark.worker_daemon`).
+Spark puts `$SPARK_HOME/python/lib/pyspark.zip` first on every
+worker's `sys.path`; that zip has no bytecode, so each daemon start
+compiles pyspark from source, which is most of a new session's
+worker-pool start. The daemon moves the zip behind an installed
+pyspark of the same version, when there is one, and then runs Spark's
+own daemon, so workers run the driver's byte-compiled pyspark
+(otherwise the path is left as Spark set it). This relies on workers
+being able to import `data_framework_spark` when the daemon starts,
+from the working directory or `PYTHONPATH`; the engine's kernels,
+which workers import by reference, already require that. Sessions the
+engine did not build (`ensure_session_conventions` on a vanilla
+session) keep Spark's own daemon.
 """
 
 from __future__ import annotations
@@ -106,6 +121,9 @@ def get_spark(app_name: str = "data_framework_spark") -> SparkSession:
         # table loader (sources/tables.py) — DuckDB truncates ns→µs the
         # same way.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # workers run the installed, byte-compiled pyspark when it
+        # matches Spark's zipped copy (see the module docstring)
+        .config("spark.python.daemon.module", "data_framework_spark.worker_daemon")
     )
     # apply the full runtime convention set at build time too, so a
     # get_spark() session satisfies every convention even on code

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from data_framework_spark.similarity.ann import cosine, dot, l2_norm
-from data_framework_spark.sources.tables import load_table
+from data_framework_spark.sources.tables import collect_bounded, load_table
 
 # SCALING POLICY (r10 measurement, SURVEY §8): SemDeDup's
 # within-cluster pairwise step is quadratic in CLUSTER SIZE by design,
@@ -855,7 +855,7 @@ def assign_clusters_auto(
     if k is None:
         k = cents.count()
     if k <= HIER_ROUTE_MAX_K:
-        cents_rows = cents.orderBy("cent_id").collect()
+        cents_rows = collect_bounded(cents, HIER_ROUTE_MAX_K, "cent_id")
         return _assign_clusters_hier(emb, cents_rows)
     return _assign_clusters_sharded(emb, cents)
 

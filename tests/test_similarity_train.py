@@ -254,24 +254,8 @@ def test_lloyd_training_partition_invariant(spark, sf_dir):
 # --- one Spark job per Lloyd round -------------------------------------------
 
 
-def _jobs_started(spark, fn) -> int:
-    """Spark jobs `fn()` starts, counted through a job group and the
-    status tracker once the listener bus has delivered every event."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"lloyd-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job-count pin")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("trainer", ["coarse", "books"])
-def test_lloyd_round_is_one_job(spark, sf_dir, trainer):
+def test_lloyd_round_is_one_job(spark, sf_dir, jobs_started, trainer):
     """One round of either trainer starts at most two jobs: the widened
     scan's map stage and the one pass that folds every task's batches
     into a single partial, collected and summed on the driver. A
@@ -290,7 +274,7 @@ def test_lloyd_round_is_one_job(spark, sf_dir, trainer):
         run = partial(lloyd_coarse_centroids, emb, _centroid_rows(emb, 16), 1)
     else:
         run = partial(lloyd_subspace_books, emb, "embedding", _codebooks(emb), 1)
-    assert 1 <= _jobs_started(spark, run) <= 2
+    assert 1 <= jobs_started(spark, run) <= 2
 
 
 # --- the fused distance fold -------------------------------------------------
