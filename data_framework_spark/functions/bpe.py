@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_framework_spark import artifacts
 from data_framework_spark.functions.text import tokens
 from data_framework_spark.sources.tables import load_table
 
@@ -112,15 +113,14 @@ def _apply_merges(
     return words
 
 
-# Learned-merge session cache: the merge table IS the tokenizer —
-# trained once per (session, corpus content, train split) and applied
-# by every downstream query, the same build-once contract as the
-# persisted BM25/IVF indexes (sources.formats.session_index_dir).
-# Re-learning the tokenizer inside every applying query is the 100 TB
-# anti-pattern this cache removes; keying on the source fingerprint
-# makes a mid-session rewrite of sf_dir retrain instead of serving a
-# stale merge list. The value is driver-tiny (n_merges 4-tuples).
-_MERGE_CACHE: dict[tuple, list[tuple[int, str, str, int]]] = {}
+# The learned merge table IS the tokenizer: a session artifact trained
+# once per (corpus content, train split) and applied by every
+# downstream query, the same build-once contract as the persisted
+# BM25/IVF indexes (sources.formats.persistent_index_dir). Re-learning
+# the tokenizer inside every applying query is the 100 TB anti-pattern
+# this removes; building it from sf_dir makes a mid-session rewrite of
+# sf_dir retrain instead of serving a stale merge list. The value is
+# driver-tiny (n_merges 4-tuples).
 
 
 def learned_merges(
@@ -135,17 +135,13 @@ def learned_merges(
     `sf_dir`. `split` names the training slice the caller's `words`
     frame represents (e.g. "all", "train25") — it is part of the cache
     key, so merge lists learned from different slices never mix."""
-    from data_framework_spark.sources.tables import _sf_fingerprint
-
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, _sf_fingerprint(sf_dir), split, n_merges)
-    for k in [k for k in _MERGE_CACHE if k[0] != app]:
-        del _MERGE_CACHE[k]
-    got = _MERGE_CACHE.get(key)
-    if got is None:
-        got = learn_bpe_merges(docs, n_merges=n_merges, words=words)
-        _MERGE_CACHE[key] = got
-    return got
+    return artifacts.get_or_build(
+        spark,
+        "bpe_merges",
+        (sf_dir, split, n_merges),
+        lambda: learn_bpe_merges(docs, n_merges=n_merges, words=words),
+        src=sf_dir,
+    )
 
 
 def learn_bpe_merges(
@@ -724,11 +720,6 @@ FROM tot CROSS JOIN voc
 Q_BPE_TOKENIZE_SQL = _bpe_tokenize_sql()
 
 
-# One live persisted vocab frame per session backing the (lazy,
-# corpus-sized) detok-roundtrip result: app -> frame.
-_DETOK_SCRATCH: dict[str, DataFrame] = {}
-
-
 def q_bpe_detok_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DECODE integrity audit a tokenizer rollout ships with:
     apply the learned merges, then INVERT the tokenization
@@ -750,15 +741,16 @@ def q_bpe_detok_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     one linear pass, the same shape as every per-doc text pass in
     functions/corpus.py."""
     docs = load_table(spark, sf_dir, "documents")
-    app = spark.sparkContext.applicationId
-    base = _wrapped_words(docs).persist()
-    try:
-        base.count()
-        merges = learned_merges(spark, sf_dir, docs, words=base)
-        words = _apply_merges(base, merges)
-    except BaseException:
-        base.unpersist()
-        raise
+    # UNLIKE the 1-row tokenize/heldout outputs, this result is
+    # corpus-sized (one row per document) — materializing it through
+    # the driver to release the vocab frame would be a driver OOM at
+    # the module's 100 TB posture. Instead the (vocab-sized) base
+    # stays persisted as the one held frame of its kind; the next
+    # invocation releases it.
+    base = artifacts.hold(spark, "detok_vocab", _wrapped_words(docs))
+    base.count()
+    merges = learned_merges(spark, sf_dir, docs, words=base)
+    words = _apply_merges(base, merges)
     syms = F.split(
         F.expr("substring(w, 2, length(w) - 2)"), f"{_CS}{_OS}"
     )
@@ -782,18 +774,6 @@ def q_bpe_detok_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-    # UNLIKE the 1-row tokenize/heldout outputs, this result is
-    # corpus-sized (one row per document) — materializing it through
-    # the driver to release the vocab frame would be a driver OOM at
-    # the module's 100 TB posture. Instead the (vocab-sized) base
-    # stays persisted and tracked, one live frame per session, the
-    # previous invocation's released here (ann._TAGGED_CACHE pattern).
-    for k in [k for k in _DETOK_SCRATCH if k != app]:
-        del _DETOK_SCRATCH[k]
-    prev = _DETOK_SCRATCH.pop(app, None)
-    if prev is not None:
-        prev.unpersist()
-    _DETOK_SCRATCH[app] = base
     return out
 
 

@@ -21,6 +21,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from data_framework_spark import artifacts
 from data_framework_spark.functions.sampling import (
     HASH_FRACTION_SQL_TMPL,
     hash_fraction,
@@ -766,53 +767,29 @@ def _funnel_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session-scoped registry of the persisted funnel projection, keyed by
-# (applicationId, sf_dir). Spark's SQL CacheManager holds cached plans
-# until an EXPLICIT unpersist (the ContextCleaner only reclaims GC'd
-# raw RDDs — round-5 advisory), so the persisted frame is tracked here
-# and releasable via release_funnel_scratch(); repeated invocations
-# reuse the one entry instead of re-materializing. NOTE the cached row
-# is NOT slim: it carries the token array plus the md5 shingle array
-# (several × the text size) — hence MEMORY_AND_DISK, so an oversized
-# corpus spills instead of evicting other cached data; at 100 TB use
-# the materialized-feature-table variant (q_curation_funnel_mat).
-_FUNNEL_SCRATCH: dict[tuple[str, str, tuple], DataFrame] = {}
-
-
+# The persisted funnel projection is a session artifact built from
+# sf_dir: repeated invocations reuse the one entry instead of
+# re-materializing, and a mid-session rewrite of the data under sf_dir
+# releases it (a MEMORY_AND_DISK frame over rewritten files can even
+# serve an internally inconsistent old/new partition mix after partial
+# eviction). Spark's SQL CacheManager holds cached plans until an
+# EXPLICIT unpersist (the ContextCleaner only reclaims GC'd raw RDDs —
+# round-5 advisory); long-lived sessions release the projection with
+# `artifacts.evict(spark, "funnel_base")`. NOTE the cached row is NOT
+# slim: it carries the token array plus the md5 shingle array (several
+# × the text size) — hence MEMORY_AND_DISK, so an oversized corpus
+# spills instead of evicting other cached data; at 100 TB use the
+# materialized-feature-table variant (q_curation_funnel_mat).
 def _funnel_base_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_framework_spark.sources.tables import _sf_fingerprint
-
-    app = spark.sparkContext.applicationId
-    # keyed on the same source fingerprint as session_index_dir: a
-    # mid-session rewrite of the data under sf_dir must evict the
-    # cached projection (a MEMORY_AND_DISK frame over rewritten files
-    # can even serve an internally inconsistent old/new partition mix
-    # after partial eviction). Stale same-session entries are
-    # unpersisted; other sessions' entries are just dropped.
-    key = (app, sf_dir, _sf_fingerprint(sf_dir))
-    for k in [
-        k
-        for k in _FUNNEL_SCRATCH
-        if k[0] != app or (k[:2] == key[:2] and k != key)
-    ]:
-        stale = _FUNNEL_SCRATCH.pop(k)
-        if k[0] == app:
-            stale.unpersist()
-    df = _FUNNEL_SCRATCH.get(key)
-    if df is None:
-        df = _funnel_base(spark, sf_dir).persist(
+    return artifacts.get_or_build(
+        spark,
+        "funnel_base",
+        sf_dir,
+        lambda: _funnel_base(spark, sf_dir).persist(
             StorageLevel.MEMORY_AND_DISK
-        )
-        _FUNNEL_SCRATCH[key] = df
-    return df
-
-
-def release_funnel_scratch() -> None:
-    """Unpersist and drop every tracked funnel projection (long-lived
-    sessions call this when done with funnel queries)."""
-    for df in _FUNNEL_SCRATCH.values():
-        df.unpersist()
-    _FUNNEL_SCRATCH.clear()
+        ),
+        src=sf_dir,
+    )
 
 
 def _funnel_from_base(spark: SparkSession, base: DataFrame) -> DataFrame:

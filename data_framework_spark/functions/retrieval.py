@@ -231,7 +231,6 @@ def _bm25_index_dir(spark: SparkSession, sf_dir: str) -> str:
     )
 
     return persistent_index_dir(
-        spark,
         sf_dir,
         BM25_INDEX_PREFIX,
         lambda p: bm25_index_write(load_table(spark, sf_dir, "documents"), p),
@@ -270,10 +269,10 @@ def q_bm25_adhoc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     not 3) query against the SAME persisted postings index — the
     round-8 verdict's ask: the index exists precisely so ad-hoc term
     sets don't rescan the corpus, and this entry proves the runtime
-    path: within a session the index built by q_bm25_postings_topk
-    is REUSED (session_index_dir keys on (app, sf_dir, prefix,
-    fingerprint) — no rebuild, test-pinned in test_round9), only the
-    bounded term-list inputs change. The 4-term score exercises the
+    path: the index built by q_bm25_postings_topk is REUSED
+    (persistent_index_dir resolves the same (sf_dir, prefix,
+    fingerprint, params) directory — no rebuild, test-pinned in
+    test_round9), only the bounded term-list inputs change. The 4-term score exercises the
     generic tix-sorted fold beyond the fixed 3-term shape."""
     path = _bm25_index_dir(spark, sf_dir)
     return bm25_topk_from_index(spark, path, BM25_ADHOC_TERMS, BM25_TOPK)

@@ -65,7 +65,7 @@ def bucketed_tables(
         built.append(path)
 
     layout = persistent_index_dir(
-        spark, sf_dir, _PREFIX, build,
+        sf_dir, _PREFIX, build,
         params={"fmt": 1, "n_buckets": n_buckets},
     )
     digest = os.path.basename(layout)[len(_PREFIX):]

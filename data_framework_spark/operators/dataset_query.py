@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_framework_spark import artifacts
 from data_framework_spark.dataset import SparkDataset
 from data_framework_spark.sources.tables import load_table
 from data_framework_spark.variable import SparkVariable
@@ -54,25 +55,13 @@ def _events_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# One live cached grid per session backing the (lazy) returned frame:
-# app -> frame. The previous invocation's grid is unpersisted on the
-# next call instead of accumulating for the session's lifetime
-# (round-9 review; same pattern as bpe._DETOK_SCRATCH).
-_GRID_SCRATCH: dict[str, DataFrame] = {}
-
-
 def q_dataset_api_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache: bounds() + the variable's timeseries/mesh properties each
     # launch a job over the grid; without this every one re-runs the
-    # events groupBy (bounded: one row per (hour, user) cell)
-    grid = _events_grid(spark, sf_dir).cache()
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _GRID_SCRATCH if k != app]:
-        del _GRID_SCRATCH[k]
-    prev = _GRID_SCRATCH.pop(app, None)
-    if prev is not None:
-        prev.unpersist()
-    _GRID_SCRATCH[app] = grid
+    # events groupBy (bounded: one row per (hour, user) cell). The
+    # grid backs the lazy returned frame, so it stays held until the
+    # next invocation releases it.
+    grid = artifacts.hold(spark, "dataset_grid", _events_grid(spark, sf_dir))
     base = ["t", "i0", "c0"]
     ds = SparkDataset()
     ds.add_var(

@@ -628,7 +628,6 @@ def island_family_upstream(
         )
 
     fam_dir = persistent_index_dir(
-        spark,
         sf_dir,
         "island_family_",
         _materialize,

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from data_framework_spark import artifacts
 from data_framework_spark.sources.tables import load_table
 
 
@@ -296,56 +297,39 @@ def blocked_cosine_pairs(
 
 # --- driver-checkable query instantiations ---------------------------------
 
-# Session-scoped cache of the three ANN route RESULTS (≤ 100-200 rows
-# each). The recall contract composes the same routes the driver also
-# runs as standalone queries; persisting the tiny results lets the
-# contract read three InMemoryTableScans instead of recompiling and
-# re-executing all three route plans inline in one mega-query
-# (round-4 verdict: contract cold 9.25 s vs 4.3 s for the three routes
-# run separately — the overhead was whole-plan codegen, not data).
-# Keyed by (applicationId, sf_dir, source-fingerprint, route) so a new
-# session, a different scale factor, OR a mid-session rewrite of the
-# same sf_dir (the fingerprint covers file paths/sizes/mtimes, same as
-# session_index_dir and the funnel scratch) never sees a stale entry
-# (round-10 advisory).
-_ROUTE_CACHE: dict[tuple[str, str, tuple, str], DataFrame] = {}
-
-# One live persisted band-signature frame per session for
-# lsh_bucketed_pairs (see the persist comment there): app -> frame.
-_TAGGED_CACHE: dict[str, DataFrame] = {}
+# The three ANN route RESULTS (≤ 100-200 rows each) are persisted
+# session artifacts. The recall contract composes the same routes the
+# driver also runs as standalone queries; persisting the tiny results
+# lets the contract read three InMemoryTableScans instead of
+# recompiling and re-executing all three route plans inline in one
+# mega-query (round-4 verdict: contract cold 9.25 s vs 4.3 s for the
+# three routes run separately — the overhead was whole-plan codegen,
+# not data). Built from sf_dir, so a mid-session rewrite of it
+# rebuilds instead of serving a stale result (round-10 advisory).
 
 
-def cached_route(
-    spark: SparkSession, sf_dir: str, route: str, build
-) -> DataFrame:
+def _route_key(sf_dir: str, route: str) -> tuple:
     from data_framework_spark.sources.formats import _index_cache_root
-    from data_framework_spark.sources.tables import _sf_fingerprint
 
-    app = spark.sparkContext.applicationId
-    fp = _sf_fingerprint(sf_dir)
     # the persistent-index cache root is part of the key: some route
     # builds (ivfpq/refine) read from the on-disk index under that
     # root, so a frame cached under one root must not be served after
     # the root moves (constant in production; tests redirect it per
     # fixture via SPARK_GRAFT_INDEX_CACHE — r16, found by the route
     # self-population change)
-    root = _index_cache_root()
-    # prune entries from previous sessions (their DataFrames are
-    # unusable against the live session and would pin memory forever
-    # in a long-lived process) AND superseded fingerprints of this
-    # sf_dir (a mid-session rewrite must not serve stale results —
-    # unpersist so the old blocks free immediately)
-    for k in list(_ROUTE_CACHE):
-        if k[0] != app or (k[1] == sf_dir and k[2] != fp):
-            stale = _ROUTE_CACHE.pop(k)
-            if k[0] == app:
-                stale.unpersist()
-    key = (app, sf_dir, fp, route, root)
-    df = _ROUTE_CACHE.get(key)
-    if df is None:
-        df = build().persist()
-        _ROUTE_CACHE[key] = df
-    return df
+    return (sf_dir, route, _index_cache_root())
+
+
+def cached_route(
+    spark: SparkSession, sf_dir: str, route: str, build
+) -> DataFrame:
+    return artifacts.get_or_build(
+        spark,
+        "route",
+        _route_key(sf_dir, route),
+        lambda: build().persist(),
+        src=sf_dir,
+    )
 
 
 def evict_route(spark: SparkSession, sf_dir: str, route: str) -> None:
@@ -355,14 +339,7 @@ def evict_route(spark: SparkSession, sf_dir: str, route: str) -> None:
     a dict lookup (round-5 verdict finding 2), while entries built by
     the OTHER route queries stay for the recall contracts' internal
     reuse."""
-    from data_framework_spark.sources.formats import _index_cache_root
-    from data_framework_spark.sources.tables import _sf_fingerprint
-
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, _sf_fingerprint(sf_dir), route, _index_cache_root())
-    df = _ROUTE_CACHE.pop(key, None)
-    if df is not None:
-        df.unpersist()
+    artifacts.evict(spark, "route", key=_route_key(sf_dir, route))
 
 
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -744,14 +721,7 @@ def lsh_bucketed_pairs(
     # N = Σn / n_bands from the same aggregate. One persisted frame
     # per session is kept live (the previous invocation's is
     # unpersisted) so repeated bench invocations don't pin memory.
-    app = corpus.sparkSession.sparkContext.applicationId
-    for k in [k for k in _TAGGED_CACHE if k != app]:
-        _TAGGED_CACHE.pop(k)
-    prev = _TAGGED_CACHE.pop(app, None)
-    if prev is not None:
-        prev.unpersist()
-    tagged = tagged.persist()
-    _TAGGED_CACHE[app] = tagged
+    tagged = artifacts.hold(corpus.sparkSession, "lsh_tagged", tagged)
 
     sizes = tagged.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("n"))
     stats = sizes.agg(

@@ -282,7 +282,6 @@ def q_ivf_persist_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     path = persistent_index_dir(
-        spark,
         sf_dir,
         IVF_INDEX_PREFIX,
         lambda p: ivf_index_write(emb, p, "vec_id", "embedding", ncells=16),

@@ -66,6 +66,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from data_framework_spark import artifacts
 from data_framework_spark.similarity.ivf import (
     MAX_CELLS,
     _centroid_rows,
@@ -202,7 +203,7 @@ def ivfpq_index_write(
     spark = emb.sparkSession
     # a rebuild at a reused path must not be answered from the
     # components this session loaded from the previous build
-    _INDEX_COMPONENTS.pop((spark.sparkContext.applicationId, path), None)
+    artifacts.evict(spark, "ivfpq_components", key=path)
     cents = lloyd_coarse_centroids(
         emb, _centroid_rows(emb, ncells), train.COARSE_ROUNDS
     )
@@ -251,30 +252,28 @@ def ivfpq_index_write(
         res.unpersist()
 
 
-# (applicationId, index path) -> (cents, books). Registry-routed
+# The bounded driver-side components (ncells centroid rows + PQ_M·PQ_K
+# codebook rows) are a session artifact per index path, the same
+# load-once posture production index serving has. Registry-routed
 # paths are CONTENT-ADDRESSED (persistent_index_dir folds the data
 # fingerprint, build knobs and builder-source hash into the directory
 # name), so any change moves the path; a direct ivfpq_index_write to
-# a reused path drops the path's entry itself. This caches the
-# bounded driver-side components (ncells centroid rows + PQ_M·PQ_K
-# codebook rows) once per session, the same
-# load-once posture production index serving has; the per-query ADC
+# a reused path evicts the path's entry itself. The per-query ADC
 # work (query collect, LUT build, codes scan, scoring plan) is NOT
 # cached and re-executes every call (r18, VERDICT item 10 — the
 # repeated 2-collect reload was ~0.2 s of driver job latency on every
 # ivfpq-family query).
-_INDEX_COMPONENTS: dict[tuple[str, str], tuple] = {}
 
 
 def _load_index_driver_side(spark: SparkSession, path: str):
     """(cents, books): the two bounded index components every search
     needs driver-side — session-cached per content-addressed path."""
-    key = (spark.sparkContext.applicationId, path)
-    hit = _INDEX_COMPONENTS.get(key)
-    if hit is not None:
-        return hit
-    for k in [k for k in _INDEX_COMPONENTS if k[0] != key[0]]:
-        del _INDEX_COMPONENTS[k]  # dead sessions' entries
+    return artifacts.get_or_build(
+        spark, "ivfpq_components", path, lambda: _read_components(spark, path)
+    )
+
+
+def _read_components(spark: SparkSession, path: str):
     cent_rows = collect_bounded(
         read_parquet(spark, f"{path}/centroids"), MAX_CELLS, "cid"
     )
@@ -300,7 +299,6 @@ def _load_index_driver_side(spark: SparkSession, path: str):
     books = np.zeros((PQ_M, kk, _SUB), dtype=np.float64)
     for r in book_rows:
         books[r["subspace"], r["code"]] = [float(x) for x in r["vec"]]
-    _INDEX_COMPONENTS[key] = (cents, books)
     return cents, books
 
 
@@ -454,7 +452,6 @@ def session_ivfpq_index(
 
     emb = load_table(spark, sf_dir, "embeddings")
     return persistent_index_dir(
-        spark,
         sf_dir,
         IVFPQ_INDEX_PREFIX,
         lambda p: ivfpq_index_write(emb, p, ncells=ncells),

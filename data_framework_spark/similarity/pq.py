@@ -46,6 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_framework_spark import artifacts
 from data_framework_spark.sources.tables import collect_bounded, load_table
 
 PQ_M = 8  # subspaces
@@ -93,13 +94,13 @@ def _codebooks(emb: DataFrame) -> np.ndarray:
     )
 
 
-# Trained-codebook session cache: one training run per (session,
-# corpus content) shared by q_pq_codes and q_pq_adc_topk — the BPE
-# _MERGE_CACHE contract (the tokenizer/codebook IS a build artifact;
-# retraining it inside every consuming query is the anti-pattern the
-# cache removes). Keyed on the source fingerprint so a mid-session
-# rewrite retrains. The value is a driver-tiny (8, 256, 8) ndarray.
-_BOOKS_CACHE: dict[tuple, np.ndarray] = {}
+# Trained codebooks are a session artifact: one training run per
+# (corpus file, plan) shared by q_pq_codes and q_pq_adc_topk — the
+# BPE learned-merge contract (the tokenizer/codebook IS a build
+# artifact; retraining it inside every consuming query is the
+# anti-pattern the store removes). Built from the corpus file, so a
+# mid-session rewrite retrains. The value is a driver-tiny (8, 256, 8)
+# ndarray.
 
 
 def trained_codebooks(emb: DataFrame) -> np.ndarray:
@@ -128,20 +129,21 @@ def trained_codebooks(emb: DataFrame) -> np.ndarray:
         stamp = (st.st_mtime_ns, st.st_size)
     except OSError:
         return lloyd_subspace_books(emb, "embedding", _codebooks(emb))
-    app = spark.sparkContext.applicationId
-    key = (app, local, stamp, emb.semanticHash())
-    for k in [k for k in _BOOKS_CACHE if k[0] != app]:
-        del _BOOKS_CACHE[k]
-    got = _BOOKS_CACHE.get(key)
-    plan_fp = _stable_plan_fp(emb) if got is None else None
-    if got is None and plan_fp is not None:
-        got = _load_persisted_books(local, stamp, plan_fp)
-    if got is None:
-        got = lloyd_subspace_books(emb, "embedding", _codebooks(emb))
+
+    def build() -> np.ndarray:
+        plan_fp = _stable_plan_fp(emb)
+        got = None
         if plan_fp is not None:
-            _persist_books(local, stamp, plan_fp, got)
-    _BOOKS_CACHE[key] = got
-    return got
+            got = _load_persisted_books(local, stamp, plan_fp)
+        if got is None:
+            got = lloyd_subspace_books(emb, "embedding", _codebooks(emb))
+            if plan_fp is not None:
+                _persist_books(local, stamp, plan_fp, got)
+        return got
+
+    return artifacts.get_or_build(
+        spark, "pq_books", (local, emb.semanticHash()), build, src=local
+    )
 
 
 def _stable_plan_fp(df: DataFrame) -> str | None:

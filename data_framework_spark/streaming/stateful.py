@@ -40,16 +40,6 @@ from data_framework_spark.sources.tables import load_table
 OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
 STATE_SCHEMA = "n bigint, total double"
 
-# (sf_dir, source-fingerprint, n_chunks) -> chunk directory, so
-# multiple streaming queries over the same bounded replay don't
-# re-split the table. The fingerprint (file paths/sizes/mtimes, the
-# session_index_dir convention) means a mid-session rewrite of sf_dir
-# re-splits instead of replaying stale chunks — the same stale-cache
-# class the round-9/10 advisories closed for the index, funnel,
-# merge, and route caches (round-10 review).
-_CHUNK_CACHE: dict[tuple[str, tuple, int], str] = {}
-
-
 def stateful_user_totals(stream: DataFrame) -> DataFrame:
     """Per-user running (count, total) across micro-batches.
 
@@ -104,8 +94,7 @@ def stateful_user_totals(stream: DataFrame) -> DataFrame:
 
 
 def chunked_events_source(
-    spark: SparkSession, sf_dir: str, out_dir: str | None = None,
-    n_chunks: int = 3,
+    spark: SparkSession, sf_dir: str, n_chunks: int = 3
 ) -> DataFrame:
     """Split the events table into time-ordered chunk files and open
     them as a one-file-per-trigger stream — the bounded stand-in for
@@ -116,57 +105,50 @@ def chunked_events_source(
     materialization of the table — at production scale the chunks
     would simply BE the incoming files). coalesce(1) keeps one file
     per chunk so maxFilesPerTrigger=1 yields exactly n_chunks
-    micro-batches. Chunk sets are memoized per (sf_dir, n_chunks):
-    every streaming query over the same replay reuses one write.
-
-    When `out_dir` is None the chunk directory is an atexit-tracked
-    scratch dir, allocated only on a cache MISS — the previous
-    per-call mkdtemp pattern orphaned one dir (the first holding a
-    full copy of the events table) per query per process
-    (round-9 review; same cleanup hook as sources/formats.py).
+    micro-batches. The chunk set is an index-cache artifact
+    (`formats.persistent_index_dir`): every streaming query over the
+    same replay, in this session or a later one, reuses one write,
+    and a rewrite of sf_dir re-splits instead of replaying stale
+    chunks. The chunks sit in a `chunks/` subdirectory so the
+    file-stream source does not list the artifact's manifest.
     """
+    from data_framework_spark.sources.formats import persistent_index_dir
+
+    ev = load_table(spark, sf_dir, "events")
+    path = persistent_index_dir(
+        sf_dir,
+        "events_chunks_",
+        lambda p: _write_chunks(ev, p, n_chunks),
+        params={"fmt": 1, "n_chunks": n_chunks},
+    )
+    return (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(path, "chunks"))
+    )
+
+
+def _write_chunks(ev: DataFrame, path: str, n_chunks: int) -> None:
     import glob
     import shutil
 
-    from data_framework_spark.sources.tables import _sf_fingerprint
-
-    cache_key = (sf_dir, _sf_fingerprint(sf_dir), n_chunks)
-    cached = _CHUNK_CACHE.get(cache_key)
-    if cached is not None and os.path.isdir(cached):
-        ev = load_table(spark, sf_dir, "events")
-        return (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(cached)
-        )
-
-    if out_dir is None:
-        from data_framework_spark.sources.formats import _scratch_dir
-
-        out_dir = _scratch_dir("events_chunks_")
-    ev = load_table(spark, sf_dir, "events")
-    os.makedirs(out_dir, exist_ok=True)
     # ONE distributed job: range-partition on ts into n_chunks
     # partitions (the range partitioner samples the distribution
     # itself — no separate quantile pass) and write one part file per
     # time-ordered chunk
-    stage = os.path.join(out_dir, "__stage")
+    stage = os.path.join(path, "stage")
     ev.repartitionByRange(n_chunks, F.col("ts")).write.mode(
         "overwrite"
     ).parquet(stage)
     parts = sorted(glob.glob(os.path.join(stage, "part-*.parquet")))
     assert len(parts) == n_chunks, f"expected {n_chunks} parts, got {len(parts)}"
+    chunks = os.path.join(path, "chunks")
+    os.makedirs(chunks)
     for i, part in enumerate(parts):
-        p = os.path.join(out_dir, f"chunk-{i}.parquet")
+        p = os.path.join(chunks, f"chunk-{i}.parquet")
         os.rename(part, p)
         os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
     shutil.rmtree(stage)
-    _CHUNK_CACHE[cache_key] = out_dir
-    return (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(out_dir)
-    )
 
 
 def run_stateful_to_completion(

@@ -183,3 +183,19 @@ def test_dataset_bounds_documented_intent(spark, field):
     b = ds.bounds()
     assert b[1] == [-2.0, 2.0]  # widest, not the intersection
     assert b[2] == [0.0, 5.0]
+
+
+def test_dataset_api_grid_stays_cached_on_repeat(spark, sf_dir):
+    """The grid behind q_dataset_api_events stays cached from the
+    second call on: the held frame of the previous call is released
+    before the new one is persisted, so the plan both share stays in
+    the CacheManager and bounds()/timeseries jobs read it instead of
+    re-running the events groupBy."""
+    from data_framework_spark.operators.dataset_query import (
+        _events_grid,
+        q_dataset_api_events,
+    )
+
+    q_dataset_api_events(spark, sf_dir)
+    q_dataset_api_events(spark, sf_dir)
+    assert _events_grid(spark, sf_dir).storageLevel.useMemory

@@ -78,7 +78,7 @@ def test_bucketed_layout_persists_across_sessions(
     spark, tmp_path, monkeypatch, jobs_started
 ):
     """The layout is written once into the index cache. A restarted
-    session (no catalog tables, no session index registry) registers
+    session (no catalog tables) registers
     the persisted files without a write job, with the same no-Exchange
     plan and the same rows; a changed source stamp rebuilds it under
     new names."""
@@ -105,7 +105,6 @@ def test_bucketed_layout_persists_across_sessions(
 
     for name in names:
         spark.sql(f"DROP TABLE {name}")
-    monkeypatch.setattr(formats, "_INDEX_DIRS", {})
     got = []
     assert jobs_started(spark, lambda: got.append(bucketed_tables(spark, sf))) == 0
     assert got == [names]

@@ -2,8 +2,8 @@
 
 The five round-9 ADVICE closures:
 - tzset opt-out (`SPARK_GRAFT_NO_TZSET`)
-- `_ROUTE_CACHE` keyed on the source fingerprint (mid-session rewrite
-  cannot serve a stale route result)
+- cached route results built from the source directory (a
+  mid-session rewrite cannot serve a stale route result)
 - `widen_scan` allowlist matches node names EXACTLY, not by prefix
 - `top_token_ratio` yields NULL (not NaN) on an empty token array
 - the IVFPQ nprobe curve raises a diagnostic ValueError on a corrupt
@@ -66,10 +66,7 @@ def test_pin_process_utc_sets_utc_by_default(monkeypatch):
 
 
 def test_route_cache_evicts_on_source_rewrite(spark, sf_dir, tmp_path):
-    from data_framework_spark.similarity.ann import (
-        _ROUTE_CACHE,
-        cached_route,
-    )
+    from data_framework_spark.similarity.ann import cached_route, evict_route
     from data_framework_spark.sources.formats import _sf_fingerprint
 
     work = tmp_path / "sf"
@@ -101,14 +98,11 @@ def test_route_cache_evicts_on_source_rewrite(spark, sf_dir, tmp_path):
     assert builds == [1, 1]  # rebuilt, not served stale
     assert df2 is not df1
     assert not df1.storageLevel.useMemory  # stale entry unpersisted
-    app = spark.sparkContext.applicationId
-    from data_framework_spark.sources.formats import _index_cache_root
-
-    root = _index_cache_root()
-    assert (app, wdir, fp1, "t10_route", root) not in _ROUTE_CACHE
-    assert (app, wdir, fp2, "t10_route", root) in _ROUTE_CACHE
+    assert df2.storageLevel.useMemory
+    assert cached_route(spark, wdir, "t10_route", build) is df2
     # cleanup so later tests see no leftover persisted frames
-    _ROUTE_CACHE.pop((app, wdir, fp2, "t10_route", root)).unpersist()
+    evict_route(spark, wdir, "t10_route")
+    assert not df2.storageLevel.useMemory
 
 
 # --- widen_scan exact node-name matching ------------------------------------

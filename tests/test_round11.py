@@ -91,10 +91,7 @@ def test_trained_codebooks_cache_isolates_derived_frames(spark, tmp_path):
 
     import numpy as np
 
-    from data_framework_spark.similarity.pq import (
-        _BOOKS_CACHE,
-        trained_codebooks,
-    )
+    from data_framework_spark.similarity.pq import trained_codebooks
     from data_framework_spark.sources.tables import load_table
 
     work = tmp_path / "sf"

@@ -19,37 +19,19 @@ from tests.conftest import SF_SMALL
 
 @pytest.fixture()
 def cache_root(tmp_path, monkeypatch):
-    """Redirect the persistent index cache to a throwaway root and
-    drop any session-registry entries for the test prefixes, so each
-    test observes build-vs-reload from a clean slate."""
+    """Redirect the persistent index cache to a throwaway root, so
+    each test observes build-vs-reload from a clean slate."""
     from data_framework_spark.sources import formats
 
     root = tmp_path / "index_cache"
     monkeypatch.setenv(formats.INDEX_CACHE_ENV, str(root))
-    _forget_session_entries("r14unit_")
-    from data_framework_spark.similarity.ivfpq import IVFPQ_INDEX_PREFIX
-
-    _forget_session_entries(IVFPQ_INDEX_PREFIX)
     yield str(root)
-    _forget_session_entries("r14unit_")
-    _forget_session_entries(IVFPQ_INDEX_PREFIX)
 
 
-def _forget_session_entries(prefix: str) -> None:
-    """Simulate a fresh session's empty index registry for `prefix`
-    (the applicationId can't change within a test session, but the
-    reload-vs-retrain decision lives entirely in the on-disk cache —
-    dropping the in-memory entry forces the persistent-path lookup a
-    fresh session would perform)."""
-    from data_framework_spark.sources.formats import _INDEX_DIRS
-
-    for k in [k for k in _INDEX_DIRS if k[2] == prefix]:
-        del _INDEX_DIRS[k]
-
-
-def test_persistent_index_builds_once_across_sessions(spark, cache_root):
-    """Second 'session' (cleared registry, same data, same params)
-    must RELOAD: zero additional build calls, same directory."""
+def test_persistent_index_builds_once_across_sessions(cache_root):
+    """A second call (as a fresh session makes it: same data, same
+    params) must RELOAD: zero additional build calls, same
+    directory."""
     from data_framework_spark.sources.formats import persistent_index_dir
 
     builds = []
@@ -60,20 +42,19 @@ def test_persistent_index_builds_once_across_sessions(spark, cache_root):
             fh.write("x")
 
     p1 = persistent_index_dir(
-        spark, SF_SMALL, "r14unit_", build, params={"fmt": 1, "k": 4}
+        SF_SMALL, "r14unit_", build, params={"fmt": 1, "k": 4}
     )
     assert builds == [f"{p1}.build-{os.getpid()}"]
     assert os.path.isfile(os.path.join(p1, "payload.txt"))
     assert os.path.isfile(os.path.join(p1, "manifest.json"))
 
-    _forget_session_entries("r14unit_")
     p2 = persistent_index_dir(
-        spark, SF_SMALL, "r14unit_", build, params={"fmt": 1, "k": 4}
+        SF_SMALL, "r14unit_", build, params={"fmt": 1, "k": 4}
     )
     assert p2 == p1 and len(builds) == 1  # reload, not retrain
 
 
-def test_persistent_index_param_change_diverges_digest(spark, cache_root):
+def test_persistent_index_param_change_diverges_digest(cache_root):
     """A build-knob change must be a cache MISS (the safety property:
     an ncells adoption or Lloyd-round change can never be served a
     stale index), and the superseded same-source directory is
@@ -82,12 +63,11 @@ def test_persistent_index_param_change_diverges_digest(spark, cache_root):
 
     builds = []
     p1 = persistent_index_dir(
-        spark, SF_SMALL, "r14unit_", lambda p: builds.append(p),
+        SF_SMALL, "r14unit_", lambda p: builds.append(p),
         params={"fmt": 1, "ncells": 16},
     )
-    _forget_session_entries("r14unit_")
     p2 = persistent_index_dir(
-        spark, SF_SMALL, "r14unit_", lambda p: builds.append(p),
+        SF_SMALL, "r14unit_", lambda p: builds.append(p),
         params={"fmt": 1, "ncells": 32},
     )
     assert p2 != p1 and len(builds) == 2
@@ -96,11 +76,10 @@ def test_persistent_index_param_change_diverges_digest(spark, cache_root):
         assert json.load(fh)["params"]["ncells"] == 32
 
 
-def test_persistent_index_source_rewrite_rebuilds(spark, cache_root, tmp_path):
+def test_persistent_index_source_rewrite_rebuilds(cache_root, tmp_path):
     """Rewriting a source parquet under the same path must diverge
     the fingerprint → rebuild into a new directory, old one evicted
-    (the session_index_dir round-8 staleness contract, held across
-    sessions)."""
+    (the round-8 staleness contract, held across sessions)."""
     from data_framework_spark.sources.formats import persistent_index_dir
 
     sf = tmp_path / "sf"
@@ -109,33 +88,32 @@ def test_persistent_index_source_rewrite_rebuilds(spark, cache_root, tmp_path):
     f.write_bytes(b"v1-bytes")
     builds = []
     p1 = persistent_index_dir(
-        spark, str(sf), "r14unit_", lambda p: builds.append(p),
+        str(sf), "r14unit_", lambda p: builds.append(p),
         params={"fmt": 1},
     )
     f.write_bytes(b"v2-bytes-longer")
     p2 = persistent_index_dir(
-        spark, str(sf), "r14unit_", lambda p: builds.append(p),
+        str(sf), "r14unit_", lambda p: builds.append(p),
         params={"fmt": 1},
     )
     assert p2 != p1 and len(builds) == 2
     assert not os.path.exists(p1)
 
 
-def test_persistent_index_corrupt_manifest_rebuilds(spark, cache_root):
+def test_persistent_index_corrupt_manifest_rebuilds(cache_root):
     """A directory whose manifest is unreadable is a dead tree: it
     must be evicted and rebuilt, never served."""
     from data_framework_spark.sources.formats import persistent_index_dir
 
     builds = []
     p1 = persistent_index_dir(
-        spark, SF_SMALL, "r14unit_", lambda p: builds.append(p),
+        SF_SMALL, "r14unit_", lambda p: builds.append(p),
         params={"fmt": 1},
     )
     with open(os.path.join(p1, "manifest.json"), "w") as fh:
         fh.write("{not json")
-    _forget_session_entries("r14unit_")
     p2 = persistent_index_dir(
-        spark, SF_SMALL, "r14unit_", lambda p: builds.append(p),
+        SF_SMALL, "r14unit_", lambda p: builds.append(p),
         params={"fmt": 1},
     )
     assert p2 == p1 and len(builds) == 2  # same digest path, rebuilt
@@ -147,14 +125,16 @@ def test_ivfpq_reload_path_matches_build_path(spark, cache_root):
     from a RELOADED persistent index (fresh-session simulation) must
     return exactly the rows the building session returned — the
     hashes-can-never-change property of reload-not-retrain."""
-    from data_framework_spark.similarity.ivfpq import (
-        IVFPQ_INDEX_PREFIX,
-        q_ivfpq_persist_topk,
-    )
+    from data_framework_spark import artifacts
+    from data_framework_spark.similarity.ann import evict_route
+    from data_framework_spark.similarity.ivfpq import q_ivfpq_persist_topk
 
     built = [tuple(r) for r in q_ivfpq_persist_topk(spark, SF_SMALL).collect()]
     assert built
-    _forget_session_entries(IVFPQ_INDEX_PREFIX)
+    # what a fresh session would not have: the cached route result and
+    # the driver-side index components
+    evict_route(spark, SF_SMALL, "ivfpq_topk")
+    artifacts.evict(spark, "ivfpq_components")
     reloaded = [
         tuple(r) for r in q_ivfpq_persist_topk(spark, SF_SMALL).collect()
     ]
@@ -170,9 +150,8 @@ def test_ivfpq_stale_cache_unreachable_after_fmt_bump(spark, cache_root, monkeyp
     from data_framework_spark.sources.formats import get_index_dir
 
     ivfpq.q_ivfpq_persist_topk(spark, SF_SMALL).collect()
-    p1 = get_index_dir(spark, SF_SMALL, ivfpq.IVFPQ_INDEX_PREFIX)
+    p1 = get_index_dir(SF_SMALL, ivfpq.IVFPQ_INDEX_PREFIX)
     assert p1 is not None
-    _forget_session_entries(ivfpq.IVFPQ_INDEX_PREFIX)
     monkeypatch.setattr(ivfpq, "IVFPQ_INDEX_FMT", ivfpq.IVFPQ_INDEX_FMT + 1)
     p2 = ivfpq.session_ivfpq_index(spark, SF_SMALL)
     assert p2 != p1
@@ -446,13 +425,14 @@ def test_pq_books_persist_and_reload_bitwise(spark, cache_root):
     held across sessions by the stripped-plan fingerprint)."""
     import numpy as np
 
+    from data_framework_spark import artifacts
     from data_framework_spark.similarity import pq
     from data_framework_spark.sources.tables import load_table
 
-    pq._BOOKS_CACHE.clear()
+    artifacts.evict(spark, "pq_books")
     emb = load_table(spark, SF_SMALL, "embeddings")
     b1 = pq.trained_codebooks(emb)
-    pq._BOOKS_CACHE.clear()
+    artifacts.evict(spark, "pq_books")
     import time
 
     t0 = time.perf_counter()
@@ -466,10 +446,11 @@ def test_pq_books_persist_and_reload_bitwise(spark, cache_root):
 
 
 def test_pq_books_fmt_bump_diverges(spark, cache_root, monkeypatch):
+    from data_framework_spark import artifacts
     from data_framework_spark.similarity import pq
     from data_framework_spark.sources.tables import load_table
 
-    pq._BOOKS_CACHE.clear()
+    artifacts.evict(spark, "pq_books")
     emb = load_table(spark, SF_SMALL, "embeddings")
     pq.trained_codebooks(emb)
     import glob
@@ -477,7 +458,7 @@ def test_pq_books_fmt_bump_diverges(spark, cache_root, monkeypatch):
 
     files = glob.glob(os.path.join(cache_root, "pq_books2_*.npy"))
     assert len(files) == 1
-    pq._BOOKS_CACHE.clear()
+    artifacts.evict(spark, "pq_books")
     monkeypatch.setattr(pq, "PQ_BOOKS_FMT", pq.PQ_BOOKS_FMT + 1)
     pq.trained_codebooks(emb)
     files2 = glob.glob(os.path.join(cache_root, "pq_books2_*.npy"))
@@ -532,27 +513,25 @@ def test_sharded_salting_randomized_sweep(spark):
             assert got == flat and len(got) == n, (seed, s)
 
 
-def test_persistent_index_same_session_param_change_not_served(spark, cache_root):
+def test_persistent_index_same_session_param_change_not_served(cache_root):
     """Two same-prefix calls with DIFFERENT params inside one session:
-    the second must never be served the first's directory (the session
-    registry keys on (app, sf_dir, prefix, fingerprint) only — the
-    fast path must re-validate the manifest digest)."""
+    the second must never be served the first's directory (the hit
+    path validates the manifest digest, which covers the params)."""
     from data_framework_spark.sources.formats import persistent_index_dir
 
     builds = []
     p1 = persistent_index_dir(
-        spark, SF_SMALL, "r14unit_", lambda p: builds.append(p),
+        SF_SMALL, "r14unit_", lambda p: builds.append(p),
         params={"fmt": 1, "ncells": 16},
     )
-    # NO session-registry forget — same session, different params
     p2 = persistent_index_dir(
-        spark, SF_SMALL, "r14unit_", lambda p: builds.append(p),
+        SF_SMALL, "r14unit_", lambda p: builds.append(p),
         params={"fmt": 1, "ncells": 64},
     )
     assert p2 != p1 and len(builds) == 2
 
 
-def test_persistent_index_failed_build_leaves_no_tmp(spark, cache_root):
+def test_persistent_index_failed_build_leaves_no_tmp(cache_root):
     """A build that raises must clean its .build- tmp tree (eviction
     deliberately never touches in-flight dirs, so a leak here would
     be permanent) and leave the cache serviceable for a retry."""
@@ -567,12 +546,12 @@ def test_persistent_index_failed_build_leaves_no_tmp(spark, cache_root):
 
     with _pytest.raises(RuntimeError, match="boom"):
         persistent_index_dir(
-            spark, SF_SMALL, "r14unit_", bad, params={"fmt": 1}
+            SF_SMALL, "r14unit_", bad, params={"fmt": 1}
         )
     assert glob.glob(os.path.join(cache_root, "*.build-*")) == []
     ok = []
     p = persistent_index_dir(
-        spark, SF_SMALL, "r14unit_", lambda q: ok.append(q),
+        SF_SMALL, "r14unit_", lambda q: ok.append(q),
         params={"fmt": 1},
     )
     assert ok and os.path.isdir(p)

@@ -21,22 +21,13 @@ from tests.conftest import SF_SMALL
 
 @pytest.fixture()
 def cache_root(tmp_path, monkeypatch):
-    """Throwaway persistent-cache root + cleared session registry for
-    the unit prefixes (the test_round14 convention)."""
+    """Throwaway persistent-cache root (the test_round14
+    convention)."""
     from data_framework_spark.sources import formats
 
     root = tmp_path / "index_cache"
     monkeypatch.setenv(formats.INDEX_CACHE_ENV, str(root))
-    _forget("r15unit_")
     yield str(root)
-    _forget("r15unit_")
-
-
-def _forget(prefix: str) -> None:
-    from data_framework_spark.sources.formats import _INDEX_DIRS
-
-    for k in [k for k in _INDEX_DIRS if k[2] == prefix]:
-        del _INDEX_DIRS[k]
 
 
 def _import_temp_module(path: str, name: str):
@@ -79,7 +70,7 @@ def test_build_source_fp_tracks_module_source(tmp_path):
 
 
 def test_forgotten_fmt_bump_cannot_serve_stale_index(
-    spark, cache_root, tmp_path
+    cache_root, tmp_path
 ):
     """END-TO-END (the r14 verdict's Done criterion): build code
     changes, params/fmt unchanged → persistent_index_dir must resolve
@@ -92,14 +83,13 @@ def test_forgotten_fmt_bump_cannot_serve_stale_index(
 
     p.write_text(_BUILD_MODULE_SRC.format(scale=1))
     old = _import_temp_module(str(p), "r15_fmt_mod_v1")
-    d1 = persistent_index_dir(spark, SF_SMALL, "r15unit_", old.build, params)
+    d1 = persistent_index_dir(SF_SMALL, "r15unit_", old.build, params)
     assert open(os.path.join(d1, "payload.txt")).read() == "1"
 
     # 'new session' running EDITED build code with the same params
-    _forget("r15unit_")
     p.write_text(_BUILD_MODULE_SRC.format(scale=2))
     new = _import_temp_module(str(p), "r15_fmt_mod_v2")
-    d2 = persistent_index_dir(spark, SF_SMALL, "r15unit_", new.build, params)
+    d2 = persistent_index_dir(SF_SMALL, "r15unit_", new.build, params)
     assert d2 != d1
     assert open(os.path.join(d2, "payload.txt")).read() == "2"
 
@@ -143,17 +133,18 @@ def test_plan_fp_failure_degrades_to_retrain_only(
     cross-session codebook — retrain-only, so two different frames
     over the same file can never cross-serve through a shared
     fallback key."""
+    from data_framework_spark import artifacts
     from data_framework_spark.similarity import pq
     from data_framework_spark.sources.tables import load_table
 
     monkeypatch.setattr(pq, "_stable_plan_fp", lambda df: None)
-    pq._BOOKS_CACHE.clear()
+    artifacts.evict(spark, "pq_books")
     emb = load_table(spark, SF_SMALL, "embeddings")
     books = pq.trained_codebooks(emb)
     assert books is not None
     persisted = glob.glob(os.path.join(cache_root, "pq_books2_*.npy"))
     assert persisted == []  # nothing persisted under a degraded key
-    pq._BOOKS_CACHE.clear()
+    artifacts.evict(spark, "pq_books")
 
 
 # --- hier-vs-sharded auto routing (r14 verdict ask 5) -------------------------
@@ -358,15 +349,16 @@ def test_legacy_pq_books_files_are_swept(spark, cache_root):
     removed by the next persist (r15 review)."""
     import numpy as np
 
+    from data_framework_spark import artifacts
     from data_framework_spark.similarity import pq
     from data_framework_spark.sources.tables import load_table
 
     os.makedirs(cache_root, exist_ok=True)
     legacy = os.path.join(cache_root, "pq_books_deadbeef00_feedface.npy")
     np.save(legacy, np.zeros((2, 2)))
-    pq._BOOKS_CACHE.clear()
+    artifacts.evict(spark, "pq_books")
     emb = load_table(spark, SF_SMALL, "embeddings")
     pq.trained_codebooks(emb)  # trains and persists under pq_books2_
-    pq._BOOKS_CACHE.clear()
+    artifacts.evict(spark, "pq_books")
     assert not os.path.exists(legacy)
     assert glob.glob(os.path.join(cache_root, "pq_books2_*.npy"))

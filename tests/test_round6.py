@@ -95,20 +95,20 @@ def test_lang_id_nd_barrier_preserves_values(spark):
 
 
 def test_funnel_scratch_tracked_and_released(spark, sf_dir):
+    from data_framework_spark import artifacts
     from data_framework_spark.functions.corpus import (
-        _FUNNEL_SCRATCH,
+        _funnel_base_cached,
         q_curation_funnel,
-        release_funnel_scratch,
     )
 
-    release_funnel_scratch()
     q_curation_funnel(spark, sf_dir).collect()
-    assert len(_FUNNEL_SCRATCH) == 1
-    (df,) = _FUNNEL_SCRATCH.values()
+    df = _funnel_base_cached(spark, sf_dir)
+    assert _funnel_base_cached(spark, sf_dir) is df  # one tracked entry
     assert df.storageLevel.useMemory  # actually persisted
-    release_funnel_scratch()
-    assert not _FUNNEL_SCRATCH
+    artifacts.evict(spark, "funnel_base")
     assert not df.storageLevel.useMemory  # actually unpersisted
+    assert _funnel_base_cached(spark, sf_dir) is not df  # entry dropped
+    artifacts.evict(spark, "funnel_base")
 
 
 def test_funnel_mat_matches_default(spark, sf_dir):
@@ -126,27 +126,12 @@ def test_funnel_mat_matches_default(spark, sf_dir):
 
 
 def test_evict_route_forces_reexecution(spark, sf_dir):
-    from data_framework_spark.similarity.ann import (
-        _ROUTE_CACHE,
-        evict_route,
-        q_cosine_topk,
-    )
-
-    from data_framework_spark.sources.formats import _sf_fingerprint
+    from data_framework_spark.similarity.ann import evict_route, q_cosine_topk
 
     df1 = q_cosine_topk(spark, sf_dir)
-    from data_framework_spark.sources.formats import _index_cache_root
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _sf_fingerprint(sf_dir),
-        "cosine_topk",
-        _index_cache_root(),
-    )
-    assert key in _ROUTE_CACHE
+    assert q_cosine_topk(spark, sf_dir) is df1  # served from the store
+    assert df1.storageLevel.useMemory
     evict_route(spark, sf_dir, "cosine_topk")
-    assert key not in _ROUTE_CACHE
     assert not df1.storageLevel.useMemory  # unpersisted on eviction
     df2 = q_cosine_topk(spark, sf_dir)
     assert df2 is not df1  # rebuilt, not a dict hit

@@ -62,7 +62,7 @@ def test_ivfpq_index_layout_and_pruned_scan(spark, tmp_path):
     from data_framework_spark.similarity.ivfpq import IVFPQ_INDEX_PREFIX
     from data_framework_spark.sources.formats import get_index_dir
 
-    path = get_index_dir(spark, SF_SMALL, IVFPQ_INDEX_PREFIX)
+    path = get_index_dir(SF_SMALL, IVFPQ_INDEX_PREFIX)
     assert path is not None
     cells = [
         d for d in os.listdir(f"{path}/codes") if d.startswith("cell=")
@@ -145,6 +145,29 @@ def test_bpe_detok_roundtrip_hand_corpus(spark, tmp_path):
         for r in q_bpe_detok_roundtrip(spark, str(tmp_path)).collect()
     }
     assert got == {0: (3, 3, True), 1: (1, 1, True)}
+
+
+def test_bpe_detok_vocab_stays_cached_on_repeat(spark, tmp_path):
+    """The vocab frame behind q_bpe_detok_roundtrip's lazy result stays
+    cached from the second call on: releasing the previous call's
+    frame AFTER persisting the new one would drop the cache entry the
+    two same-plan frames share."""
+    from data_framework_spark.functions.bpe import (
+        _wrapped_words,
+        q_bpe_detok_roundtrip,
+    )
+    from data_framework_spark.sources.tables import load_table
+
+    spark.createDataFrame(
+        [(0, "abab abab cd", "en", "s", 0)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(str(tmp_path), "documents.parquet")
+    )
+    q_bpe_detok_roundtrip(spark, str(tmp_path))
+    q_bpe_detok_roundtrip(spark, str(tmp_path))
+    docs = load_table(spark, str(tmp_path), "documents")
+    assert _wrapped_words(docs).storageLevel.useMemory
 
 
 def test_ivfpq_recall_contract_meets_floor(spark):

@@ -238,7 +238,7 @@ def test_ivfpq_neighbors_come_from_probed_cells(spark):
     from tests.conftest import SF_SMALL
 
     got = q_ivfpq_persist_topk(spark, SF_SMALL).collect()
-    path = get_index_dir(spark, SF_SMALL, IVFPQ_INDEX_PREFIX)
+    path = get_index_dir(SF_SMALL, IVFPQ_INDEX_PREFIX)
     cents = [
         [float(x) for x in r["embedding"]]
         for r in spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
@@ -272,30 +272,6 @@ def test_ivfpq_neighbors_come_from_probed_cells(spark):
             r.query_id,
             r.neighbor_id,
         )
-
-
-# --- shared session index registry ------------------------------------------
-
-
-def test_session_index_dir_builds_once_per_session(spark):
-    """The shared persistable-index registry invokes build exactly
-    once per (session, sf_dir, prefix) and hands back the same path
-    thereafter; get_index_dir reflects only built entries."""
-    from data_framework_spark.sources.formats import (
-        get_index_dir,
-        session_index_dir,
-    )
-
-    calls = []
-    p1 = session_index_dir(
-        spark, "/tmp/fake_sf", "unit_idx_", lambda p: calls.append(p)
-    )
-    p2 = session_index_dir(
-        spark, "/tmp/fake_sf", "unit_idx_", lambda p: calls.append(p)
-    )
-    assert p1 == p2 and calls == [p1]
-    assert get_index_dir(spark, "/tmp/fake_sf", "unit_idx_") == p1
-    assert get_index_dir(spark, "/tmp/other_sf", "unit_idx_") is None
 
 
 # --- repeated-digest stress for the round-8 queries -------------------------

@@ -1,14 +1,11 @@
 """Round-9 changes: widen_scan positive-allowlist guard, the
-session-index source fingerprint, the shuffle-free _shingles form,
-and the written-order ADC fold.
+shuffle-free _shingles form, and the written-order ADC fold.
 """
 
 from __future__ import annotations
 
 import pytest
 
-import os
-import shutil
 import time
 
 from pyspark.sql import functions as F
@@ -35,42 +32,6 @@ def test_widen_scan_noops_on_dedup_and_distinct(spark):
     n = spark.sparkContext.defaultParallelism
     fp = docs.filter(F.col("doc_id") < 100).select("doc_id", "text")
     assert widen_scan(fp).rdd.getNumPartitions() == n
-
-
-# --- session_index_dir: source-data fingerprint -----------------------------
-
-
-def test_session_index_dir_rebuilds_on_source_rewrite(spark, tmp_path):
-    """Rewriting the data under sf_dir within a session must
-    invalidate the cached index entry (round-8 advisory: the stale
-    entry produced wrong-but-plausible BM25/IVF results for callers
-    reusing a directory)."""
-    from data_framework_spark.sources.formats import (
-        get_index_dir,
-        session_index_dir,
-    )
-
-    sf = str(tmp_path / "sfx")
-    os.makedirs(sf)
-    shutil.copy(
-        os.path.join(SF_SMALL, "region.parquet"),
-        os.path.join(sf, "region.parquet"),
-    )
-    builds = []
-    p1 = session_index_dir(spark, sf, "fp_idx_", lambda p: builds.append(p))
-    p1b = session_index_dir(spark, sf, "fp_idx_", lambda p: builds.append(p))
-    assert p1 == p1b and len(builds) == 1  # build-once while unchanged
-    assert get_index_dir(spark, sf, "fp_idx_") == p1
-    # rewrite the source: copy again with a bumped mtime
-    time.sleep(0.01)
-    shutil.copy(
-        os.path.join(SF_SMALL, "nation.parquet"),
-        os.path.join(sf, "region.parquet"),
-    )
-    os.utime(os.path.join(sf, "region.parquet"))
-    p2 = session_index_dir(spark, sf, "fp_idx_", lambda p: builds.append(p))
-    assert len(builds) == 2 and p2 != p1
-    assert get_index_dir(spark, sf, "fp_idx_") == p2
 
 
 # --- _shingles: shuffle-free form -------------------------------------------
@@ -114,10 +75,10 @@ def test_bm25_adhoc_reuses_postings_index(spark):
     from data_framework_spark.sources.formats import get_index_dir
 
     q_bm25_postings_topk(spark, SF_SMALL).collect()
-    p1 = get_index_dir(spark, SF_SMALL, BM25_INDEX_PREFIX)
+    p1 = get_index_dir(SF_SMALL, BM25_INDEX_PREFIX)
     assert p1 is not None
     rows = q_bm25_adhoc_topk(spark, SF_SMALL).collect()
-    assert get_index_dir(spark, SF_SMALL, BM25_INDEX_PREFIX) == p1
+    assert get_index_dir(SF_SMALL, BM25_INDEX_PREFIX) == p1
     assert rows and all(r["bm25"] > 0 for r in rows)
     # descending score, doc_id tiebreak — the index route's contract
     scores = [(r["bm25"], r["doc_id"]) for r in rows]
@@ -140,10 +101,10 @@ def test_ivfpq_refine_shares_index_and_beats_adc(spark):
     from data_framework_spark.sources.formats import get_index_dir
 
     q_ivfpq_persist_topk(spark, SF_SMALL).collect()
-    p1 = get_index_dir(spark, SF_SMALL, IVFPQ_INDEX_PREFIX)
+    p1 = get_index_dir(SF_SMALL, IVFPQ_INDEX_PREFIX)
     assert p1 is not None
     refined = q_ivfpq_refine_recall(spark, SF_SMALL).collect()[0]
-    assert get_index_dir(spark, SF_SMALL, IVFPQ_INDEX_PREFIX) == p1
+    assert get_index_dir(SF_SMALL, IVFPQ_INDEX_PREFIX) == p1
     plain = q_ivfpq_recall_contract(spark, SF_SMALL).collect()[0]
     assert refined["recall"] >= plain["recall"]
     assert refined["meets_floor"]
@@ -487,7 +448,7 @@ def test_bpe_merge_cache_reuses_and_invalidates(spark, tmp_path, monkeypatch):
     """The merge table is a train-once artifact: within a session the
     four BPE queries must share one training run per (corpus content,
     split), and a rewrite of the data under sf_dir must retrain (the
-    same fingerprint-keyed contract as session_index_dir)."""
+    same fingerprint-keyed contract as the persisted indexes)."""
     import os
     import time
 

@@ -107,25 +107,20 @@ def test_trained_codebooks_cut_quantization_error(spark, sf_dir):
 
 def test_trained_codebooks_session_cache(spark, sf_dir, tmp_path):
     """One training run per (session, corpus content): the second call
-    is a dict hit; rewriting the source file retrains."""
+    is a store hit; rewriting the source file retrains."""
     import shutil
 
     import numpy as np
 
-    from data_framework_spark.similarity.pq import (
-        _BOOKS_CACHE,
-        trained_codebooks,
-    )
+    from data_framework_spark.similarity.pq import trained_codebooks
     from data_framework_spark.sources.tables import load_table
 
     work = tmp_path / "sf"
     shutil.copytree(sf_dir, work)
     emb = load_table(spark, str(work), "embeddings")
-    before = len(_BOOKS_CACHE)
     b1 = trained_codebooks(emb)
-    assert len(_BOOKS_CACHE) == before + 1
     b2 = trained_codebooks(load_table(spark, str(work), "embeddings"))
-    assert b2 is b1  # dict hit, not a retrain
+    assert b2 is b1  # store hit, not a retrain
     os.utime(work / "embeddings.parquet")  # mtime bump = rewrite signal
     b3 = trained_codebooks(load_table(spark, str(work), "embeddings"))
     assert b3 is not b1  # stamp changed -> retrained
