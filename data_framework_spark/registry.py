@@ -866,8 +866,8 @@ QUERIES: dict[str, Query] = {
         bpe_mod.q_bpe_merges,
         bpe_mod.Q_BPE_MERGES_SQL,
         "BPE vocabulary induction: first 6 merges learned over the "
-        "word-frequency table (one corpus aggregate, then vocab-sized "
-        "iterations), vs 6 unrolled merge CTEs",
+        "word-frequency table (one corpus aggregate collected once, "
+        "merges learned on the driver), vs 6 unrolled merge CTEs",
     ),
     "bpe_tokenize": Query(
         bpe_mod.q_bpe_tokenize,
@@ -1008,8 +1008,8 @@ QUERIES: dict[str, Query] = {
         bpe_mod.q_bpe_batched_merges,
         bpe_mod.Q_BPE_BATCHED_MERGES_SQL,
         "batched BPE trainer (r9 verdict ask 5): per pass ONE pair "
-        "count selects up to 4 symbol-disjoint merges applied "
-        "together — the job-count recipe for real 32k vocabularies",
+        "recount over the collected word table selects up to 4 "
+        "symbol-disjoint merges applied together",
     ),
     "pq_train_gain": Query(
         pq_mod.q_pq_train_gain,

@@ -12,11 +12,10 @@ The five round-9 ADVICE closures:
 The round-10 features:
 - structural bench route-eviction (every cached_route key declared on
   a registry entry or in COMPOSITION_ROUTES)
-- the batched BPE trainer's selection/disjointness/order-independence
-  properties
 
 The fixed-point Lloyd trainer pins of this round live in
-tests/test_similarity_train.py.
+tests/test_similarity_train.py, the batched BPE trainer's in
+tests/test_bpe.py.
 """
 
 from __future__ import annotations
@@ -232,39 +231,3 @@ def test_bench_consumes_registry_route_annotations():
     assert ".cached_routes" in src  # and the annotation is what runs
 
 
-# --- batched BPE trainer (r9 verdict ask 5) ----------------------------------
-
-
-def test_bpe_batched_merges_properties(spark, sf_dir):
-    """Within a pass: selected merges are pairwise symbol-disjoint,
-    the first selection equals the classic trainer's first merge, and
-    applying the batch in any order yields the same word table
-    (disjointness = order-independence = classic equivalence)."""
-    from data_framework_spark.functions.bpe import (
-        _apply_merges,
-        _wrapped_words,
-        learn_bpe_merges,
-        learn_bpe_merges_batched,
-    )
-    from data_framework_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    batched = learn_bpe_merges_batched(docs)
-    assert batched, "trainer found no merges"
-    for p in {b[0] for b in batched}:
-        sel = [b for b in batched if b[0] == p]
-        syms = [s for b in sel for s in (b[2], b[3])]
-        assert len(set(syms)) == len(syms), f"pass {p} shares symbols"
-    classic = learn_bpe_merges(docs, n_merges=1)
-    assert (batched[0][2], batched[0][3]) == (classic[0][1], classic[0][2])
-    # order-independence of a disjoint batch
-    pass1 = [(0, b[2], b[3], b[4]) for b in batched if b[0] == 1]
-    words = _wrapped_words(docs)
-    fwd = sorted(
-        (r["w"], r["freq"]) for r in _apply_merges(words, pass1).collect()
-    )
-    rev = sorted(
-        (r["w"], r["freq"])
-        for r in _apply_merges(words, list(reversed(pass1))).collect()
-    )
-    assert fwd == rev

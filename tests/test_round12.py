@@ -1,6 +1,6 @@
 """Round-12 tests: the r12 rotation window arithmetic, the K=256 PQ
-codebook adoption invariants, the hierarchical semantic-dedup
-assignment parity, and the incremental BPE trainer equality."""
+codebook adoption invariants and the hierarchical semantic-dedup
+assignment parity. The BPE trainer pins live in tests/test_bpe.py."""
 
 from __future__ import annotations
 
@@ -300,131 +300,7 @@ def test_distributed_flood_matches_kernel(spark):
     assert got == {(int(a), int(b)) for a, b in zip(*np.nonzero(region))}
 
 
-# --- incremental BPE trainer: classic-sequence equality ----------------------
-
-
-def test_bpe_incremental_equals_classic_hand_corpus(spark):
-    """'abab abab cd': merge 1 must be (a,b,4); merge 2 (ab,ab,2) —
-    created BY merge 1, the iterative property the batched trainer
-    relaxes and the incremental trainer must preserve; then (c,d,1);
-    then early stop. Overlap semantics ride along via 'aaaa aaa':
-    (a,a) counts 5 (overlaps counted) but merges non-overlapping
-    left-to-right. The incremental trainer's whole point is
-    CLASSIC-EXACTNESS at delta cost, so the sequences must be equal
-    element-wise, counts included."""
-    from data_framework_spark.functions.bpe import (
-        learn_bpe_merges,
-        learn_bpe_merges_incremental,
-    )
-
-    for text in ("abab abab cd", "aaaa aaa", "xy xz yz x y z"):
-        docs = spark.createDataFrame(
-            [(1, text)], "doc_id long, text string"
-        )
-        classic = learn_bpe_merges(docs, n_merges=8)
-        inc = learn_bpe_merges_incremental(docs, n_merges=8)
-        assert classic == inc, (text, classic, inc)
-
-
-def test_bpe_incremental_equals_classic_shipped_corpus(spark, sf_dir):
-    """12 merges over the shipped documents corpus — twice the driver
-    contract's depth, covering merges that consume earlier merges'
-    symbols on real text — must be element-wise identical between the
-    classic per-merge-job trainer and the incremental one."""
-    from data_framework_spark.functions.bpe import (
-        learn_bpe_merges,
-        learn_bpe_merges_incremental,
-    )
-    from data_framework_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    classic = learn_bpe_merges(docs, n_merges=12)
-    inc = learn_bpe_merges_incremental(docs, n_merges=12)
-    assert classic == inc
-
-
 # --- property-based parity for the r12 components -----------------------------
-
-
-def _bpe_reference(word_freqs: dict[str, int], n_merges: int):
-    """Obviously-correct classic BPE: FULL pair recount per merge,
-    count-desc / lexicographic winner, non-overlapping left-to-right
-    application — the spec both trainers implement."""
-    words = [(list(w), f) for w, f in word_freqs.items()]
-    merges = []
-    for rank in range(1, n_merges + 1):
-        counts: dict[tuple[str, str], int] = {}
-        for syms, f in words:
-            for a, b in zip(syms, syms[1:]):
-                counts[(a, b)] = counts.get((a, b), 0) + f
-        if not counts:
-            break
-        left, right = min(counts, key=lambda p: (-counts[p], p))
-        merges.append((rank, left, right, counts[(left, right)]))
-        new_words = []
-        for syms, f in words:
-            out, j = [], 0
-            while j < len(syms):
-                if (
-                    j + 1 < len(syms)
-                    and syms[j] == left
-                    and syms[j + 1] == right
-                ):
-                    out.append(left + right)
-                    j += 2
-                else:
-                    out.append(syms[j])
-                    j += 1
-            new_words.append((out, f))
-        words = new_words
-    return merges
-
-
-def test_bpe_incremental_matches_reference_random_corpora(spark):
-    """Incremental-recount trainer vs the full-recount reference over
-    randomized small-alphabet corpora — tiny alphabets maximize ties,
-    overlapping pairs ((a,a) on 'aaa'), and merges that consume
-    earlier merges' symbols, the cases where a stale-index or
-    delta-accounting bug would first show."""
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    from data_framework_spark.functions.bpe import (
-        _CS,
-        _OS,
-        learn_bpe_merges_incremental,
-    )
-
-    @given(
-        st.dictionaries(
-            st.text(alphabet="abc", min_size=1, max_size=6),
-            st.integers(1, 5),
-            min_size=1,
-            max_size=8,
-        ),
-        st.integers(1, 10),
-    )
-    @settings(
-        max_examples=15,
-        deadline=None,
-        suppress_health_check=[HealthCheck.function_scoped_fixture],
-    )
-    def run(word_freqs, n_merges):
-        rows = [
-            (w, "".join(f"{_OS}{c}{_CS}" for c in w), f)
-            for w, f in word_freqs.items()
-        ]
-        words = spark.createDataFrame(
-            rows, "word string, w string, freq long"
-        )
-        got = learn_bpe_merges_incremental(
-            spark.createDataFrame([(1, "")], "doc_id long, text string"),
-            n_merges,
-            words=words,
-        )
-        assert got == _bpe_reference(word_freqs, n_merges), word_freqs
-
-    run()
 
 
 @pytest.mark.slow  # r18: >10 s; slow lane (see pytest.ini)

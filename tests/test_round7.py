@@ -264,65 +264,6 @@ def test_pq_adc_retrieves_clusters_on_clustered_corpus(spark):
         assert sub_codes == by_vec[v % PQ_K], f"vec {v} left its cluster"
 
 
-# --- BPE vocabulary induction ---------------------------------------------
-
-
-def test_bpe_merges_hand_corpus(spark):
-    """Hand-verifiable BPE run: 'abab abab cd' → words abab(×2),
-    cd(×1). Pair counts: (a,b)=4, (b,a)=2, (c,d)=1 → merge 1 is
-    (a,b,4); after applying, abab = (ab)(ab) → merge 2 is (ab,ab,2)
-    — the iterative property: merge 2 consumes merge 1's symbol —
-    then (c,d,1), then no pairs remain (early stop before
-    n_merges)."""
-    from data_framework_spark.functions.bpe import learn_bpe_merges
-
-    docs = spark.createDataFrame(
-        [(1, "abab abab cd")], "doc_id long, text string"
-    )
-    merges = learn_bpe_merges(docs, n_merges=6)
-    assert merges == [
-        (1, "a", "b", 4),
-        (2, "ab", "ab", 2),
-        (3, "c", "d", 1),
-    ]
-
-
-def test_bpe_tokenize_hand_corpus(spark):
-    """Apply-side accounting on the hand corpus: after the 3
-    learnable merges, 'abab'(×2) is one token and 'cd' one token —
-    chars 10, tokens 3, fertility 10/3, induced vocab {abab, cd}.
-    Content chars must be invariant under merging."""
-    import data_framework_spark.functions.bpe as bpe_mod
-
-    docs = spark.createDataFrame(
-        [(1, "abab abab cd")], "doc_id long, text string"
-    )
-    import data_framework_spark.sources.tables as tables_mod
-
-    orig = bpe_mod.load_table
-    try:
-        bpe_mod.load_table = lambda s, d, t: docs
-        row = bpe_mod.q_bpe_tokenize(spark, "unused").collect()[0]
-    finally:
-        bpe_mod.load_table = orig
-    assert row["n_words"] == 2
-    assert row["total_occurrences"] == 3
-    assert row["chars_total"] == 10
-    assert row["tokens_total"] == 3
-    assert row["fertility"] == round(10 / 3, 6)
-    assert row["vocab_symbols"] == 2
-
-
-def test_bpe_greedy_overlap_left_to_right(spark):
-    """Pair (a,a) on 'aaa' must merge greedily left-to-right into
-    (aa)(a) — so the second merge sees pair (aa, a), not (a, aa)."""
-    from data_framework_spark.functions.bpe import learn_bpe_merges
-
-    docs = spark.createDataFrame([(1, "aaa")], "doc_id long, text string")
-    merges = learn_bpe_merges(docs, n_merges=2)
-    assert merges == [(1, "a", "a", 2), (2, "aa", "a", 1)]
-
-
 # --- SemDeDup k-means refinement ------------------------------------------
 
 
@@ -445,24 +386,6 @@ def test_ivf_index_cell_read_is_partition_pruned(spark, sf_dir, tmp_path):
     assert "PartitionFilters" in plan
     seg = plan.split("PartitionFilters", 1)[1][:200]
     assert "cell" in seg, seg
-
-
-def test_bpe_word_table_is_the_only_corpus_shuffle(spark, sf_dir):
-    """BPE pair counting runs on the vocab frame: the pair-count plan
-    contains the word-count aggregate's exchange plus the final
-    top-1 single-partition exchange — both hash exchanges key on
-    vocab-sized data, and no exchange carries corpus rows after the
-    word aggregate (structural: everything downstream reads the
-    grouped word table)."""
-    from data_framework_spark.functions.bpe import _wrapped_words
-    from data_framework_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    words = _wrapped_words(docs)
-    plan = words._jdf.queryExecution().executedPlan().toString()
-    # one corpus-keyed exchange (the word groupBy); the regex wrap is
-    # a projection on top, adding none
-    assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
 # --- GEMM association matches the oracle ----------------------------------

@@ -1,6 +1,6 @@
-"""Round-8 additions: the composed IVF-PQ (IVFADC) index and the BPE
-detokenize roundtrip — semantics pinned on hand-built inputs plus
-plan-shape assertions for the scale claims. (Oracle parity for the
+"""Round-8 additions: the composed IVF-PQ (IVFADC) index — semantics
+pinned on hand-built inputs plus plan-shape assertions for the scale
+claims. The BPE detokenize roundtrip pins live in tests/test_bpe.py. (Oracle parity for the
 new registry entries runs in test_oracle_parity.py like every entry.)
 """
 
@@ -118,56 +118,6 @@ def test_survey_query_table_matches_registry():
         assert has_oracle == (mode == "oracle"), name
     n_oracle = sum(1 for m in rows.values() if m == "oracle")
     assert f"Total: {len(rows)} queries, {n_oracle} oracle-checked" in src
-
-
-# --- BPE detokenize roundtrip ----------------------------------------------
-
-
-def test_bpe_detok_roundtrip_hand_corpus(spark, tmp_path):
-    """'abab abab cd' corpus: after the merges (ab), (abab), (cd) the
-    word abab is ONE token and cd is ONE token; detokenization must
-    reproduce both words exactly (roundtrip_ok), with per-doc
-    accounting (doc 0 = 'abab abab cd' -> 3 words, 3 BPE tokens;
-    doc 1 = 'abab' -> 1 word, 1 token)."""
-    from data_framework_spark.functions.bpe import q_bpe_detok_roundtrip
-
-    rows = [
-        (0, "abab abab cd", "en", "s", 0),
-        (1, "abab", "en", "s", 0),
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(str(tmp_path), "documents.parquet")
-    )
-    got = {
-        r.doc_id: (r.n_words, r.bpe_tokens, r.roundtrip_ok)
-        for r in q_bpe_detok_roundtrip(spark, str(tmp_path)).collect()
-    }
-    assert got == {0: (3, 3, True), 1: (1, 1, True)}
-
-
-def test_bpe_detok_vocab_stays_cached_on_repeat(spark, tmp_path):
-    """The vocab frame behind q_bpe_detok_roundtrip's lazy result stays
-    cached from the second call on: releasing the previous call's
-    frame AFTER persisting the new one would drop the cache entry the
-    two same-plan frames share."""
-    from data_framework_spark.functions.bpe import (
-        _wrapped_words,
-        q_bpe_detok_roundtrip,
-    )
-    from data_framework_spark.sources.tables import load_table
-
-    spark.createDataFrame(
-        [(0, "abab abab cd", "en", "s", 0)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(str(tmp_path), "documents.parquet")
-    )
-    q_bpe_detok_roundtrip(spark, str(tmp_path))
-    q_bpe_detok_roundtrip(spark, str(tmp_path))
-    docs = load_table(spark, str(tmp_path), "documents")
-    assert _wrapped_words(docs).storageLevel.useMemory
 
 
 def test_ivfpq_recall_contract_meets_floor(spark):

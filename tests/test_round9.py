@@ -134,95 +134,6 @@ def test_adc_fold_is_subspace_ordered(spark):
     assert folded.collect()[0]["adc_dist"] == round(0.0 + 0.1 + 0.2 + 0.3, 6)
 
 
-# --- BPE held-out coverage: independent hand recomputation -------------------
-
-
-def test_bpe_heldout_matches_pure_python_reference(spark, tmp_path):
-    """q_bpe_heldout_coverage vs an INDEPENDENT pure-Python BPE on a
-    hand corpus: same greedy merge learning (train slice only), same
-    left-to-right non-overlapping merge application to the held-out
-    words, same coverage/fertility arithmetic."""
-    import hashlib
-
-    from data_framework_spark.functions.bpe import (
-        BPE_HELDOUT_FRAC,
-        BPE_MERGES,
-        q_bpe_heldout_coverage,
-    )
-
-    texts = [
-        "banana bandana cabana apple grapple dapple zebra quartz",
-        "banana banana bandana apple apple quartz jazzy",
-        "cabana dapple zebra zebra jazzy fizzy banana",
-    ]
-    sf = str(tmp_path / "sfh")
-    spark.createDataFrame(
-        [(i, "hand", t) for i, t in enumerate(texts)],
-        "doc_id long, source string, text string",
-    ).coalesce(1).write.parquet(sf + "/documents.parquet")
-
-    # --- independent reference ---
-    freq: dict[str, int] = {}
-    for t in texts:
-        for w in t.split(" "):
-            freq[w] = freq.get(w, 0) + 1
-
-    def hf(word: str) -> float:
-        return int(hashlib.md5(word.encode()).hexdigest()[:8], 16) / 2**32
-
-    train = {w: f for w, f in freq.items() if hf(w) >= BPE_HELDOUT_FRAC}
-    held = {w: f for w, f in freq.items() if hf(w) < BPE_HELDOUT_FRAC}
-    assert held and train  # the split must exercise both slices
-
-    def merge_once(syms, left, right):
-        out, i = [], 0
-        while i < len(syms):
-            if i + 1 < len(syms) and syms[i] == left and syms[i + 1] == right:
-                out.append(left + right)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        return out
-
-    tsyms = {w: list(w) for w in train}
-    merges = []
-    for _ in range(BPE_MERGES):
-        counts: dict[tuple, int] = {}
-        for w, syms in tsyms.items():
-            for a, b in zip(syms, syms[1:]):
-                counts[(a, b)] = counts.get((a, b), 0) + train[w]
-        if not counts:
-            break
-        (left, right), _c = min(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        merges.append((left, right))
-        tsyms = {w: merge_once(s, left, right) for w, s in tsyms.items()}
-    # the real BPE vocab: train initial characters ∪ merge outputs —
-    # NOT just post-merge surviving train symbols (a symbol consumed
-    # by a later merge everywhere it occurs in train is still vocab)
-    vocab = {c for w in train for c in w} | {l + r for l, r in merges}
-    hsyms = {w: list(w) for w in held}
-    for left, right in merges:
-        hsyms = {w: merge_once(s, left, right) for w, s in hsyms.items()}
-    occ = sum(held.values())
-    cov = sum(
-        f for w, f in held.items() if all(s in vocab for s in hsyms[w])
-    )
-    chars = sum(f * len(w) for w, f in held.items())
-    toks = sum(f * len(hsyms[w]) for w, f in held.items())
-
-    row = q_bpe_heldout_coverage(spark, sf).collect()[0]
-    assert row["n_heldout_words"] == len(held)
-    assert row["heldout_occurrences"] == occ
-    assert row["covered_occurrences"] == cov
-    assert row["coverage"] == round(cov / occ, 6)
-    assert row["chars_total"] == chars
-    assert row["tokens_total"] == toks
-    assert row["fertility"] == round(chars / toks, 6)
-
-
 # --- nprobe curve: recall bounded by the coverage ceiling --------------------
 
 
@@ -275,62 +186,6 @@ def test_minhash_verify_arrow_route_equals_jvm(spark):
         ).collect()
     }
     assert jvm == arr and len(jvm) > 0
-
-
-# --- BPE oracles survive early merge exhaustion ------------------------------
-
-
-@pytest.mark.slow  # r18: >9 s; slow lane (see pytest.ini)
-def test_bpe_oracles_match_spark_when_merges_exhaust_early(spark, tmp_path):
-    """A corpus whose pair supply runs out before BPE_MERGES merges:
-    Spark's learner breaks early; the SQL chain must ride the no-op
-    sentinel (tt{i}) through the remaining steps instead of
-    annihilating the word table via an empty CROSS JOIN (round-9
-    review). Parity checked for merges, tokenize, detok, and the
-    held-out coverage oracle on the same tiny corpus."""
-    import duckdb
-
-    from data_framework_spark.functions.bpe import (
-        Q_BPE_DETOK_ROUNDTRIP_SQL,
-        Q_BPE_HELDOUT_COVERAGE_SQL,
-        Q_BPE_MERGES_SQL,
-        Q_BPE_TOKENIZE_SQL,
-        q_bpe_detok_roundtrip,
-        q_bpe_heldout_coverage,
-        q_bpe_merges,
-        q_bpe_tokenize,
-    )
-
-    # "ab" supports exactly ONE merge (a,b) -> single symbol; the
-    # single-char words supply none. 1 < BPE_MERGES=6.
-    texts = ["ab ab a b c", "ab a b", "c c ab"]
-    sf = str(tmp_path / "sfe")
-    spark.createDataFrame(
-        [(i, "hand", t) for i, t in enumerate(texts)],
-        "doc_id long, source string, text string",
-    ).coalesce(1).write.parquet(sf + "/documents.parquet")
-    con = duckdb.connect()
-    # Spark writes the table as a directory of part files
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf}/documents.parquet/*.parquet')"
-    )
-
-    for fn, sql in (
-        (q_bpe_merges, Q_BPE_MERGES_SQL),
-        (q_bpe_tokenize, Q_BPE_TOKENIZE_SQL),
-        (q_bpe_detok_roundtrip, Q_BPE_DETOK_ROUNDTRIP_SQL),
-        (q_bpe_heldout_coverage, Q_BPE_HELDOUT_COVERAGE_SQL),
-    ):
-        srows = sorted(tuple(r) for r in fn(spark, sf).collect())
-        drows = sorted(tuple(r) for r in con.execute(sql).fetchall())
-        norm = lambda rows: [
-            tuple(float(v) if isinstance(v, (int, float)) and not isinstance(v, bool) else v for v in r)
-            for r in rows
-        ]
-        assert norm(srows) == norm(drows), (fn.__name__, srows, drows)
-    # sanity: the learner really did stop early on this corpus
-    assert q_bpe_merges(spark, sf).count() < 6
 
 
 # --- shared membership kernel: property parity vs pure Python ----------------
@@ -441,60 +296,6 @@ def test_bucketed_topk_probe_radius_contract(spark):
 
 
 # --- learned-merge session cache: reuse + fingerprint invalidation ----------
-
-
-@pytest.mark.slow  # r18: >9 s; slow lane (see pytest.ini)
-def test_bpe_merge_cache_reuses_and_invalidates(spark, tmp_path, monkeypatch):
-    """The merge table is a train-once artifact: within a session the
-    four BPE queries must share one training run per (corpus content,
-    split), and a rewrite of the data under sf_dir must retrain (the
-    same fingerprint-keyed contract as the persisted indexes)."""
-    import os
-    import time
-
-    import data_framework_spark.functions.bpe as bpe
-    from data_framework_spark.functions.bpe import q_bpe_merges
-
-    sf = str(tmp_path / "sfc")
-
-    def write(texts):
-        spark.createDataFrame(
-            [(i, "hand", t) for i, t in enumerate(texts)],
-            "doc_id long, source string, text string",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            sf + "/documents.parquet"
-        )
-
-    write(["banana bandana banana", "cabana banana apple"])
-
-    calls = []
-    real = bpe.learn_bpe_merges
-
-    def spy(*a, **k):
-        calls.append(1)
-        return real(*a, **k)
-
-    monkeypatch.setattr(bpe, "learn_bpe_merges", spy)
-
-    m1 = [tuple(r) for r in q_bpe_merges(spark, sf).collect()]
-    m2 = [tuple(r) for r in q_bpe_merges(spark, sf).collect()]
-    assert len(calls) == 1, "second invocation must reuse the session cache"
-    assert m1 == m2
-
-    # rewrite the corpus: the fingerprint (mtime_ns/size) changes, so
-    # the cache must retrain and reflect the new content
-    time.sleep(0.05)  # ensure a distinct mtime_ns even on coarse clocks
-    write(["zebra zebra quartz", "quartz zebra jazz"])
-    m3 = [tuple(r) for r in q_bpe_merges(spark, sf).collect()]
-    assert len(calls) == 2, "rewritten sf_dir must invalidate the cache"
-    assert m3 != m1
-
-    # distinct splits key separately even over identical content
-    from data_framework_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf, "documents")
-    bpe.learned_merges(spark, sf, docs, split="train25")
-    assert len(calls) == 3
 
 
 # --- kernels/plans review fixes: reflect radius, zoomed flux boundary -------
