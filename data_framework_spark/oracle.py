@@ -18,10 +18,18 @@ from pyspark.sql import SparkSession
 
 from data_framework_spark.sources.tables import TABLES
 
+#: DuckDB's defaults are 80% of RAM and a `.tmp` spill directory in the
+#: working directory; an oracle whose plan blows up should fail at a
+#: fixed cap instead, with nothing spilled. The largest shipped oracle,
+#: ivfpq_nprobe_curve, needs between 2.5 and 3 GB at sf0.01.
+DUCKDB_CONFIG = {"memory_limit": "4GB", "temp_directory": ""}
+
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    """Connection with the star-schema tables registered as views."""
-    con = duckdb.connect()
+    """Connection with the star-schema tables registered as views,
+    capped at DUCKDB_CONFIG (over the cap a query raises
+    OutOfMemoryException)."""
+    con = duckdb.connect(config=DUCKDB_CONFIG)
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"

@@ -87,16 +87,15 @@ from data_framework_spark.sources.tables import (
 )
 
 # 32 coarse cells since round 13 (was 16 through r12): the r13
-# cell-count ablation (scripts/ablate_ivfpq_ncells.py +
-# scripts/measure_ivfpq_ncells32.py) measured, at EQUAL scanned-code
-# fraction (nprobe/ncells = 1/2), refine recall 0.99/0.96/1.00 at
-# sf0.001/0.01/0.1 (and 0.80 on the 10x corpus) vs the shipped
-# 0.92/0.93/0.96 (0.73) — finer cells convert the same ADC budget
-# into strictly more coverage, exactly the ncells ~ sqrt(N) growth
-# the IVF literature prescribes. Multi-assignment (each vector in its
-# top-2 cells) matched but did not beat equal-scan finer cells in the
-# same ablation and costs a 2x index + an ADC dedup rule — DEFERRED
-# with the measured table as the record.
+# cell-count ablation (SURVEY.md §8, round-13 item 3) measured, at EQUAL
+# scanned-code fraction (nprobe/ncells = 1/2), refine recall
+# 0.99/0.96/1.00 at sf0.001/0.01/0.1 (and 0.80 on the 10x corpus) vs
+# the shipped 0.92/0.93/0.96 (0.73) — finer cells convert the same ADC
+# budget into strictly more coverage, exactly the ncells ~ sqrt(N)
+# growth the IVF literature prescribes. Multi-assignment (each vector
+# in its top-2 cells) matched but did not beat equal-scan finer cells
+# in the same ablation and costs a 2x index + an ADC dedup rule —
+# DEFERRED with the measured table as the record.
 IVFPQ_NCELLS = 32
 IVFPQ_NPROBE = 4
 IVFPQ_K = 5
@@ -739,10 +738,9 @@ Q_IVFPQ_PERSIST_TOPK_SQL = _ivfpq_sql()
 # probe) R=100 is the binding loss — refine recall 0.80 under a 1.00
 # coverage ceiling — and growing R recovers it at ~flat wall time
 # (R 100/200/400/800 -> recall 0.80/0.93/0.97/1.00, the shortlist
-# fetch stays |Q|*R broadcast point reads;
-# scripts/measure_refine_shortlist.py, r13). Since r14 the R ~
+# fetch stays |Q|*R broadcast point reads; r13). Since r14 the R ~
 # pool/10 reading is WIRED as refine_shortlist_r below (the r13
-# verdict's ask-3 ablation, scripts/ablate_ivfpq_sqrtn.py, showed
+# verdict's ask-3 ablation, SURVEY.md §8 round-14 item 3, showed
 # 32-cell coverage is already 0.99-1.00 at 10x/100x at every scan
 # fraction — the shortlist, not the cell count, is the scale lever);
 # IVFPQ_REFINE_R stays as the policy FLOOR, which the shipped SFs'

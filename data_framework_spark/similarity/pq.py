@@ -47,12 +47,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_framework_spark import artifacts
-from data_framework_spark.sources.tables import collect_bounded, load_table
+from data_framework_spark.sources.tables import (
+    _sf_fingerprint,
+    collect_bounded,
+    load_table,
+)
 
 PQ_M = 8  # subspaces
 #: Codes per subspace. 16 (4 bits) through round 11; 256 (8 bits, the
 #: standard faiss operating point) since round 12 — adopted on the
-#: r11 ablation's evidence (scripts/ablate_pq_codebook_size.py): raw
+#: r11 ablation's evidence (SURVEY.md §8, r11 item 4): raw
 #: ADC recall@5 0.18→0.37 at sf0.1 and 0.11→0.21 at 10×, residual
 #: quantization error −60%, LUT still bounded (|Q|·M·K = 40,960
 #: rows/query batch), at 2.5-8× one-time training cost. Deferred in
@@ -94,71 +98,102 @@ def _codebooks(emb: DataFrame) -> np.ndarray:
     )
 
 
-# Trained codebooks are a session artifact: one training run per
-# (corpus file, plan) shared by q_pq_codes and q_pq_adc_topk — the
-# BPE learned-merge contract (the tokenizer/codebook IS a build
-# artifact; retraining it inside every consuming query is the
-# anti-pattern the store removes). Built from the corpus file, so a
-# mid-session rewrite retrains. The value is a driver-tiny (8, 256, 8)
-# ndarray.
+# Trained codebooks are built once per (corpus file, plan) and reused
+# at two levels. In a session they are an `artifacts` entry shared by
+# q_pq_codes, q_pq_adc_topk and q_pq_train_gain (the codebook is a
+# build artifact, like the BPE merges). Across sessions they are a
+# `formats.persistent_index_dir` tree holding `books.npy`, under a
+# prefix that names the plan: the digest does not, so the prefix is
+# what keeps two plans over one file from serving or evicting each
+# other's tree, and a rewrite of the file replaces only the retrained
+# plan's tree. The value is a driver-tiny (8, 256, 8) ndarray.
+
+#: Prefix of the persisted codebook trees; the plan fingerprint follows.
+PQ_BOOKS_PREFIX = "pq_codebooks_"
+
+#: Bump on any training-semantics change the params below and the
+#: build-source hashes don't capture, so a persisted pre-change
+#: codebook is unreachable.
+PQ_BOOKS_FMT = 1
 
 
 def trained_codebooks(emb: DataFrame) -> np.ndarray:
     """Lloyd-trained codebooks: the sampled seeds refined by
     train.BOOK_ROUNDS of per-subspace fixed-point k-means over the raw
     corpus (bit-identical to the oracle's unrolled CTEs).
-    Session-cached per (corpus fingerprint, analyzed-plan semantic
-    hash): inputFiles() alone is identical for ANY frame derived from
-    the same file, so a filtered/projected view would silently serve —
-    or poison — full-corpus codebooks (round-10 advisory). The
-    semanticHash term makes derived frames distinct cache entries
-    while the registry's identical `load_table` plans still share one
-    training run; multi-file and non-file frames retrain every call."""
-    import os
+
+    Session-cached per (corpus file, analyzed-plan semantic hash):
+    inputFiles() alone is identical for ANY frame derived from the
+    same file, so a filtered/projected view would silently serve — or
+    poison — full-corpus codebooks. The semanticHash term makes
+    derived frames distinct entries while identical `load_table`
+    plans share one training run. A session miss reloads the books a
+    previous session persisted under `persistent_index_dir(file,
+    PQ_BOOKS_PREFIX + <stable plan fp>, ...)`, or trains and persists
+    them; a tree whose `books.npy` is unreadable or mis-shaped is
+    retrained, never served. Multi-file frames, non-file frames and a
+    plan without a stable fingerprint retrain and persist nothing."""
     from urllib.parse import urlparse
 
-    from data_framework_spark.similarity.train import lloyd_subspace_books
+    from data_framework_spark.similarity import train
+    from data_framework_spark.sources.formats import (
+        build_source_fp,
+        persistent_index_dir,
+    )
 
-    spark = emb.sparkSession
+    def train_books() -> np.ndarray:
+        return train.lloyd_subspace_books(emb, "embedding", _codebooks(emb))
+
     files = emb.inputFiles()
     if len(files) != 1:
-        return lloyd_subspace_books(emb, "embedding", _codebooks(emb))
+        return train_books()
     local = urlparse(files[0]).path or files[0]
-    try:
-        st = os.stat(local)
-        stamp = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return lloyd_subspace_books(emb, "embedding", _codebooks(emb))
+    if not _sf_fingerprint(local):
+        return train_books()
 
     def build() -> np.ndarray:
         plan_fp = _stable_plan_fp(emb)
-        got = None
-        if plan_fp is not None:
-            got = _load_persisted_books(local, stamp, plan_fp)
-        if got is None:
-            got = lloyd_subspace_books(emb, "embedding", _codebooks(emb))
-            if plan_fp is not None:
-                _persist_books(local, stamp, plan_fp, got)
-        return got
+        if plan_fp is None:
+            return train_books()
+        d = persistent_index_dir(
+            local,
+            f"{PQ_BOOKS_PREFIX}{plan_fp[:10]}_",
+            lambda p: np.save(f"{p}/books.npy", train_books()),
+            params={
+                "fmt": PQ_BOOKS_FMT,
+                "pq_m": int(PQ_M),
+                "pq_k": int(PQ_K),
+                "book_rounds": int(train.BOOK_ROUNDS),
+                # the digest folds in this module's source (the build
+                # lambda's); the Lloyd trainer lives in train.py
+                "train_src": build_source_fp(train),
+            },
+        )
+        try:
+            books = np.load(f"{d}/books.npy")
+        except (OSError, ValueError):
+            return train_books()
+        if books.ndim != 3 or (books.shape[0], books.shape[2]) != (PQ_M, _SUB):
+            return train_books()
+        return books
 
+    key = (local, emb.semanticHash())
     return artifacts.get_or_build(
-        spark, "pq_books", (local, emb.semanticHash()), build, src=local
+        emb.sparkSession, "pq_books", key, build, src=local
     )
 
 
 def _stable_plan_fp(df: DataFrame) -> str | None:
     """Cross-SESSION plan fingerprint: the analyzed logical plan's
     string with exprIds (#NNN — fresh per session) stripped, hashed.
-    semanticHash() serves the SESSION cache (it is what the round-10
-    advisory demanded — a filtered/projected view must never be
-    served full-corpus codebooks) but embeds exprIds, so it differs
-    across sessions for the identical plan; the stripped-plan hash
-    keeps the same derived-frame-distinctness property (a filter or
-    projection changes the plan TEXT) while being stable across
-    sessions. A JVM/py4j hiccup returns None and the caller skips
-    BOTH persisted-load and persist (retrain-only) — a shared
-    fallback token would let two DIFFERENT frames over the same
-    source file cross-serve each other's books (r14 advisory)."""
+    semanticHash() serves the SESSION cache but embeds exprIds, so it
+    differs across sessions for the identical plan; the stripped-plan
+    hash keeps derived frames distinct (a filter or projection
+    changes the plan TEXT) while being stable across sessions. A
+    JVM/py4j hiccup returns None and the caller retrains without
+    loading or persisting — a shared fallback token would let two
+    DIFFERENT frames over the same source file cross-serve each
+    other's books."""
     import hashlib
     import re
 
@@ -167,111 +202,6 @@ def _stable_plan_fp(df: DataFrame) -> str | None:
     except Exception:
         return None
     return hashlib.sha256(re.sub(r"#\d+", "#", s).encode()).hexdigest()[:20]
-
-
-#: Bump on any training-semantics change the digest knobs below don't
-#: capture — a persisted pre-change codebook must be unreachable.
-PQ_BOOKS_FMT = 1
-
-
-def _books_digests(local: str, stamp: tuple, plan_fp: str) -> tuple[str, str]:
-    """(path-digest, content-digest) for the cross-session codebook
-    file: the path digest groups all stamps of one (source file, plan)
-    pair (so a source rewrite evicts its superseded codebooks without
-    two distinct plans over the same file thrashing each other's
-    persisted books — r14 advisory), the content digest keys the
-    exact (stamp, plan, knobs, build-code) the training consumed."""
-    import hashlib
-    import json
-    import sys
-
-    from data_framework_spark.similarity import train
-    from data_framework_spark.sources.formats import build_source_fp
-
-    pd_ = hashlib.sha256(f"{local}\x00{plan_fp}".encode()).hexdigest()[:10]
-    cd = hashlib.sha256(
-        json.dumps(
-            {
-                "local": local,
-                "stamp": list(stamp),
-                "plan_fp": plan_fp,
-                "fmt": PQ_BOOKS_FMT,
-                "pq_m": PQ_M,
-                "pq_k": PQ_K,
-                "book_rounds": train.BOOK_ROUNDS,
-                # source hash of this module + the Lloyd trainer: a
-                # build-code change diverges the key even when
-                # PQ_BOOKS_FMT is forgotten (r14 verdict ask 3)
-                "build_src": build_source_fp(sys.modules[__name__], train),
-            },
-            sort_keys=True,
-        ).encode()
-    ).hexdigest()[:20]
-    return pd_, cd
-
-
-def _load_persisted_books(
-    local: str, stamp: tuple, plan_fp: str
-) -> np.ndarray | None:
-    """Reload the trained codebook persisted by a previous session
-    (r14, the ivfpq persistent-index precedent: the codebook is a
-    build artifact — retraining it per session is the cold cost the
-    r13 verdict flagged on pq_adc_topk). Any read problem means
-    retrain, never a wrong codebook (the digest filename pins the
-    exact source stamp + plan + training knobs)."""
-    import os
-
-    from data_framework_spark.sources.formats import _index_cache_root
-
-    pd_, cd = _books_digests(local, stamp, plan_fp)
-    path = os.path.join(_index_cache_root(), f"pq_books2_{pd_}_{cd}.npy")
-    try:
-        books = np.load(path)
-    except (OSError, ValueError):
-        return None
-    if books.ndim != 3 or books.shape[0] != PQ_M or books.shape[2] != _SUB:
-        return None
-    return books
-
-
-def _persist_books(
-    local: str, stamp: tuple, plan_fp: str, books: np.ndarray
-) -> None:
-    """Persist the trained codebook for cross-session reload, evicting
-    superseded stamps of the same source file (one live codebook per
-    (source file, plan) — the persistent_index_dir eviction
-    convention). Atomic tmp+rename publication; a failed persist is
-    non-fatal (the session cache still serves this process)."""
-    import glob
-    import os
-
-    from data_framework_spark.sources.formats import _index_cache_root
-
-    pd_, cd = _books_digests(local, stamp, plan_fp)
-    root = _index_cache_root()
-    try:
-        os.makedirs(root, exist_ok=True)
-        final = os.path.join(root, f"pq_books2_{pd_}_{cd}.npy")
-        # evict superseded stamps of this (file, plan) group, plus any
-        # legacy pre-r15 "pq_books_" files — the old per-file path
-        # scheme no longer matches any loader path, so without this
-        # sweep they would sit orphaned in the cache root forever
-        # (r15 review)
-        stale = glob.glob(
-            os.path.join(root, f"pq_books2_{pd_}_*.npy")
-        ) + glob.glob(os.path.join(root, "pq_books_*.npy"))
-        for old in stale:
-            if old != final:
-                try:
-                    os.remove(old)
-                except OSError:
-                    pass
-        tmp = f"{final}.tmp-{os.getpid()}"
-        with open(tmp, "wb") as fh:
-            np.save(fh, books)
-        os.replace(tmp, final)
-    except OSError:
-        pass
 
 
 def _round9(x: np.ndarray) -> np.ndarray:

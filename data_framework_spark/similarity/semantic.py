@@ -119,57 +119,6 @@ def _assign_clusters(emb: DataFrame, cents: DataFrame | None = None) -> DataFram
     )
 
 
-def lloyd_refine(emb: DataFrame, cents: DataFrame, rounds: int = 1) -> DataFrame:
-    """Lloyd k-means refinement of a centroid frame: each round
-    reassigns every vector to its argmax-cosine centroid, then
-    replaces each centroid with its cluster's coordinate-wise mean.
-    All JVM-side: the mean is a posexplode → (cluster, pos) avg →
-    ordered re-collect (struct array_sort), one corpus-linear shuffle
-    per round — the standard distributed Lloyd step. An empty cluster
-    keeps its previous centroid (left join + coalesce), the usual
-    k-means convention.
-
-    This is the documented drop-in the stand-in centroids promised
-    (round-6 verdict #6): it changes cluster QUALITY only — the dedup
-    contract (assignment argmax, within-cluster pairs) is untouched,
-    so the oracle surface stays on the deterministic seed."""
-    for _ in range(rounds):
-        assigned = _assign_clusters(emb, cents)
-        means = (
-            assigned.select(
-                "cluster", F.posexplode("embedding").alias("pos", "x")
-            )
-            .groupBy("cluster", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("pos"), F.col("m")))
-                    ),
-                    lambda s: s.getField("m").cast("float"),
-                ).alias("new_cent")
-            )
-        )
-        cents = (
-            cents.join(
-                means.withColumnRenamed("cluster", "cent_id"), "cent_id", "left"
-            )
-            .select(
-                "cent_id",
-                F.coalesce(F.col("new_cent"), F.col("cent")).alias("cent"),
-            )
-        )
-    return cents
-
-
-def assign_clusters_kmeans(emb: DataFrame, rounds: int = 1) -> DataFrame:
-    """(vec_id, embedding, cluster) with Lloyd-refined centroids —
-    the non-oracle quality variant; compare against the stand-in via
-    cluster purity (tests/test_round7.py reports the delta)."""
-    return _assign_clusters(emb, lloyd_refine(emb, _seed_centroids(emb), rounds))
-
-
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cluster semantic-dedup accounting: members per cluster and
     how many are removable duplicates (a smaller-id member within

@@ -20,6 +20,17 @@ def sf_dir():
     return SF_SMALL
 
 
+@pytest.fixture()
+def cache_root(tmp_path, monkeypatch):
+    """Redirect the persistent index cache to a throwaway root, so
+    each test observes build-vs-reload from a clean slate."""
+    from data_framework_spark.sources import formats
+
+    root = tmp_path / "index_cache"
+    monkeypatch.setenv(formats.INDEX_CACHE_ENV, str(root))
+    yield str(root)
+
+
 @pytest.fixture(scope="session")
 def jobs_started():
     """`jobs_started(spark, fn)`: the Spark jobs `fn()` starts, counted

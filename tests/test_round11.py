@@ -81,34 +81,6 @@ def test_scalar_fns_single_hour_type_matches_oracle(spark, tmp_path):
 # --- trained-codebook cache: derived frames don't alias the corpus -----------
 
 
-def test_trained_codebooks_cache_isolates_derived_frames(spark, tmp_path):
-    """inputFiles() is identical for any frame derived from the same
-    single file, so a (app, path, stamp)-only key would serve — or
-    poison — FULL-corpus codebooks for trained_codebooks(emb.filter(...))
-    (round-10 advisory). The semanticHash key term must keep them
-    distinct entries while identical plans still share one run."""
-    import shutil
-
-    import numpy as np
-
-    from data_framework_spark.similarity.pq import trained_codebooks
-    from data_framework_spark.sources.tables import load_table
-
-    work = tmp_path / "sf"
-    shutil.copytree("/root/testdata/sf0.001", work)
-    full = load_table(spark, str(work), "embeddings")
-    b_full = trained_codebooks(full)
-    # identical plan, rebuilt: still one training run (dict identity)
-    assert trained_codebooks(load_table(spark, str(work), "embeddings")) is b_full
-    # a filtered view of the SAME file must NOT alias the corpus entry
-    half = full.filter("vec_id < 250")
-    b_half = trained_codebooks(half)
-    assert b_half is not b_full
-    assert not np.array_equal(b_half, b_full)  # genuinely retrained
-    # and the cached corpus entry is unpoisoned
-    assert trained_codebooks(load_table(spark, str(work), "embeddings")) is b_full
-
-
 # --- scaled-dedup assignment: Arrow GEMM route equals the HOF join route -----
 
 

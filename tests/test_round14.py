@@ -17,17 +17,6 @@ import pytest
 from tests.conftest import SF_SMALL
 
 
-@pytest.fixture()
-def cache_root(tmp_path, monkeypatch):
-    """Redirect the persistent index cache to a throwaway root, so
-    each test observes build-vs-reload from a clean slate."""
-    from data_framework_spark.sources import formats
-
-    root = tmp_path / "index_cache"
-    monkeypatch.setenv(formats.INDEX_CACHE_ENV, str(root))
-    yield str(root)
-
-
 def test_persistent_index_builds_once_across_sessions(cache_root):
     """A second call (as a fresh session makes it: same data, same
     params) must RELOAD: zero additional build calls, same
@@ -413,57 +402,6 @@ def test_refine_r_sql_matches_python_policy():
 # tests/test_round15.py::test_r15_verify_window_arithmetic — each
 # round's window replaces the previous round's arithmetic pin (the
 # r13 -> r14 precedent).
-
-
-# --- cross-session PQ codebook persistence (r13 verdict, pq_adc cold) ---------
-
-
-def test_pq_books_persist_and_reload_bitwise(spark, cache_root):
-    """trained_codebooks persisted by one 'session' must be reloaded
-    BITWISE by the next (cleared session cache), and a filtered view
-    must never be served the full-corpus books (the round-10 advisory,
-    held across sessions by the stripped-plan fingerprint)."""
-    import numpy as np
-
-    from data_framework_spark import artifacts
-    from data_framework_spark.similarity import pq
-    from data_framework_spark.sources.tables import load_table
-
-    artifacts.evict(spark, "pq_books")
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    b1 = pq.trained_codebooks(emb)
-    artifacts.evict(spark, "pq_books")
-    import time
-
-    t0 = time.perf_counter()
-    b2 = pq.trained_codebooks(emb)
-    reload_s = time.perf_counter() - t0
-    assert np.array_equal(b1, b2)
-    assert reload_s < 2.0  # reload, not retrain (train is >>2 s)
-    # distinct plan -> distinct digest -> no cross-serving
-    filt = emb.filter("vec_id < 300")
-    assert pq._stable_plan_fp(filt) != pq._stable_plan_fp(emb)
-
-
-def test_pq_books_fmt_bump_diverges(spark, cache_root, monkeypatch):
-    from data_framework_spark import artifacts
-    from data_framework_spark.similarity import pq
-    from data_framework_spark.sources.tables import load_table
-
-    artifacts.evict(spark, "pq_books")
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    pq.trained_codebooks(emb)
-    import glob
-    import os
-
-    files = glob.glob(os.path.join(cache_root, "pq_books2_*.npy"))
-    assert len(files) == 1
-    artifacts.evict(spark, "pq_books")
-    monkeypatch.setattr(pq, "PQ_BOOKS_FMT", pq.PQ_BOOKS_FMT + 1)
-    pq.trained_codebooks(emb)
-    files2 = glob.glob(os.path.join(cache_root, "pq_books2_*.npy"))
-    # same path-digest -> superseded file evicted, one live codebook
-    assert len(files2) == 1 and files2 != files
 
 
 @pytest.mark.slow  # r18: >10 s; slow lane (see pytest.ini)

@@ -2,32 +2,17 @@
 persistent caches (r14 verdict ask 3 — every cross-session digest now
 folds a source hash of the build code, so changed build semantics can
 never serve an artifact persisted by older code even when the
-family's *_FMT constant is not bumped), plus the r14-advisory pq
-fixes (plan-fp=None degrades to retrain-only; per-(file, plan)
-eviction of persisted codebooks)."""
+family's *_FMT constant is not bumped). The PQ codebook pins of this
+round live in tests/test_pq.py."""
 
 from __future__ import annotations
 
-import glob
 import importlib.util
 import os
 import sys
 import textwrap
 
-import pytest
-
 from tests.conftest import SF_SMALL
-
-
-@pytest.fixture()
-def cache_root(tmp_path, monkeypatch):
-    """Throwaway persistent-cache root (the test_round14
-    convention)."""
-    from data_framework_spark.sources import formats
-
-    root = tmp_path / "index_cache"
-    monkeypatch.setenv(formats.INDEX_CACHE_ENV, str(root))
-    yield str(root)
 
 
 def _import_temp_module(path: str, name: str):
@@ -92,59 +77,6 @@ def test_forgotten_fmt_bump_cannot_serve_stale_index(
     d2 = persistent_index_dir(SF_SMALL, "r15unit_", new.build, params)
     assert d2 != d1
     assert open(os.path.join(d2, "payload.txt")).read() == "2"
-
-
-def test_pq_books_digest_folds_build_source(monkeypatch):
-    """The PQ codebook content digest must respond to the build-code
-    fingerprint (proves the fold is wired, not just present in
-    formats): patching build_source_fp changes cd, nothing else."""
-    from data_framework_spark.similarity import pq
-    from data_framework_spark.sources import formats
-
-    stamp = (123, 456)
-    pd1, cd1 = pq._books_digests("/x/emb.parquet", stamp, "planA")
-    monkeypatch.setattr(
-        formats, "build_source_fp", lambda *objs: "ffffffffffff"
-    )
-    pd2, cd2 = pq._books_digests("/x/emb.parquet", stamp, "planA")
-    assert pd2 == pd1  # path digest is (file, plan) only
-    assert cd2 != cd1  # content digest folds the build source
-
-
-def test_pq_path_digest_is_per_file_and_plan():
-    """r14 advisory: two distinct plans over the same source file get
-    DISTINCT path digests, so persisting one no longer evicts the
-    other (the eviction loop globs on the path digest)."""
-    from data_framework_spark.similarity import pq
-
-    stamp = (123, 456)
-    pd_a, _ = pq._books_digests("/x/emb.parquet", stamp, "planA")
-    pd_b, _ = pq._books_digests("/x/emb.parquet", stamp, "planB")
-    pd_a2, _ = pq._books_digests("/x/emb.parquet", (9, 9), "planA")
-    assert pd_a != pd_b  # plan distinguishes the eviction group
-    assert pd_a == pd_a2  # a stamp change stays WITHIN the group
-
-
-def test_plan_fp_failure_degrades_to_retrain_only(
-    spark, cache_root, monkeypatch
-):
-    """r14 advisory (medium): when _stable_plan_fp returns None (py4j
-    hiccup), trained_codebooks must neither LOAD nor PERSIST a
-    cross-session codebook — retrain-only, so two different frames
-    over the same file can never cross-serve through a shared
-    fallback key."""
-    from data_framework_spark import artifacts
-    from data_framework_spark.similarity import pq
-    from data_framework_spark.sources.tables import load_table
-
-    monkeypatch.setattr(pq, "_stable_plan_fp", lambda df: None)
-    artifacts.evict(spark, "pq_books")
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    books = pq.trained_codebooks(emb)
-    assert books is not None
-    persisted = glob.glob(os.path.join(cache_root, "pq_books2_*.npy"))
-    assert persisted == []  # nothing persisted under a degraded key
-    artifacts.evict(spark, "pq_books")
 
 
 # --- hier-vs-sharded auto routing (r14 verdict ask 5) -------------------------
@@ -341,24 +273,3 @@ def test_interval_join_replays_one_source_three_batches(spark, monkeypatch):
     assert len(progress) == 3  # no trailing no-data batch
     for p in progress:
         assert len(p["sources"]) == 1  # self-join: ONE replay source
-
-
-def test_legacy_pq_books_files_are_swept(spark, cache_root):
-    """The r15 path-scheme change (pq_books_ -> pq_books2_) must not
-    orphan pre-r15 files: a legacy-named file in the cache root is
-    removed by the next persist (r15 review)."""
-    import numpy as np
-
-    from data_framework_spark import artifacts
-    from data_framework_spark.similarity import pq
-    from data_framework_spark.sources.tables import load_table
-
-    os.makedirs(cache_root, exist_ok=True)
-    legacy = os.path.join(cache_root, "pq_books_deadbeef00_feedface.npy")
-    np.save(legacy, np.zeros((2, 2)))
-    artifacts.evict(spark, "pq_books")
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    pq.trained_codebooks(emb)  # trains and persists under pq_books2_
-    artifacts.evict(spark, "pq_books")
-    assert not os.path.exists(legacy)
-    assert glob.glob(os.path.join(cache_root, "pq_books2_*.npy"))

@@ -105,7 +105,9 @@ def test_trained_codebooks_cut_quantization_error(spark, sf_dir):
     assert trained_err < seed_err * 0.9  # >=10% improvement, measured ~24%
 
 
-def test_trained_codebooks_session_cache(spark, sf_dir, tmp_path):
+def test_trained_codebooks_session_cache(
+    spark, sf_dir, tmp_path, cache_root
+):
     """One training run per (session, corpus content): the second call
     is a store hit; rewriting the source file retrains."""
     import shutil
