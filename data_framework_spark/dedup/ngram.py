@@ -39,14 +39,6 @@ def char_ngrams(text_col: str, n: int = N) -> Column:
     )
 
 
-def gram_postings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(doc, gram) rows — the postings table both queries join on."""
-    return docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(char_ngrams(text_col)).alias("gram"),
-    )
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     id_col: str,

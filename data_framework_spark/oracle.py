@@ -20,9 +20,11 @@ from data_framework_spark.sources.tables import TABLES
 
 #: DuckDB's defaults are 80% of RAM and a `.tmp` spill directory in the
 #: working directory; an oracle whose plan blows up should fail at a
-#: fixed cap instead, with nothing spilled. The largest shipped oracle,
-#: ivfpq_nprobe_curve, needs between 2.5 and 3 GB at sf0.01.
-DUCKDB_CONFIG = {"memory_limit": "4GB", "temp_directory": ""}
+#: fixed cap instead, with nothing spilled. 2 GB is the cap the
+#: benchmark's oracle checks use; the Lloyd-training oracles (pq_*,
+#: ivfpq_*) fit it because their re-read CTEs are AS MATERIALIZED
+#: (each peaks near 0.5 GB process RSS at sf0.01).
+DUCKDB_CONFIG = {"memory_limit": "2GB", "temp_directory": ""}
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -644,7 +644,7 @@ def _ivfpq_sql(
     book_seed = f"""  SELECT (vec_id - {ncells})::INTEGER AS cid, subspace, sub AS csub
   FROM pparts WHERE vec_id >= {ncells} AND vec_id < {ncells + PQ_K}"""
     return f"""
-WITH nrm AS (
+WITH nrm AS MATERIALIZED (
   SELECT vec_id, embedding,
          sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE))) AS n
   FROM embeddings
@@ -654,7 +654,7 @@ cc AS (
   SELECT e.vec_id, round({dot} / (e.n * c.cn), 9) AS d, c.cid
   FROM nrm e CROSS JOIN cent c
 ),
-ranked AS (
+ranked AS MATERIALIZED (
   SELECT vec_id, cid, d,
          row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, cid ASC) AS r
   FROM cc
@@ -670,7 +670,7 @@ res AS (
   JOIN embeddings e USING (vec_id)
   JOIN cent c ON c.cid = a.cell
 ),
-pparts AS (
+pparts AS MATERIALIZED (
   SELECT vec_id, cell, s.s::INTEGER AS subspace,
          list_slice(r, s.s * {sub} + 1, s.s * {sub} + {sub}) AS sub
   FROM res, range(0, {PQ_M}) s(s)
@@ -1198,7 +1198,7 @@ def _nprobe_curve_sql(
     book_seed = f"""  SELECT (vec_id - {ncells})::INTEGER AS cid, subspace, sub AS csub
   FROM pparts WHERE vec_id >= {ncells} AND vec_id < {ncells + PQ_K}"""
     return f"""
-WITH nrm AS (
+WITH nrm AS MATERIALIZED (
   SELECT vec_id, embedding,
          sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE))) AS n
   FROM embeddings
@@ -1208,12 +1208,12 @@ cc AS (
   SELECT e.vec_id, round({dot} / (e.n * c.cn), 9) AS d, c.cid
   FROM nrm e CROSS JOIN cent c
 ),
-ranked AS (
+ranked AS MATERIALIZED (
   SELECT vec_id, cid, d,
          row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, cid ASC) AS r
   FROM cc
 ),
-assigned AS (SELECT vec_id, cid AS cell FROM ranked WHERE r = 1),
+assigned AS MATERIALIZED (SELECT vec_id, cid AS cell FROM ranked WHERE r = 1),
 probes AS (SELECT vec_id AS query_id, cid AS cell, r FROM ranked
            WHERE r <= {max_n} AND vec_id < {nq}),
 res AS (
@@ -1224,7 +1224,7 @@ res AS (
   JOIN embeddings e USING (vec_id)
   JOIN cent c ON c.cid = a.cell
 ),
-pparts AS (
+pparts AS MATERIALIZED (
   SELECT vec_id, cell, s.s::INTEGER AS subspace,
          list_slice(r, s.s * {sub} + 1, s.s * {sub} + {sub}) AS sub
   FROM res, range(0, {PQ_M}) s(s)
@@ -1285,7 +1285,7 @@ approx AS (
   )
   WHERE rank <= {k}
 ),
-exact_pairs AS (
+exact_pairs AS MATERIALIZED (
   SELECT query_id, neighbor_id FROM ({_exact_l2_sql()})
 )
 SELECT s.nprobe,

@@ -38,6 +38,7 @@ Arrow-batched pass.
 
 from __future__ import annotations
 
+import shutil
 from typing import Iterator
 
 import numpy as np
@@ -131,8 +132,9 @@ def trained_codebooks(emb: DataFrame) -> np.ndarray:
     previous session persisted under `persistent_index_dir(file,
     PQ_BOOKS_PREFIX + <stable plan fp>, ...)`, or trains and persists
     them; a tree whose `books.npy` is unreadable or mis-shaped is
-    retrained, never served. Multi-file frames, non-file frames and a
-    plan without a stable fingerprint retrain and persist nothing."""
+    never served: it is deleted and rebuilt with retrained books.
+    Multi-file frames, non-file frames and a plan without a stable
+    fingerprint retrain and persist nothing."""
     from urllib.parse import urlparse
 
     from data_framework_spark.similarity import train
@@ -155,32 +157,48 @@ def trained_codebooks(emb: DataFrame) -> np.ndarray:
         plan_fp = _stable_plan_fp(emb)
         if plan_fp is None:
             return train_books()
-        d = persistent_index_dir(
-            local,
-            f"{PQ_BOOKS_PREFIX}{plan_fp[:10]}_",
-            lambda p: np.save(f"{p}/books.npy", train_books()),
-            params={
-                "fmt": PQ_BOOKS_FMT,
-                "pq_m": int(PQ_M),
-                "pq_k": int(PQ_K),
-                "book_rounds": int(train.BOOK_ROUNDS),
-                # the digest folds in this module's source (the build
-                # lambda's); the Lloyd trainer lives in train.py
-                "train_src": build_source_fp(train),
-            },
-        )
-        try:
-            books = np.load(f"{d}/books.npy")
-        except (OSError, ValueError):
-            return train_books()
-        if books.ndim != 3 or (books.shape[0], books.shape[2]) != (PQ_M, _SUB):
-            return train_books()
+
+        def tree() -> str:
+            return persistent_index_dir(
+                local,
+                f"{PQ_BOOKS_PREFIX}{plan_fp[:10]}_",
+                lambda p: np.save(f"{p}/books.npy", train_books()),
+                params={
+                    "fmt": PQ_BOOKS_FMT,
+                    "pq_m": int(PQ_M),
+                    "pq_k": int(PQ_K),
+                    "book_rounds": int(train.BOOK_ROUNDS),
+                    # the digest folds in this module's source (the
+                    # build lambda's); the Lloyd trainer is in train.py
+                    "train_src": build_source_fp(train),
+                },
+            )
+
+        d = tree()
+        books = _load_books(d)
+        if books is None:
+            # the manifest still vouches for the tree: drop it so the
+            # retrained books replace the bad file
+            shutil.rmtree(d, ignore_errors=True)
+            books = np.load(f"{tree()}/books.npy")
         return books
 
     key = (local, emb.semanticHash())
     return artifacts.get_or_build(
         emb.sparkSession, "pq_books", key, build, src=local
     )
+
+
+def _load_books(d: str) -> np.ndarray | None:
+    """The codebooks persisted in tree `d`, or None when its books.npy
+    is unreadable or mis-shaped."""
+    try:
+        books = np.load(f"{d}/books.npy")
+    except (OSError, ValueError):
+        return None
+    if books.ndim != 3 or (books.shape[0], books.shape[2]) != (PQ_M, _SUB):
+        return None
+    return books
 
 
 def _stable_plan_fp(df: DataFrame) -> str | None:
@@ -407,7 +425,7 @@ def _pq_assign_ctes() -> str:
     seed = f"""  SELECT vec_id::INTEGER AS cid, subspace,
          list_transform(sub, x -> x::DOUBLE) AS csub
   FROM parts WHERE vec_id < {PQ_K}"""
-    return f"""parts AS (
+    return f"""parts AS MATERIALIZED (
   SELECT vec_id, s.s::INTEGER AS subspace,
          list_slice(embedding, s.s * {_SUB} + 1,
                     s.s * {_SUB} + {_SUB}) AS sub

@@ -31,9 +31,8 @@ is a broadcast nested-loop over K per vector (linear, no shuffle);
 the pair join shuffles once on the cluster id and enumerates pairs
 only within clusters, so with K ≈ √N-scaled cluster counts the pair
 work is ~N²/K instead of N² (at 100 TB, K grows with N and each
-cluster's members fit one task; skewed clusters would take the same
-salting treatment as any skewed join key). Nothing collects to the
-driver.
+cluster's members fit one task; a skewed cluster is split like any
+skewed join key). Nothing collects to the driver.
 """
 
 from __future__ import annotations
@@ -68,9 +67,9 @@ def _pair_cosines(
     """SHAPE-INDEPENDENT per-pair cosines: einsum('id,jd->ij') reduces
     the dim axis per (vector, centroid) pair in a fixed order that
     does not depend on the batch size or the centroid subset handed in
-    (property-pinned in tests/test_round13.py), so every assignment
-    route — flat GEMM, hierarchical pruned, sharded — produces the
-    IDENTICAL float for any evaluated pair. A BLAS GEMM's blocked
+    (property-pinned in tests/test_semantic_assign.py), so every
+    assignment route — flat GEMM, hierarchical pruned, sharded —
+    produces the IDENTICAL float for any evaluated pair. A BLAS GEMM's blocked
     summation is shape-dependent: a subset product X[rows] @ C[mem].T
     can differ from the full product by ~1 ulp, enough to round a
     cosine sitting on a 1e-6 half-way point differently between
@@ -130,9 +129,9 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (assign_clusters_auto → the Arrow einsum GEMM with the
     # hier pruning) instead of the K-way crossJoin of interpreted
     # HOF cosines — the two engines' 6dp-rounded argmax is the
-    # pinned route-parity invariant (tests/test_round12/13/15 plus
-    # the r17 fixed-K pin in tests/test_round17.py), and the DuckDB
-    # oracle re-derives the same assignment relationally. Measured
+    # pinned route-parity invariant (tests/test_semantic_assign.py,
+    # including the fixed-K pin), and the DuckDB oracle re-derives
+    # the same assignment relationally. Measured
     # 2.34 → ~1.6 s warm at sf0.1; at scale the win is the r11/r12
     # FLOP analysis (N·K HOF evaluations → batched GEMM).
     assigned = assign_clusters_auto(
@@ -272,6 +271,47 @@ def scaled_k(n: int) -> int:
     return max(1, -(-n // TARGET_CLUSTER_SIZE))
 
 
+def _centroid_matrix(cents_rows: list) -> tuple:
+    """(cids, C, Cn) from cent_id-sorted (cent_id, cent) rows: the
+    refusals every assignment route shares. An empty list means the
+    embeddings table has no vec_id below the derived K. A zero-norm
+    centroid makes its cosine NaN; np.argmax would then return ITS
+    index for every vector (NaN propagates as max) while the pruned
+    routes would skip it, so every route refuses it identically."""
+    if not cents_rows:
+        raise ValueError(
+            "semantic-dedup assignment needs at least one centroid row "
+            "(empty cents_rows: the embeddings table has no vec_id "
+            "below the derived K — empty or id-sparse corpus)"
+        )
+    cids = np.asarray([int(r[0]) for r in cents_rows], dtype=np.int64)
+    C = np.asarray(
+        [[float(x) for x in r[1]] for r in cents_rows], dtype=np.float64
+    )
+    assert (np.diff(cids) > 0).all(), "centroids must be cent_id-sorted"
+    Cn = np.sqrt((C * C).sum(axis=1))
+    if not (Cn > 0).all():
+        raise ValueError("zero-norm centroid in semantic-dedup assignment")
+    return cids, C, Cn
+
+
+def _stack(embs: pd.Series) -> tuple:
+    """An Arrow batch of embeddings as an (n, dim) float64 matrix and
+    its row norms."""
+    X = np.stack(embs.to_numpy()).astype(np.float64)
+    return X, np.sqrt((X * X).sum(axis=1))
+
+
+def _cell_upper_bounds(
+    X: np.ndarray, nx: np.ndarray, Mu: np.ndarray, radius: np.ndarray
+) -> np.ndarray:
+    """(n, G) upper bound on cos(x, c) over the members c of each
+    coarse cell g (unit center Mu[g], angular radius radius[g]):
+    cos(max(θ_xg − r_g, 0)), the spherical triangle inequality."""
+    theta = np.arccos(np.clip((X / nx[:, None]) @ Mu.T, -1.0, 1.0))
+    return np.cos(np.maximum(theta - radius[None, :], 0.0))
+
+
 def _assign_clusters_arrow(emb: DataFrame, cents_rows: list) -> DataFrame:
     """(vec_id, embedding, cluster) via ONE Arrow GEMM pass — the
     ivf.assign_cells shape. The crossJoin-of-HOF-cosines form of
@@ -288,32 +328,14 @@ def _assign_clusters_arrow(emb: DataFrame, cents_rows: list) -> DataFrame:
     it (round-11 verdict ask 3)."""
     from pyspark.sql.functions import pandas_udf
 
-    if not cents_rows:
-        raise ValueError(
-            "semantic-dedup assignment needs at least one centroid row "
-            "(empty cents_rows: the embeddings table has no vec_id "
-            "below the derived K — empty or id-sparse corpus)"
-        )
-    cids = np.asarray([int(r[0]) for r in cents_rows], dtype=np.int64)
-    C = np.asarray(
-        [[float(x) for x in r[1]] for r in cents_rows], dtype=np.float64
-    )
-    assert (np.diff(cids) > 0).all(), "centroids must be cent_id-sorted"
-    Cn = np.sqrt((C * C).sum(axis=1))
-    if not (Cn > 0).all():
-        # a zero-norm centroid makes its cosine NaN; np.argmax would
-        # then return ITS index for every vector (NaN propagates as
-        # max) while the pruned route would skip it — degenerate input
-        # both routes refuse identically (r12 review)
-        raise ValueError("zero-norm centroid in semantic-dedup assignment")
+    cids, C, Cn = _centroid_matrix(cents_rows)
 
     @pandas_udf("long")
     def cluster_of(embs: pd.Series) -> pd.Series:
         if len(embs) == 0:  # empty Arrow batch: np.stack([]) raises
             return pd.Series([], dtype="int64")
-        X = np.stack(embs.to_numpy()).astype(np.float64)
-        n = np.sqrt((X * X).sum(axis=1))
-        r6 = _round6(_pair_cosines(X, n, C, Cn))
+        X, nx = _stack(embs)
+        r6 = _round6(_pair_cosines(X, nx, C, Cn))
         return pd.Series(cids[r6.argmax(axis=1)])
 
     return emb.withColumn("cluster", cluster_of(F.col("embedding")))
@@ -376,7 +398,7 @@ def _assign_clusters_hier(emb: DataFrame, cents_rows: list) -> DataFrame:
     GEMM on any corpus with nonzero-norm vectors, clustered or not
     (route-parity additionally test-pinned on the shipped corpora + a
     clustered one + a boundary-stress one + a two-level corpus where
-    pruning actually skips most cells, tests/test_round12.py;
+    pruning actually skips most cells, tests/test_semantic_assign.py;
     zero-norm CENTROIDS are refused identically by both routes, and a
     zero-norm VECTOR is outside the contract — the flat route's NaN
     argmax picks cids[0] for it, an input no real embedding table
@@ -407,26 +429,10 @@ def _assign_clusters_hier(emb: DataFrame, cents_rows: list) -> DataFrame:
     `_assign_clusters_sharded` (below) runs the SAME bound-pruned
     exact search with the centroid frame sharded per coarse cell —
     no K-row collect or broadcast anywhere, √K-bounded driver state,
-    bitwise result parity — built and measured in r13
-    (scripts/measure_sharded_assign.py, SURVEY §8)."""
+    bitwise result parity — built and measured in r13 (SURVEY §8)."""
     from pyspark.sql.functions import pandas_udf
 
-    if not cents_rows:
-        raise ValueError(
-            "semantic-dedup assignment needs at least one centroid row "
-            "(empty cents_rows: the embeddings table has no vec_id "
-            "below the derived K — empty or id-sparse corpus)"
-        )
-    cids = np.asarray([int(r[0]) for r in cents_rows], dtype=np.int64)
-    C = np.asarray(
-        [[float(x) for x in r[1]] for r in cents_rows], dtype=np.float64
-    )
-    assert (np.diff(cids) > 0).all(), "centroids must be cent_id-sorted"
-    Cn = np.sqrt((C * C).sum(axis=1))
-    if not (Cn > 0).all():
-        # same refusal as the flat route (whose NaN argmax would
-        # otherwise diverge from the pruned search on this input)
-        raise ValueError("zero-norm centroid in semantic-dedup assignment")
+    cids, C, Cn = _centroid_matrix(cents_rows)
     idx = _hier_coarse_index(cids, C)
     Mu, members, radius = idx["Mu"], idx["members"], idx["radius"]
     G = len(members)
@@ -435,12 +441,9 @@ def _assign_clusters_hier(emb: DataFrame, cents_rows: list) -> DataFrame:
     def cluster_of(embs: pd.Series) -> pd.Series:
         if len(embs) == 0:  # empty Arrow batch: np.stack([]) raises
             return pd.Series([], dtype="int64")
-        X = np.stack(embs.to_numpy()).astype(np.float64)
+        X, nx = _stack(embs)
         n = len(X)
-        nx = np.sqrt((X * X).sum(axis=1))
-        Xu = X / nx[:, None]
-        theta = np.arccos(np.clip(Xu @ Mu.T, -1.0, 1.0))  # (n, G)
-        ub = np.cos(np.maximum(theta - radius[None, :], 0.0))
+        ub = _cell_upper_bounds(X, nx, Mu, radius)  # (n, G)
         best_raw = np.full(n, -np.inf)
         best6 = np.full(n, -np.inf)
         best_cid = np.full(n, np.iinfo(np.int64).max)
@@ -478,14 +481,11 @@ def _assign_clusters_hier(emb: DataFrame, cents_rows: list) -> DataFrame:
     return emb.withColumn("cluster", cluster_of(F.col("embedding")))
 
 
-def _assign_clusters_sharded(
-    emb: DataFrame, cents: DataFrame, rounds: int = 4, salt: int = 1
-) -> DataFrame:
+def _assign_clusters_sharded(emb: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, embedding, cluster) with the centroid frame SHARDED
     per coarse cell — the escape past `_assign_clusters_hier`'s K-row
-    driver collect (r12 verdict ask 2, demonstrated + measured in
-    scripts/measure_sharded_assign.py / SURVEY §8). `cents` is a
-    DataFrame (cent_id, cent): it is never collected or broadcast
+    driver collect (r12 verdict ask 2, measured in SURVEY §8). `cents`
+    is a DataFrame (cent_id, cent): it is never collected or broadcast
     whole; the only driver-side artifacts are G = ceil(√K) coarse
     centers and their radii — bounded at √K rows no matter how large
     K grows, so K = 10⁸ centroids (N ~ 10¹⁰ docs at the N/64 policy)
@@ -493,15 +493,15 @@ def _assign_clusters_sharded(
 
     Same exactness contract as the hier route, distributed:
 
-    - coarse structure: G seed centers (smallest cent_ids, bounded
-      collect) refined by `rounds` Lloyd passes OVER THE CENTROID
-      FRAME (per-round: one K-row assignment job + a G·dim-row mean
-      collect, re-normalized driver-side — norm-weighted means, a
-      pruning-only difference from the driver route's unit-vector
-      means); each centroid's cell and its angle to the cell center
-      come back as columns, radii via groupBy(cell).max — coarse
-      structure affects only pruning, never the result, so this
-      distributed Lloyd needs no cross-engine determinism;
+    - coarse structure: the G smallest-cent_id centroids (bounded
+      collect) seed `train.lloyd_coarse_centroids` over the centroid
+      frame (one Spark job per round, exact int64 partials), then are
+      normalized on the driver; a center that trains to norm 0 keeps
+      its seed. Each centroid's cell and angle to the cell center
+      come back as columns, radii via groupBy(cell).max. Coarse
+      structure only orders and prunes the search — each radius is
+      measured from the cell's actual members — so any centers give
+      the same assignment;
     - phase A: every vector evaluates its top-upper-bound cell's
       members via a cell-cogrouped applyInPandas (vectors shuffled on
       their probe cell, centroid shard shuffled on its cell — no
@@ -518,8 +518,8 @@ def _assign_clusters_sharded(
     Every evaluated pair's cosine comes from `_pair_cosines` (shape-
     independent einsum), so this route returns BITWISE the cluster of
     the flat and hier routes on any corpus with nonzero-norm vectors
-    (parity pinned in tests/test_round13.py on the shipped, clustered,
-    two-level, and tie corpora, plus hypothesis sweeps).
+    (parity pinned in tests/test_semantic_assign.py on the shipped,
+    two-level, tie and hot-cell corpora, plus a hypothesis sweep).
 
     Cost shape: coarse pass O(N·G) + evaluated-member cogroups; on
     clustered corpora most vectors ship to ~1 cell. The honest worst
@@ -527,122 +527,66 @@ def _assign_clusters_sharded(
     per vector — N·√K (vec_id, embedding) rows shuffled — which is
     why the broadcastable-K regimes should stay on the hier route;
     this route exists for K past driver/broadcast scale, where there
-    is no flat alternative (measured both regimes, SURVEY §8). A
-    pathologically hot coarse cell (most vectors probing one cell's
-    shard) is an ordinary skewed-join-key problem, treated by
-    `salt` > 1 (r13 verdict ask 5): vectors carry
-    pmod(vec_id, salt), each cell's centroid shard is replicated once
-    per salt value, and both cogroups key on (cell, salt) — a hot
-    cell's vector population splits across `salt` tasks while every
-    vector still scores against the cell's FULL member set, so the
-    result is bitwise invariant in `salt` (pinned on a deliberately
-    hot-cell corpus in tests/test_round14.py). Cost: the shard side
-    is written `salt`× into the cogroup shuffle — size it to the
-    observed hot-cell excess, not defensively; the shipped corpora's
-    coarse cells are balanced, so the default stays 1."""
+    is no flat alternative (measured both regimes, SURVEY §8)."""
     from pyspark.sql.functions import pandas_udf
 
-    k = cents.count()
-    if k == 0:
-        raise ValueError(
-            "semantic-dedup assignment needs at least one centroid row "
-            "(empty centroid frame: the embeddings table has no vec_id "
-            "below the derived K — empty or id-sparse corpus)"
-        )
-    G = max(1, int(np.ceil(np.sqrt(k))))
-    seed_rows = cents.orderBy("cent_id").limit(G).collect()
-    M = np.asarray(
-        [[float(x) for x in r["cent"]] for r in seed_rows], dtype=np.float64
+    from data_framework_spark.similarity.train import lloyd_coarse_centroids
+
+    G = max(1, int(np.ceil(np.sqrt(cents.count()))))
+    _, seeds, seed_n = _centroid_matrix(
+        cents.orderBy("cent_id").limit(G).collect()
     )
-    Mn = np.sqrt((M * M).sum(axis=1))
-    if not (Mn > 0).all():
-        raise ValueError("zero-norm centroid in semantic-dedup assignment")
-    M = M / Mn[:, None]
-    dim = M.shape[1]
-
-    def _cell_and_angle(Mu: np.ndarray):
-        """Per-batch centroid → (cell, angle-to-center, unit vec)."""
-
-        @pandas_udf("struct<cell: int, ang: double>")
-        def f(cent: pd.Series) -> pd.DataFrame:
-            if len(cent) == 0:
-                return pd.DataFrame({"cell": [], "ang": []}).astype(
-                    {"cell": "int32", "ang": "float64"}
-                )
-            C = np.stack(cent.to_numpy()).astype(np.float64)
-            Cn = np.sqrt((C * C).sum(axis=1))
-            if not (Cn > 0).all():
-                # the flat/hier routes refuse this input identically
-                raise ValueError(
-                    "zero-norm centroid in semantic-dedup assignment"
-                )
-            Cu = C / Cn[:, None]
-            sim = np.clip(Cu @ Mu.T, -1.0, 1.0)
-            a = sim.argmax(axis=1)
-            ang = np.arccos(sim[np.arange(len(a)), a])
-            return pd.DataFrame(
-                {"cell": a.astype("int32"), "ang": ang.astype("float64")}
-            )
-
-        return f
-
-    # distributed spherical Lloyd over the centroid FRAME: per round,
-    # one K-row assignment job + a bounded G·dim mean collect
-    cents = cents.persist()
-    try:
-        for _ in range(rounds):
-            assigned = cents.withColumn(
-                "ca", _cell_and_angle(M)(F.col("cent"))
-            )
-            mean_rows = (
-                assigned.select(
-                    F.col("ca.cell").alias("cell"),
-                    F.posexplode("cent").alias("pos", "x"),
-                )
-                .groupBy("cell", "pos")
-                .agg(F.avg("x").alias("m"))
-                .collect()
-            )
-            newM = M.copy()
-            acc = np.zeros((G, dim))
-            seen = np.zeros(G, dtype=bool)
-            for r in mean_rows:
-                acc[r["cell"], r["pos"]] = float(r["m"])
-                seen[r["cell"]] = True
-            nrm = np.sqrt((acc * acc).sum(axis=1))
-            ok = seen & (nrm > 0)
-            newM[ok] = acc[ok] / nrm[ok, None]
-            M = newM
-
-        cmem = (
-            cents.withColumn("ca", _cell_and_angle(M)(F.col("cent")))
-            .select(
-                "cent_id", "cent", F.col("ca.cell").alias("cell"),
-                F.col("ca.ang").alias("ang"),
-            )
-            .localCheckpoint(eager=True)  # feeds radii + two cogroups
+    trained = np.asarray(
+        lloyd_coarse_centroids(
+            cents.select(F.col("cent").alias("embedding")), seeds.tolist()
         )
-    finally:
-        cents.unpersist()
+    )
+    trained_n = np.sqrt((trained * trained).sum(axis=1))
+    live_center = trained_n > 0
+    Mu = seeds / seed_n[:, None]
+    Mu[live_center] = trained[live_center] / trained_n[live_center, None]
+
+    @pandas_udf("struct<cell: int, ang: double>")
+    def cell_and_angle(cent: pd.Series) -> pd.DataFrame:
+        if len(cent) == 0:
+            return pd.DataFrame({"cell": [], "ang": []}).astype(
+                {"cell": "int32", "ang": "float64"}
+            )
+        C, Cn = _stack(cent)
+        if not (Cn > 0).all():
+            # the flat/hier routes refuse this input identically
+            raise ValueError("zero-norm centroid in semantic-dedup assignment")
+        sim = np.clip((C / Cn[:, None]) @ Mu.T, -1.0, 1.0)
+        a = sim.argmax(axis=1)
+        ang = np.arccos(sim[np.arange(len(a)), a])
+        return pd.DataFrame({"cell": a.astype("int32"), "ang": ang})
+
+    cmem = (
+        cents.withColumn("ca", cell_and_angle(F.col("cent")))
+        .select(
+            "cent_id", "cent", F.col("ca.cell").alias("cell"),
+            F.col("ca.ang").alias("ang"),
+        )
+        .localCheckpoint(eager=True)  # feeds radii + two cogroups
+    )
     rad_rows = cmem.groupBy("cell").agg(F.max("ang").alias("r")).collect()
     radius = np.zeros(G)
-    nonempty = np.zeros(G, dtype=bool)
+    live = np.zeros(G, dtype=bool)
     for r in rad_rows:
         radius[r["cell"]] = float(r["r"]) + 1e-7
-        nonempty[r["cell"]] = True
-    Mu, rad, live = M, radius, nonempty  # closure names
+        live[r["cell"]] = True
+
+    def live_bounds(embs: pd.Series) -> np.ndarray:
+        X, nx = _stack(embs)
+        ub = _cell_upper_bounds(X, nx, Mu, radius)
+        ub[:, ~live] = -np.inf
+        return ub
 
     @pandas_udf("int")
     def probe0(embs: pd.Series) -> pd.Series:
         if len(embs) == 0:
             return pd.Series([], dtype="int32")
-        X = np.stack(embs.to_numpy()).astype(np.float64)
-        nx = np.sqrt((X * X).sum(axis=1))
-        Xu = X / nx[:, None]
-        theta = np.arccos(np.clip(Xu @ Mu.T, -1.0, 1.0))
-        ub = np.cos(np.maximum(theta - rad[None, :], 0.0))
-        ub[:, ~live] = -np.inf
-        return pd.Series(ub.argmax(axis=1).astype("int32"))
+        return pd.Series(live_bounds(embs).argmax(axis=1).astype("int32"))
 
     def score_group(vecs: pd.DataFrame, mems: pd.DataFrame) -> pd.DataFrame:
         out = {
@@ -656,10 +600,8 @@ def _assign_clusters_sharded(
             return pd.DataFrame(out)
         order = np.argsort(mems["cent_id"].to_numpy(), kind="stable")
         cids_g = mems["cent_id"].to_numpy()[order]
-        Cg = np.stack(mems["cent"].to_numpy())[order].astype(np.float64)
-        Cgn = np.sqrt((Cg * Cg).sum(axis=1))
-        X = np.stack(vecs["embedding"].to_numpy()).astype(np.float64)
-        nx = np.sqrt((X * X).sum(axis=1))
+        Cg, Cgn = _stack(mems["cent"].iloc[order])
+        X, nx = _stack(vecs["embedding"])
         raw = _pair_cosines(X, nx, Cg, Cgn)
         r6 = _round6(raw)
         j = r6.argmax(axis=1)  # first max → smallest cid (sorted)
@@ -678,59 +620,33 @@ def _assign_clusters_sharded(
         "vec_id long, cell int, best6 double, best_cid long, "
         "best_raw double"
     )
-    if salt < 1:
-        raise ValueError(f"salt must be >= 1, got {salt}")
-    shard = cmem.select("cell", "cent_id", "cent")
-    if salt > 1:
-        # hot-cell escape: replicate each cell's shard per salt value
-        # so a hot cell's vectors split across `salt` cogroup tasks;
-        # every (cell, salt) group still holds the cell's FULL member
-        # set, so scores are bitwise invariant in `salt`
-        shard = shard.withColumn(
-            "salt",
-            F.explode(F.array(*[F.lit(s) for s in range(salt)])),
-        )
-    grp_keys = ["cell", "salt"] if salt > 1 else ["cell"]
+    shard = cmem.select("cell", "cent_id", "cent").groupBy("cell")
 
-    def _with_salt(df: DataFrame) -> DataFrame:
-        if salt == 1:
-            return df
-        return df.withColumn(
-            "salt", F.pmod(F.col("vec_id"), F.lit(salt)).cast("int")
+    def scored(vecs: DataFrame) -> DataFrame:
+        return vecs.groupBy("cell").cogroup(shard).applyInPandas(
+            score_group, score_schema
         )
 
-    vecs_a = _with_salt(emb.withColumn("cell", probe0(F.col("embedding"))))
-    phase_a = (
-        vecs_a.groupBy(*grp_keys)
-        .cogroup(shard.groupBy(*grp_keys))
-        .applyInPandas(lambda l, r: score_group(l, r), score_schema)
-        .localCheckpoint(eager=True)  # feeds phase-B bound + combine
-    )
+    phase_a = scored(
+        emb.withColumn("cell", probe0(F.col("embedding")))
+    ).localCheckpoint(eager=True)  # feeds phase-B bound + combine
 
     @pandas_udf("array<int>")
     def candidate_cells(embs: pd.Series, braw: pd.Series, g0: pd.Series) -> pd.Series:
         if len(embs) == 0:
             return pd.Series([], dtype="object")
-        X = np.stack(embs.to_numpy()).astype(np.float64)
-        nx = np.sqrt((X * X).sum(axis=1))
-        Xu = X / nx[:, None]
-        theta = np.arccos(np.clip(Xu @ Mu.T, -1.0, 1.0))
-        ub = np.cos(np.maximum(theta - rad[None, :], 0.0))
-        ub[:, ~live] = -np.inf
+        ub = live_bounds(embs)
         keep = ub >= (braw.to_numpy()[:, None] - 2e-6)
-        keep[np.arange(len(X)), g0.to_numpy()] = False  # already scored
+        keep[np.arange(len(ub)), g0.to_numpy()] = False  # already scored
         return pd.Series(
             [np.where(k)[0].astype("int32").tolist() for k in keep]
         )
 
-    cand_b = (
+    phase_b = scored(
         emb.join(
-            phase_a.select(
-                "vec_id", F.col("cell").alias("g0"), "best_raw"
-            ),
+            phase_a.select("vec_id", F.col("cell").alias("g0"), "best_raw"),
             "vec_id",
-        )
-        .select(
+        ).select(
             "vec_id",
             "embedding",
             F.explode(
@@ -739,12 +655,6 @@ def _assign_clusters_sharded(
                 )
             ).alias("cell"),
         )
-    )
-    phase_b = (
-        _with_salt(cand_b)
-        .groupBy(*grp_keys)
-        .cogroup(shard.groupBy(*grp_keys))
-        .applyInPandas(lambda l, r: score_group(l, r), score_schema)
     )
     best = (
         phase_a.select("vec_id", "best6", "best_cid")
@@ -769,7 +679,7 @@ def _assign_clusters_sharded(
 DRIVER_COLLECT_BUDGET_BYTES = 2 * 1024**3
 #: Measured Python-side resident cost per collected centroid row
 #: (64-dim float64 through Spark's Row path): 2610-2811 bytes/row,
-#: flat from K=50k to K=2M (scripts/measure_route_crossover.py, r15).
+#: flat from K=50k to K=2M (r15 crossover measurement, SURVEY §8).
 #: Pinned at the observed ceiling.
 CENT_ROW_DRIVER_BYTES = 2816
 #: The routing boundary: largest K the hier route takes. At this K
@@ -783,20 +693,15 @@ HIER_ROUTE_MAX_K = DRIVER_COLLECT_BUDGET_BYTES // CENT_ROW_DRIVER_BYTES
 def assign_clusters_auto(
     emb: DataFrame, cents: DataFrame, k: int | None = None
 ) -> DataFrame:
-    """Route selection between the two exact assignment engines (r14
-    verdict ask 5 — a test-pinned rule instead of two routes with a
-    prose caveat). The r14 crossover measurement settled that the
-    sharded route NEVER wins on wall clock where both routes run
-    (179 s vs 67 s at 200k vectors / K=3125 — its cogroup shuffles
-    cost more than the hier route's driver GEMMs at every K a driver
-    can hold), so the rule is a driver-MEMORY boundary, not a timing
-    heuristic: hier (K-row collect, ~2.7 KB/row measured) while
-    K <= HIER_ROUTE_MAX_K (~768k centroids ~ 2 GiB), sharded above,
-    where the collect would break the driver and there is no
-    alternative. Both engines return BITWISE the same assignment
-    (route parity pinned across r13/r14 suites and at this boundary
-    in tests/test_round15.py), so the switch can never change a
-    result hash — only who holds the centroids.
+    """Route selection between the two exact assignment engines by
+    driver memory, not timing: the r14 crossover measurement (SURVEY
+    §8) found the sharded route slower wherever both run (179 s vs
+    67 s at 200k vectors / K=3125). Hier (K-row collect) while
+    K <= HIER_ROUTE_MAX_K (~763k centroids ~ 2 GiB), sharded above,
+    where the collect would break the driver. Both engines return
+    BITWISE the same assignment (pinned at this boundary in
+    tests/test_semantic_assign.py), so the switch never changes a
+    result hash.
 
     `k` is the centroid count when the caller already knows it (the
     K~N/const policy derives it from a metadata count); None falls

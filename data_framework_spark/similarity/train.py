@@ -185,10 +185,15 @@ def lloyd_cents_cte(
     an `nrm (vec_id, embedding, n)` CTE is already defined. Each round
     is the exact mirror of one lloyd_coarse_centroids round: 9dp
     rounded-cosine argmax (ties to smallest cid), fixed-point BIGINT
-    sums, one double division, empty cells keep their centroid."""
+    sums, one double division, empty cells keep their centroid.
+
+    Each round's centroids and `{out}` are AS MATERIALIZED: the next
+    round reads its input twice and callers read `{out}` several
+    times, and DuckDB would otherwise re-run the whole chain behind
+    every reference."""
     fp = f"{FP_SCALE:.1f}"
     ctes = [
-        f"""{prefix}0 AS (
+        f"""{prefix}0 AS MATERIALIZED (
   SELECT vec_id::INTEGER AS cid,
          list_transform(embedding, x -> x::DOUBLE) AS cent
   FROM {rel} WHERE vec_id < {ncells}
@@ -227,11 +232,11 @@ def lloyd_cents_cte(
   SELECT cell, list(sv::DOUBLE / (nn * {fp}) ORDER BY pos) AS cent
   FROM {prefix}s{r} GROUP BY cell
 ),
-{prefix}{r} AS (
+{prefix}{r} AS MATERIALIZED (
   SELECT c.cid, coalesce(m.cent, c.cent) AS cent
   FROM {p} c LEFT JOIN {prefix}m{r} m ON m.cell = c.cid
 )""")
-    ctes.append(f"""{out} AS (
+    ctes.append(f"""{out} AS MATERIALIZED (
   SELECT cid, cent AS embedding,
          sqrt(list_sum(list_transform(cent, x -> x * x))) AS cn
   FROM {prefix}{rounds}
@@ -253,9 +258,10 @@ def lloyd_books_cte(
     subspace, csub) with csub a DOUBLE list); `{parts}` must be a CTE
     of (vec_id, subspace, sub). Mirrors lloyd_subspace_books: 9dp
     squared-L2 argmin (ties to smallest code), fixed-point sums,
-    empty codes keep their entry."""
+    empty codes keep their entry. Materialized as in lloyd_cents_cte;
+    every round reads `{parts}`, so callers materialize it too."""
     fp = f"{FP_SCALE:.1f}"
-    ctes = [f"{prefix}0 AS (\n{seed_cte}\n)"]
+    ctes = [f"{prefix}0 AS MATERIALIZED (\n{seed_cte}\n)"]
     for r in range(1, rounds + 1):
         p = f"{prefix}{r - 1}"
         sqd = (
@@ -285,12 +291,13 @@ def lloyd_books_cte(
   SELECT subspace, code, list(sv::DOUBLE / (nn * {fp}) ORDER BY pos) AS csub
   FROM {prefix}s{r} GROUP BY subspace, code
 ),
-{prefix}{r} AS (
+{prefix}{r} AS MATERIALIZED (
   SELECT c.subspace, c.cid, coalesce(m.csub, c.csub) AS csub
   FROM {p} c LEFT JOIN {prefix}m{r} m
     ON m.subspace = c.subspace AND m.code = c.cid
 )""")
     ctes.append(
-        f"{out} AS (\n  SELECT cid, subspace, csub FROM {prefix}{rounds}\n)"
+        f"{out} AS MATERIALIZED (\n"
+        f"  SELECT cid, subspace, csub FROM {prefix}{rounds}\n)"
     )
     return ",\n".join(ctes)

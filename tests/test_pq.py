@@ -297,7 +297,8 @@ def test_pq_books_trees_are_per_file_and_plan(
 
 def test_unreadable_books_file_is_retrained(spark, cache_root, trainings):
     """A tree whose books.npy cannot be loaded is never served: the
-    caller retrains."""
+    caller retrains and replaces the tree, so the next session
+    reloads the retrained books instead of training again."""
     from data_framework_spark import artifacts
     from data_framework_spark.similarity import pq
     from data_framework_spark.sources.tables import load_table
@@ -309,6 +310,9 @@ def test_unreadable_books_file_is_retrained(spark, cache_root, trainings):
     artifacts.evict(spark, "pq_books")
     assert np.array_equal(pq.trained_codebooks(emb), books)
     assert len(trainings) == 2
+    artifacts.evict(spark, "pq_books")
+    assert np.array_equal(pq.trained_codebooks(emb), books)
+    assert len(trainings) == 2  # reloaded from the replaced tree
 
 
 def test_plan_fp_failure_degrades_to_retrain_only(

@@ -78,50 +78,3 @@ def test_scalar_fns_single_hour_type_matches_oracle(spark, tmp_path):
     assert _digest(srows, scols) == _digest(drows, dcols)
 
 
-# --- trained-codebook cache: derived frames don't alias the corpus -----------
-
-
-# --- scaled-dedup assignment: Arrow GEMM route equals the HOF join route -----
-
-
-def test_assign_clusters_arrow_equals_hof_route(spark):
-    """The K~N/const variant swaps the contract's crossJoin-of-HOF-
-    cosines assignment for one Arrow GEMM pass (the crossJoin form
-    measured 58× at 10× rows). Both routes implement the same
-    arithmetic contract — cosine rounded half-away to 6dp, argmax ties
-    to the smallest cent_id — so on identical inputs the (vec_id →
-    cluster) map must agree EXACTLY; 6dp rounding absorbs the
-    GEMM-vs-fold ulp gap (the established minhash/train.py precedent).
-    Run on the full sf0.001 corpus with two centroid counts, including
-    a non-contiguous probe that exercises the cid indirection."""
-    from pyspark.sql import functions as F
-
-    from data_framework_spark.similarity.semantic import (
-        _assign_clusters,
-        _assign_clusters_arrow,
-    )
-    from data_framework_spark.sources.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    for pred in ("vec_id < 8", "vec_id % 37 = 3"):  # contiguous + sparse cids
-        rows = (
-            emb.filter(pred)
-            .select("vec_id", "embedding")
-            .orderBy("vec_id")
-            .collect()
-        )
-        cents = spark.createDataFrame(
-            [(int(r[0]), list(r[1])) for r in rows],
-            "cent_id long, cent array<float>",
-        ).select("cent_id", F.col("cent").cast("array<float>").alias("cent"))
-        hof = {
-            r["vec_id"]: r["cluster"]
-            for r in _assign_clusters(emb, cents).collect()
-        }
-        gemm = {
-            r["vec_id"]: r["cluster"]
-            for r in _assign_clusters_arrow(emb, rows).collect()
-        }
-        assert hof == gemm and len(hof) == 500

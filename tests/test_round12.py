@@ -1,6 +1,8 @@
-"""Round-12 tests: the r12 rotation window arithmetic, the K=256 PQ
-codebook adoption invariants and the hierarchical semantic-dedup
-assignment parity. The BPE trainer pins live in tests/test_bpe.py."""
+"""Round-12 tests: the hier semantic-dedup assignment route on its
+two_level and tie corpora and its refusals, the K=256 PQ codebook
+adoption invariants and the distributed CCL. The BPE trainer pins
+live in tests/test_bpe.py; the other assignment pins, and the corpora
+and route helpers used here, in tests/test_semantic_assign.py."""
 
 from __future__ import annotations
 
@@ -10,196 +12,59 @@ import os
 import numpy as np
 import pytest
 
-
-# --- hierarchical assignment: exact parity with the flat GEMM route ----------
-
-
-def _route_maps(spark, emb, cents_rows):
-    from data_framework_spark.similarity.semantic import (
-        _assign_clusters_arrow,
-        _assign_clusters_hier,
-    )
-
-    flat = {
-        r["vec_id"]: r["cluster"]
-        for r in _assign_clusters_arrow(emb, cents_rows).collect()
-    }
-    hier = {
-        r["vec_id"]: r["cluster"]
-        for r in _assign_clusters_hier(emb, cents_rows).collect()
-    }
-    return flat, hier
+from tests.test_semantic_assign import (
+    ZERO_IN_SEEDS,
+    ZERO_PAST_SEEDS,
+    _assign,
+    _emb,
+    _refusal_emb,
+    _route_maps,
+    _tie,
+    _two_level,
+)
 
 
-def test_assign_clusters_hier_equals_flat_on_shipped_corpus(spark):
-    """The hierarchical coarse-over-centroids route is EXACT by
-    construction (bound-based pruning with a 2e-6 margin, not
-    nprobe-truncation), so on identical inputs the (vec_id → cluster)
-    map must equal the flat Arrow GEMM's — on the shipped isotropic
-    corpus, where every bound is loose and pruning degenerates (the
-    honest worst case), with both a contiguous and a sparse cid set.
-
-    Residual boundary condition RETIRED in r13: both routes now
-    compute member cosines through the shared `_pair_cosines` einsum
-    reduction, which is shape-independent (subset == full slice,
-    property-pinned in test_round13.py), so evaluated-pair fp
-    identity holds by construction — the empirical pins across four
-    corpora and two cid layouts remain as regression coverage."""
-    from pyspark.sql import functions as F
-
-    from data_framework_spark.sources.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    for pred in ("vec_id < 8", "vec_id % 37 = 3"):
-        cents_rows = (
-            emb.filter(pred)
-            .select("vec_id", "embedding")
-            .orderBy("vec_id")
-            .collect()
-        )
-        flat, hier = _route_maps(spark, emb, cents_rows)
-        assert flat == hier and len(flat) == 500, pred
-
-
-def test_assign_clusters_hier_equals_flat_on_clustered_corpus(spark):
-    """On a CLUSTERED corpus — the regime the hierarchical route
-    exists for, where the coarse bounds actually prune — parity must
-    still be exact, and every vector must land on its planted
-    cluster's centroid (sanity that the corpus really is clustered).
-    Deterministic construction: 24 well-separated unit anchors from an
-    orthogonal-ish basis, 60 members each with tiny fixed
-    perturbations."""
-    rng_free = []  # deterministic, no RNG: perturbation from index math
-    dim, n_anchor, per = 64, 24, 60
-    anchors = np.zeros((n_anchor, dim))
-    for a in range(n_anchor):
-        anchors[a, a % dim] = 1.0
-        anchors[a, (a * 7 + 11) % dim] = 0.5 if a % 2 else -0.5
-    anchors /= np.sqrt((anchors * anchors).sum(axis=1))[:, None]
-    rows = []
-    vid = 0
-    for a in range(n_anchor):
-        for j in range(per):
-            v = anchors[a].copy()
-            v[(a + j) % dim] += 0.02 + 0.001 * (j % 7)
-            v[(a + 3 * j + 1) % dim] -= 0.015
-            rows.append((vid, [float(x) for x in v]))
-            rng_free.append(a)
-            vid += 1
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    # centroids = the anchors themselves, one per planted cluster
-    cents_rows = [(a, [float(x) for x in anchors[a]]) for a in range(n_anchor)]
-    flat, hier = _route_maps(spark, emb, cents_rows)
-    assert flat == hier and len(flat) == n_anchor * per
-    planted = {i: rng_free[i] for i in range(len(rng_free))}
-    mis = {v: (hier[v], planted[v]) for v in hier if hier[v] != planted[v]}
-    assert not mis, f"clustered corpus not recovered: {list(mis.items())[:5]}"
+# --- hier assignment: parity with the flat GEMM, refusals --------------------
 
 
 def test_assign_clusters_hier_equals_flat_on_tie_corpus(spark):
-    """Exact-tie stress: duplicated centroids (identical vectors under
-    different cent_ids) make the 6dp-rounded cosines EXACTLY equal, so
-    the ties-to-smallest-cid convention decides every assignment; and
-    vectors exactly equal to a centroid exercise the cos=1.0 edge.
-    Both routes must pick the identical (smallest) winner."""
-    dim = 64
-    base = np.zeros(dim)
-    base[0] = 1.0
-    other = np.zeros(dim)
-    other[1] = 1.0
-    # cent 0, 2 identical; cent 1 identical to 0 scaled (same cosine)
-    cents_rows = [
-        (0, [float(x) for x in base]),
-        (1, [float(x) for x in base * 2.5]),
-        (2, [float(x) for x in base]),
-        (5, [float(x) for x in other]),
-    ]
-    rows = []
-    for i in range(40):
-        v = base.copy() if i % 2 == 0 else other.copy()
-        v[(i * 3) % dim] += 1e-3 * (i % 5)
-        rows.append((i, [float(x) for x in v]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    flat, hier = _route_maps(spark, emb, cents_rows)
-    assert flat == hier and len(flat) == 40
-    # the duplicated-centroid ties must resolve to cent_id 0, never 1/2
-    assert 1 not in set(flat.values()) and 2 not in set(flat.values())
+    """Exact ties: duplicated centroids make the 6dp cosines EXACTLY
+    equal, so ties-to-smallest-cid decides every assignment; vectors
+    equal to a centroid exercise the cos = 1.0 edge. Both routes must
+    return the planted map (cent 0 for even ids, 5 for odd)."""
+    X, cents_rows, planted = _tie()
+    flat, hier = _route_maps(spark, _emb(spark, X), cents_rows, ("flat", "hier"))
+    assert flat == hier == planted
 
 
 def test_assign_clusters_hier_equals_flat_where_pruning_engages(spark):
-    """Parity in the regime the route EXISTS for: a two-level
-    topic/subtopic corpus (the measure_hier_assign construction) where
-    the coarse bounds genuinely skip most cells (measured
-    evaluated-pair fraction ~0.17 at this shape) — so equality here
-    certifies the PRUNED search path, not a degenerate
-    scan-everything run. Seeded RNG, deterministic."""
-    import numpy as np
-
-    dim, k, n = 64, 16, 512
-    s = 4
-    rng = np.random.default_rng(20260816)
-    supers = rng.standard_normal((s, dim))
-    supers /= np.sqrt((supers * supers).sum(axis=1))[:, None]
-    subs = supers[np.arange(k) % s] + 0.045 * rng.standard_normal((k, dim))
-    subs /= np.sqrt((subs * subs).sum(axis=1))[:, None]
-    X = subs[np.arange(n) % k] + 0.02 * rng.standard_normal((n, dim))
-    rows = [(i, [float(x) for x in X[i]]) for i in range(n)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cents_rows = (
-        emb.filter("vec_id < 16")
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    )
-    flat, hier = _route_maps(spark, emb, cents_rows)
-    assert flat == hier and len(flat) == n
-    # sanity that the corpus really has the two-level structure the
-    # pruning needs: driver-side replica reports the evaluated share
-    from scripts.measure_hier_assign import pruned_fraction
-
-    C = np.asarray(
-        [[float(v) for v in r["embedding"]] for r in cents_rows]
-    )
-    cids = np.asarray([int(r["vec_id"]) for r in cents_rows])
-    frac = pruned_fraction(C, cids, X)
-    assert frac < 0.6, frac  # most pairs skipped → pruned path exercised
+    """Parity in the regime the route exists for: the two_level corpus,
+    where the coarse bounds skip most cells
+    (`test_two_level_corpus_engages_pruning`), so equality certifies
+    the pruned search, not a scan of every cell."""
+    X, cents_rows, _ = _two_level()
+    flat, hier = _route_maps(spark, _emb(spark, X), cents_rows, ("flat", "hier"))
+    assert flat == hier and len(flat) == len(X)
 
 
 def test_zero_norm_centroid_refused_by_both_routes(spark):
     """A zero-norm centroid would make the flat route's NaN argmax
     pick IT for every vector while the pruned route skips it — both
     routes refuse the degenerate input identically instead."""
-    from data_framework_spark.similarity.semantic import (
-        _assign_clusters_arrow,
-        _assign_clusters_hier,
-    )
-
-    rows = [(i, [float(i + 1)] * 4) for i in range(8)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cents = [(0, [0.0] * 4), (1, [1.0] * 4)]
-    for route in (_assign_clusters_arrow, _assign_clusters_hier):
-        with pytest.raises(ValueError, match="zero-norm"):
-            route(emb, cents)
+    emb = _refusal_emb(spark)
+    for route in ("flat", "hier"):
+        for cents_rows in (ZERO_IN_SEEDS, ZERO_PAST_SEEDS):
+            with pytest.raises(ValueError, match="zero-norm"):
+                _assign(spark, route, emb, cents_rows)
 
 
 def test_assign_clusters_empty_centroids_raise(spark):
-    """Degenerate input (r11 advisory): an empty centroid list must
-    fail with a clear ValueError on BOTH routes, not an AxisError from
-    a shape-(0,) reduction on the driver."""
-    from data_framework_spark.similarity.semantic import (
-        _assign_clusters_arrow,
-        _assign_clusters_hier,
-    )
-    from data_framework_spark.sources.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    for route in (_assign_clusters_arrow, _assign_clusters_hier):
+    """An empty centroid list fails with a clear ValueError on both
+    routes, not an AxisError from a shape-(0,) reduction."""
+    emb = _refusal_emb(spark)
+    for route in ("flat", "hier"):
         with pytest.raises(ValueError, match="centroid"):
-            route(emb, [])
+            _assign(spark, route, emb, [])
 
 
 # --- K=256 codebooks: the adopted operating point -----------------------------
@@ -301,44 +166,6 @@ def test_distributed_flood_matches_kernel(spark):
 
 
 # --- property-based parity for the r12 components -----------------------------
-
-
-@pytest.mark.slow  # r18: >10 s; slow lane (see pytest.ini)
-def test_hier_assignment_matches_flat_random_corpora(spark):
-    """Hier-vs-flat route parity over randomized corpora and centroid
-    counts — beyond the four fixed corpora: random geometry lands
-    cosines at arbitrary distances from the 6dp grid and random K
-    exercises coarse-cell counts from 1 to √K>3."""
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    @given(st.data())
-    @settings(
-        max_examples=10,
-        deadline=None,
-        suppress_health_check=[HealthCheck.function_scoped_fixture],
-    )
-    def run(data):
-        n = data.draw(st.integers(12, 60))
-        dim = data.draw(st.sampled_from([4, 8, 16]))
-        k = data.draw(st.integers(1, min(n, 14)))
-        seed = data.draw(st.integers(0, 2**31 - 1))
-        rng = np.random.default_rng(seed)
-        X = rng.standard_normal((n, dim))
-        rows = [(i, [float(x) for x in X[i]]) for i in range(n)]
-        emb = spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>"
-        )
-        cents_rows = (
-            emb.filter(f"vec_id < {k}")
-            .select("vec_id", "embedding")
-            .orderBy("vec_id")
-            .collect()
-        )
-        flat, hier = _route_maps(spark, emb, cents_rows)
-        assert flat == hier and len(flat) == n, (seed, n, dim, k)
-
-    run()
 
 
 def test_distributed_label_matches_kernel_random_masks(spark):

@@ -283,74 +283,6 @@ def test_family_upstream_missing_columns_refused(spark):
         )
 
 
-# --- sharded-assignment salting escape (r13 verdict ask 5) --------------------
-
-
-@pytest.mark.slow  # r18: >10 s; slow lane (see pytest.ini)
-def test_sharded_salting_bitwise_invariant_on_hot_cell(spark):
-    """The wired hot-coarse-cell escape: a corpus where (by
-    construction) virtually every vector probes ONE coarse cell —
-    the skew regime the salting exists for — must yield BITWISE the
-    same (vec_id → cluster) map at salt 1, 3, and 4, and equal the
-    flat in-driver route. Every (cell, salt) cogroup still scores the
-    cell's full member set, so salt is a pure partitioning knob."""
-    import numpy as np
-
-    from data_framework_spark.similarity.semantic import (
-        _assign_clusters_arrow,
-        _assign_clusters_sharded,
-    )
-
-    dim, k, n = 64, 16, 400
-    rng = np.random.default_rng(20260814)
-    hot = np.zeros(dim)
-    hot[0] = 1.0
-    # all centroids AND all vectors in one tight cap around `hot`:
-    # G = ceil(sqrt(16)) = 4 coarse cells, but everything lands in the
-    # cap's cell — a maximally hot cogroup key
-    C = hot[None, :] + 0.01 * rng.standard_normal((k, dim))
-    C /= np.sqrt((C * C).sum(axis=1))[:, None]
-    X = C[np.arange(n) % k] + 0.004 * rng.standard_normal((n, dim))
-    cents_rows = [(i, [float(x) for x in C[i]]) for i in range(k)]
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in X[i]]) for i in range(n)],
-        "vec_id long, embedding array<float>",
-    )
-    cents_df = spark.createDataFrame(
-        cents_rows, "cent_id long, cent array<double>"
-    )
-    flat = {
-        r["vec_id"]: r["cluster"]
-        for r in _assign_clusters_arrow(emb, cents_rows).collect()
-    }
-    maps = {}
-    for s in (1, 3, 4):
-        maps[s] = {
-            r["vec_id"]: r["cluster"]
-            for r in _assign_clusters_sharded(emb, cents_df, salt=s).collect()
-        }
-        assert len(maps[s]) == n
-    assert maps[1] == maps[3] == maps[4] == flat
-
-
-def test_sharded_salting_rejects_bad_salt(spark):
-    import numpy as np
-    import pytest as _pytest
-
-    from data_framework_spark.similarity.semantic import (
-        _assign_clusters_sharded,
-    )
-
-    emb = spark.createDataFrame(
-        [(0, [1.0] * 8)], "vec_id long, embedding array<float>"
-    )
-    cents = spark.createDataFrame(
-        [(0, [1.0] * 8)], "cent_id long, cent array<double>"
-    )
-    with _pytest.raises(ValueError, match="salt"):
-        _assign_clusters_sharded(emb, cents, salt=0).collect()
-
-
 # --- refine-shortlist R ~ pool/10 policy (r13 verdict ask 3) ------------------
 
 
@@ -402,53 +334,6 @@ def test_refine_r_sql_matches_python_policy():
 # tests/test_round15.py::test_r15_verify_window_arithmetic — each
 # round's window replaces the previous round's arithmetic pin (the
 # r13 -> r14 precedent).
-
-
-@pytest.mark.slow  # r18: >10 s; slow lane (see pytest.ini)
-def test_sharded_salting_randomized_sweep(spark):
-    """Randomized geometries (isotropic, clustered, mixed-norm) ×
-    salt ∈ {1, 2, 5}: the salted sharded route must equal the flat
-    in-driver route on every corpus — the r13 deep-sweep precedent
-    applied to the r14 salting escape."""
-    import numpy as np
-
-    from data_framework_spark.similarity.semantic import (
-        _assign_clusters_arrow,
-        _assign_clusters_sharded,
-    )
-
-    for seed in range(4):
-        rng = np.random.default_rng(20260816 + seed)
-        n, k, dim = 150 + 50 * seed, 9 + seed, 16
-        if seed % 2:
-            centers = rng.standard_normal((3, dim))
-            X = centers[rng.integers(0, 3, n)] + 0.05 * rng.standard_normal(
-                (n, dim)
-            )
-        else:
-            X = rng.standard_normal((n, dim))
-        X *= rng.uniform(0.2, 5.0, size=(n, 1))  # mixed norms
-        C = X[:k] * rng.uniform(0.5, 2.0, size=(k, 1))
-        cents_rows = [(i, [float(x) for x in C[i]]) for i in range(k)]
-        emb = spark.createDataFrame(
-            [(i, [float(x) for x in X[i]]) for i in range(n)],
-            "vec_id long, embedding array<float>",
-        )
-        cents_df = spark.createDataFrame(
-            cents_rows, "cent_id long, cent array<double>"
-        )
-        flat = {
-            r["vec_id"]: r["cluster"]
-            for r in _assign_clusters_arrow(emb, cents_rows).collect()
-        }
-        for s in (1, 2, 5):
-            got = {
-                r["vec_id"]: r["cluster"]
-                for r in _assign_clusters_sharded(
-                    emb, cents_df, salt=s
-                ).collect()
-            }
-            assert got == flat and len(got) == n, (seed, s)
 
 
 def test_persistent_index_same_session_param_change_not_served(cache_root):

@@ -79,91 +79,6 @@ def test_forgotten_fmt_bump_cannot_serve_stale_index(
     assert open(os.path.join(d2, "payload.txt")).read() == "2"
 
 
-# --- hier-vs-sharded auto routing (r14 verdict ask 5) -------------------------
-
-
-def _route_spies(monkeypatch):
-    """Wrap both assignment engines with call recorders."""
-    from data_framework_spark.similarity import semantic as sem
-
-    calls = []
-    orig_hier, orig_shard = sem._assign_clusters_hier, sem._assign_clusters_sharded
-
-    def hier(*a, **kw):
-        calls.append("hier")
-        return orig_hier(*a, **kw)
-
-    def shard(*a, **kw):
-        calls.append("sharded")
-        return orig_shard(*a, **kw)
-
-    monkeypatch.setattr(sem, "_assign_clusters_hier", hier)
-    monkeypatch.setattr(sem, "_assign_clusters_sharded", shard)
-    return calls
-
-
-def test_route_cap_arithmetic_pinned():
-    """The routing boundary is derived, not tuned: a 2 GiB driver
-    budget over the measured 2816-bytes/row collect cost
-    (scripts/measure_route_crossover.py: 2610-2811 B/row, flat from
-    K=50k to 2M). Changing either constant must change this pin
-    consciously."""
-    from data_framework_spark.similarity import semantic as sem
-
-    assert sem.DRIVER_COLLECT_BUDGET_BYTES == 2 * 1024**3
-    assert sem.CENT_ROW_DRIVER_BYTES == 2816
-    assert (
-        sem.HIER_ROUTE_MAX_K
-        == sem.DRIVER_COLLECT_BUDGET_BYTES // sem.CENT_ROW_DRIVER_BYTES
-        == 762_600
-    )
-
-
-def test_auto_route_parity_at_boundary(spark, monkeypatch):
-    """One K, both sides of the cap: with the cap set to K the auto
-    route must take hier; at K-1 it must take sharded; the two
-    assignments must be BITWISE identical (so the routing rule can
-    never change a result hash)."""
-    from pyspark.sql import functions as F
-
-    from data_framework_spark.similarity import semantic as sem
-    from data_framework_spark.sources.tables import load_table
-
-    emb = load_table(spark, SF_SMALL, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    k = sem.scaled_k(emb.count())  # 8 at sf0.001 (500 rows / 64)
-    cents = emb.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent")
-    )
-    calls = _route_spies(monkeypatch)
-
-    monkeypatch.setattr(sem, "HIER_ROUTE_MAX_K", k)
-    via_hier = {
-        r["vec_id"]: r["cluster"]
-        for r in sem.assign_clusters_auto(emb, cents, k=k).collect()
-    }
-    monkeypatch.setattr(sem, "HIER_ROUTE_MAX_K", k - 1)
-    via_sharded = {
-        r["vec_id"]: r["cluster"]
-        for r in sem.assign_clusters_auto(emb, cents, k=k).collect()
-    }
-    assert calls == ["hier", "sharded"]  # the rule actually switched
-    assert via_hier == via_sharded  # and the switch is invisible
-    assert len(via_hier) == 500
-
-
-def test_scaled_dedup_routes_hier_below_cap(spark, monkeypatch):
-    """Every shipped SF sits far below HIER_ROUTE_MAX_K, so the
-    driver-checked scaled query must route hier (the faster engine
-    everywhere both run — the r14 crossover measurement)."""
-    from data_framework_spark.similarity import semantic as sem
-
-    calls = _route_spies(monkeypatch)
-    sem.q_semantic_dedup_scaled(spark, SF_SMALL).collect()
-    assert calls == ["hier"]
-
-
 # --- r15 verify-window rotation (r14 verdict ask 1) ---------------------------
 
 

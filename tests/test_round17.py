@@ -16,93 +16,6 @@ SF01 = "/root/testdata/sf0.01"
 
 
 @pytest.mark.slow  # r18: sf0.01 double-run pin; slow lane
-class TestSemanticDedupKernel:
-    def test_routed_assignment_matches_hof_route_fixed_k(self, spark):
-        """q_semantic_dedup/q_cluster_purity now assign via
-        assign_clusters_auto at the contract's fixed K; the old
-        crossJoin-of-HOF-cosines route must agree exactly."""
-        from pyspark.sql import functions as F
-
-        import data_framework_spark.similarity.semantic as SM
-        from data_framework_spark.sources.tables import load_table
-
-        emb = load_table(spark, SF01, "embeddings").select(
-            "vec_id", "embedding"
-        )
-        old = (
-            SM._assign_clusters(emb)
-            .select("vec_id", "cluster")
-            .collect()
-        )
-        new = (
-            SM.assign_clusters_auto(
-                emb, SM._seed_centroids(emb), k=SM.K_CLUSTERS
-            )
-            .select("vec_id", "cluster")
-            .collect()
-        )
-        assert sorted(map(tuple, old)) == sorted(map(tuple, new))
-
-    def test_cluster_dedup_counts_matches_join_tail(self, spark):
-        """The cluster-cogrouped dup-accounting kernel must reproduce
-        the former self-join + distinct + left-join + aggregate tail
-        row-for-row."""
-        from pyspark.sql import functions as F
-
-        import data_framework_spark.similarity.semantic as SM
-        from data_framework_spark.similarity.ann import dot, l2_norm
-        from data_framework_spark.sources.tables import load_table
-
-        emb = load_table(spark, SF01, "embeddings").select(
-            "vec_id", "embedding"
-        )
-        assigned = SM.assign_clusters_auto(
-            emb, SM._seed_centroids(emb), k=SM.K_CLUSTERS
-        )
-        with_norm = assigned.withColumn("nrm", l2_norm(F.col("embedding")))
-        a = with_norm.select(
-            F.col("cluster"),
-            F.col("vec_id").alias("a_id"),
-            F.col("embedding").alias("a_vec"),
-            F.col("nrm").alias("a_nrm"),
-        )
-        b = with_norm.select(
-            F.col("cluster"),
-            F.col("vec_id").alias("b_id"),
-            F.col("embedding").alias("b_vec"),
-            F.col("nrm").alias("b_nrm"),
-        )
-        pair_cos = dot(F.col("a_vec"), F.col("b_vec")) / (
-            F.col("a_nrm") * F.col("b_nrm")
-        )
-        dup_ids = (
-            a.join(b, "cluster")
-            .filter(F.col("a_id") < F.col("b_id"))
-            .filter(F.round(pair_cos, 6) >= SM.DUP_COS)
-            .select("cluster", F.col("b_id").alias("vec_id"))
-            .distinct()
-        )
-        old = (
-            assigned.join(
-                dup_ids.withColumn("is_dup", F.lit(1)),
-                ["cluster", "vec_id"],
-                "left",
-            )
-            .groupBy("cluster")
-            .agg(
-                F.count(F.lit(1)).alias("n_members"),
-                F.sum(
-                    F.coalesce(F.col("is_dup"), F.lit(0))
-                ).alias("n_removed"),
-            )
-            .orderBy("cluster")
-            .collect()
-        )
-        new = SM._cluster_dedup_counts(assigned).collect()
-        assert [tuple(r) for r in old] == [tuple(r) for r in new]
-
-
-@pytest.mark.slow  # r18: sf0.01 double-run pin; slow lane
 class TestDedupClustersLocalFinish:
     def test_local_finish_matches_distributed_tail(self, spark):
         """When the CC small-graph gate routes driver-side,
