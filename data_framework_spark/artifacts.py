@@ -5,8 +5,8 @@ Two shapes of reuse share it:
 
 - `get_or_build(spark, kind, key, build, src=None)` returns the entry
   for (kind, key), calling `build()` on a miss. Trained tokenizers and
-  codebooks, index components read back to the driver and small
-  persisted route results are entries of this kind.
+  codebooks and small persisted route results are entries of this
+  kind.
 - `hold(spark, kind, df)` persists `df` as the one live frame of
   `kind`. A query whose lazy result reads a persisted frame cannot
   release it itself, so the next call of the same query does.

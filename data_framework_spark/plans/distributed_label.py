@@ -30,7 +30,7 @@ first-encountered pixel IS its minimum pid — so ranking roots (= min
 pids) ascending reproduces the single-tile labels EXACTLY on any
 grid where both routes run (pinned in tests/test_round12.py; the
 oversized 4096² run is digest-verified against driver-side numpy in
-scripts/measure_distributed_label.py).
+SURVEY.md §8, round-12 changelog).
 
 Cost shape at 100 TB: one grid-sized shuffle onto tile keys, one
 bounded kernel pass per tile, boundary-sized stitching, and a
@@ -165,8 +165,8 @@ CONTRACT_TILE = 128
 
 def q_distributed_label_contract(spark, sf_dir: str) -> DataFrame:
     """HASH-CHECKED contract for the tile-stitch CCL route (r12
-    verdict ask 5 — the 4096² digest run in
-    scripts/measure_distributed_label.py proved the route standalone;
+    verdict ask 5 — the 4096² digest run recorded in SURVEY.md §8,
+    round-12 changelog, proved the route standalone;
     this puts a driver row on it every window it rotates through).
 
     Input: a deterministic procedural 384×384 mask — set where

@@ -23,13 +23,13 @@ one-line change once the semantics are wanted.
 Regime split (r11 measured; r11 verdict ask 5): the per-timestep
 single-tile kernels here are the right plan up to the measured ~4M
 cells/timestep applyInPandas ceiling (0.8 GB/group pandas +
-parallelism collapse past it — scripts/measure_raster_scaling.py).
+parallelism collapse past it — SURVEY.md §8, round-11 changelog).
 Past the ceiling each stencil has a demonstrated distributed escape:
 Gaussian smoothing → the halo tile runner (plans/tile_kernel.py
 tile_apply_halo, sub-linear in timesteps AND grid area), flood/label
 → the tile-stitch CCL (plans/distributed_label.py — label-identical
 to kernels/ndimage.label, digest-verified at 4096² = 16.8M cells,
-scripts/measure_distributed_label.py). The null/separatrix kernels
+SURVEY.md §8, round-12 changelog). The null/separatrix kernels
 stay single-tile by the reference's own working-set contract (one
 timestep of one variable is ITS unit too), with per-t parallelism as
 the scale axis.

@@ -42,6 +42,8 @@ lists. ncells scales as ~sqrt(N) with a trained quantizer.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 
@@ -50,6 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from data_framework_spark.similarity.ann import cosine
+from data_framework_spark.sources.formats import load_index_array
 from data_framework_spark.sources.tables import (
     collect_bounded,
     load_table,
@@ -57,7 +60,7 @@ from data_framework_spark.sources.tables import (
 )
 
 #: Bound on a persisted index's coarse quantizer, checked when its
-#: centroids are collected to the driver. ncells grows as ~sqrt(N), so
+#: centroids are loaded on the driver. ncells grows as ~sqrt(N), so
 #: 65,536 cells cover a corpus of ~4 billion vectors.
 MAX_CELLS = 1 << 16
 
@@ -194,29 +197,22 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- persistable IVF index --------------------------------------------------
 
-# The index build/reuse story every production vector pipeline needs
-# (round-6 verdict stretch): the coarse quantizer and the assigned
-# inverted lists are written to parquet once, then any number of
-# later sessions reload and search without re-running assignment.
-# The inverted lists are written partitionBy("cell") — at scale a
-# probe of nprobe/ncells cells becomes a directory-pruned read
-# instead of a full index scan, the same layout win as
-# q_partitioned_prune_roundtrip.
+# Built once, searched by any later session without re-running
+# assignment. The small coarse quantizer is an .npy file the driver
+# loads with no Spark job; the inverted lists are Parquet written
+# partitionBy("cell"), so at scale a probe of nprobe/ncells cells is
+# a directory-pruned read instead of a full index scan.
 
 
 def ivf_index_write(
     emb: DataFrame, path: str, id_col: str, vec_col: str, ncells: int
 ) -> None:
-    """Build the IVF index and persist it: `{path}/centroids` (cid,
-    embedding) and `{path}/lists` (c_id, c_vec, cell) partitioned by
-    cell."""
+    """Build the IVF index and persist it: `{path}/centroids.npy`, the
+    (ncells, dim) coarse quantizer in cid order, and `{path}/lists`
+    (c_id, c_vec, cell) partitioned by cell."""
     cents = _centroid_rows(emb, ncells)
-    spark = emb.sparkSession
-    cent_df = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cid int, embedding array<double>",
-    )
-    cent_df.write.mode("overwrite").parquet(f"{path}/centroids")
+    os.makedirs(path, exist_ok=True)
+    np.save(f"{path}/centroids.npy", np.asarray(cents, dtype=np.float64))
     (
         assign_cells(emb, cents)
         .select(
@@ -228,16 +224,30 @@ def ivf_index_write(
     )
 
 
-def ivf_index_read(spark: SparkSession, path: str) -> tuple[list, DataFrame]:
-    """Reload a persisted IVF index: (centroid list in cid order,
-    inverted-lists DataFrame). The centroid fetch is a bounded
-    ncells-row collect; the lists load is a lazy partitioned scan."""
-    cent_rows = collect_bounded(
-        read_parquet(spark, f"{path}/centroids"), MAX_CELLS, "cid"
+def _index_array(path: str, shape: tuple) -> np.ndarray:
+    """formats.load_index_array for a search path, which cannot go on
+    without the array: a missing, empty, truncated or mis-shaped file
+    is refused with a pointer to the rebuild."""
+    arr = load_index_array(path, shape)
+    if arr is None:
+        raise ValueError(
+            f"{path} is missing, empty, truncated or mis-shaped: the "
+            "index is incomplete; rebuild it (delete the directory)"
+        )
+    return arr
+
+
+def ivf_index_read(
+    spark: SparkSession, path: str
+) -> tuple[np.ndarray, DataFrame]:
+    """Reload a persisted IVF index: (centroids in cid order,
+    inverted-lists DataFrame). The centroids load starts no Spark job
+    and refuses more than MAX_CELLS rows; the lists load is a lazy
+    partitioned scan."""
+    cents = _index_array(
+        f"{path}/centroids.npy", (range(1, MAX_CELLS + 1), None)
     )
-    cents = [[float(x) for x in r["embedding"]] for r in cent_rows]
-    lists = read_parquet(spark, f"{path}/lists")
-    return cents, lists
+    return cents, read_parquet(spark, f"{path}/lists")
 
 
 def ivf_topk_from_index(
@@ -261,7 +271,7 @@ IVF_INDEX_PREFIX = "ivf_index_"
 
 #: Bump on any ivf_index_write semantics change the params below
 #: don't capture (the persistent cross-session cache keys on these).
-IVF_INDEX_FMT = 1
+IVF_INDEX_FMT = 2
 
 
 def q_ivf_persist_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

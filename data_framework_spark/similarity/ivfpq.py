@@ -14,10 +14,10 @@ per-subspace codebooks spend their 256 entries on the remaining
 variance (IVFADC's central idea).
 
 Index layout on disk (`ivfpq_index_write`):
-- `{path}/centroids`  — (cid, embedding): the coarse quantizer.
-- `{path}/pq_books`   — (subspace, code, vec): the residual
-  codebooks, PQ_M × PQ_K bounded rows.
-- `{path}/codes`      — (vec_id, subspace, code) partitioned by
+- `{path}/centroids.npy` — the (ncells, dim) coarse quantizer.
+- `{path}/books.npy`     — the (PQ_M, K', dim/PQ_M) residual
+  codebooks, K' ≤ PQ_K.
+- `{path}/codes`         — (vec_id, subspace, code) partitioned by
   `cell`: ~M small ints per corpus vector, the 32×-compressed
   representation. partitionBy("cell") makes an nprobe-cell probe a
   DIRECTORY-PRUNED read, the same layout win as the plain IVF index.
@@ -57,6 +57,7 @@ ncells ~ sqrt(N) growth.
 from __future__ import annotations
 
 import math
+import os
 
 from typing import Iterator
 
@@ -66,10 +67,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from data_framework_spark import artifacts
 from data_framework_spark.similarity.ivf import (
     MAX_CELLS,
     _centroid_rows,
+    _index_array,
     _rounded_centroid_cosines,
 )
 from data_framework_spark.similarity.pq import (
@@ -184,11 +185,12 @@ def ivfpq_index_write(
     """Build and persist the composed index: Lloyd-TRAINED coarse
     centroids (seeded from the first `ncells` vectors, COARSE_ROUNDS
     fixed-point rounds — see similarity/train.py for the cross-engine
-    exactness design), Lloyd-trained residual PQ codebooks, and the
-    cell-partitioned code lists. Training replaced the sampled
-    stand-ins in round 10: the r9 nprobe curve hash-pinned cell
-    coverage as the binding recall constraint, and trained cells are
-    the coverage lever (measured deltas in SURVEY §8)."""
+    exactness design) as `centroids.npy`, Lloyd-trained residual PQ
+    codebooks as `books.npy`, and the cell-partitioned code lists.
+    Training replaced the sampled stand-ins in round 10: the r9 nprobe
+    curve hash-pinned cell coverage as the binding recall constraint,
+    and trained cells are the coverage lever (measured deltas in
+    SURVEY §8)."""
     # both round counts read at CALL time from the train module so an
     # experiment overriding one cannot silently leave the other at its
     # def-time default (a mixed 2-coarse/1-book build measures ADC
@@ -199,17 +201,11 @@ def ivfpq_index_write(
         lloyd_subspace_books,
     )
 
-    spark = emb.sparkSession
-    # a rebuild at a reused path must not be answered from the
-    # components this session loaded from the previous build
-    artifacts.evict(spark, "ivfpq_components", key=path)
     cents = lloyd_coarse_centroids(
         emb, _centroid_rows(emb, ncells), train.COARSE_ROUNDS
     )
-    spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cid int, embedding array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
+    os.makedirs(path, exist_ok=True)
+    np.save(f"{path}/centroids.npy", np.asarray(cents, dtype=np.float64))
 
     res = assign_and_residual(emb, cents).persist()
     try:
@@ -219,14 +215,7 @@ def ivfpq_index_write(
             _residual_codebooks(res, ncells),
             train.BOOK_ROUNDS,
         )
-        spark.createDataFrame(
-            [
-                (s, k, [float(x) for x in books[s][k]])
-                for s in range(PQ_M)
-                for k in range(books.shape[1])  # K' ≤ PQ_K, small corpora
-            ],
-            "subspace int, code int, vec array<double>",
-        ).write.mode("overwrite").parquet(f"{path}/pq_books")
+        np.save(f"{path}/books.npy", books)
         (
             assign_pq_codes(
                 res.select("vec_id", F.col("residual").alias("embedding")),
@@ -251,54 +240,17 @@ def ivfpq_index_write(
         res.unpersist()
 
 
-# The bounded driver-side components (ncells centroid rows + PQ_M·PQ_K
-# codebook rows) are a session artifact per index path, the same
-# load-once posture production index serving has. Registry-routed
-# paths are CONTENT-ADDRESSED (persistent_index_dir folds the data
-# fingerprint, build knobs and builder-source hash into the directory
-# name), so any change moves the path; a direct ivfpq_index_write to
-# a reused path evicts the path's entry itself. The per-query ADC
-# work (query collect, LUT build, codes scan, scoring plan) is NOT
-# cached and re-executes every call (r18, VERDICT item 10 — the
-# repeated 2-collect reload was ~0.2 s of driver job latency on every
-# ivfpq-family query).
-
-
-def _load_index_driver_side(spark: SparkSession, path: str):
-    """(cents, books): the two bounded index components every search
-    needs driver-side — session-cached per content-addressed path."""
-    return artifacts.get_or_build(
-        spark, "ivfpq_components", path, lambda: _read_components(spark, path)
+def ivfpq_index_read(path: str) -> tuple[np.ndarray, np.ndarray]:
+    """(centroids, residual codebooks) of the index at `path`, the two
+    bounded components every search needs on the driver. Loading
+    them starts no Spark job, so nothing is cached: a rebuild at a
+    reused path is read afresh by the next search."""
+    return (
+        _index_array(
+            f"{path}/centroids.npy", (range(1, MAX_CELLS + 1), PQ_M * _SUB)
+        ),
+        _index_array(f"{path}/books.npy", (PQ_M, range(1, PQ_K + 1), _SUB)),
     )
-
-
-def _read_components(spark: SparkSession, path: str):
-    cent_rows = collect_bounded(
-        read_parquet(spark, f"{path}/centroids"), MAX_CELLS, "cid"
-    )
-    cents = [[float(x) for x in r["embedding"]] for r in cent_rows]
-    book_rows = read_parquet(spark, f"{path}/pq_books").collect()
-    if not book_rows:
-        raise ValueError(
-            f"{path}/pq_books is empty — index missing or partially "
-            "written; rebuild with build_ivfpq_index"
-        )
-    kk = max(r["code"] for r in book_rows) + 1  # K' ≤ PQ_K
-    # validate the (subspace, code) grid is dense: a partially written
-    # index must fail loudly, not silently shrink the codebook (r12
-    # advisory)
-    got = {(r["subspace"], r["code"]) for r in book_rows}
-    want = {(s, k) for s in range(PQ_M) for k in range(kk)}
-    if got != want:
-        raise ValueError(
-            f"{path}/pq_books is incomplete: expected a dense "
-            f"{PQ_M}x{kk} (subspace, code) grid, missing "
-            f"{len(want - got)} slots — rebuild with build_ivfpq_index"
-        )
-    books = np.zeros((PQ_M, kk, _SUB), dtype=np.float64)
-    for r in book_rows:
-        books[r["subspace"], r["code"]] = [float(x) for x in r["vec"]]
-    return cents, books
 
 
 def _adc_lut(cents: list, books: np.ndarray, queries: list, nprobe: int):
@@ -368,7 +320,7 @@ def ivfpq_topk_from_index(
     """ADC search against a RELOADED index: per (query, probed cell)
     the residual lookup table, broadcast into the codes join; the
     scan reads only the probed cells' code lists."""
-    cents, books = _load_index_driver_side(spark, path)
+    cents, books = ivfpq_index_read(path)
     lut = _adc_lut(cents, books, queries, nprobe)
     lut_df = spark.createDataFrame(
         lut[["query_id", "cell", "subspace", "dlooks"]],
@@ -427,7 +379,7 @@ IVFPQ_INDEX_PREFIX = "ivfpq_index_"
 #: knob params below (seed convention, residual arithmetic, layout) —
 #: the persistent cross-session cache keys on these, and a stale
 #: persisted index must be unreachable after a build-code change.
-IVFPQ_INDEX_FMT = 1
+IVFPQ_INDEX_FMT = 2
 
 
 def session_ivfpq_index(
@@ -959,12 +911,18 @@ def q_ivfpq_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     exact_rows = [
         (r["query_id"], r["neighbor_id"])
-        for r in exact_l2_topk(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .collect()
+        for r in collect_bounded(
+            exact_l2_topk(spark, sf_dir).select(
+                F.struct("query_id", "rank").alias("key"),
+                "query_id",
+                "neighbor_id",
+            ),
+            IVFPQ_NQ * IVFPQ_K,
+            "key",
+        )
     ]
     max_n = max(IVFPQ_NPROBE_SWEEP)
-    cents, books = _load_index_driver_side(spark, path)
+    cents, books = ivfpq_index_read(path)
     lut = _adc_lut(cents, books, queries, max_n)
     lut_df = spark.createDataFrame(
         lut,
@@ -1022,11 +980,14 @@ def q_ivfpq_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     nids = sorted({nid for _, nid in exact_rows})
     cell_of = {
         r["vec_id"]: int(r["cell"])
-        for r in read_parquet(spark, f"{path}/codes")
-        .select("vec_id", "cell")
-        .distinct()
-        .filter(F.col("vec_id").isin(nids))
-        .collect()
+        for r in collect_bounded(
+            read_parquet(spark, f"{path}/codes")
+            .select("vec_id", "cell")
+            .distinct()
+            .filter(F.col("vec_id").isin(nids)),
+            len(nids),
+            "vec_id",
+        )
     }
     # a partially-written/corrupt index can miss an exact neighbor's
     # assignment row; fail with a diagnostic, not a bare KeyError

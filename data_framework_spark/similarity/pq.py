@@ -131,8 +131,8 @@ def trained_codebooks(emb: DataFrame) -> np.ndarray:
     plans share one training run. A session miss reloads the books a
     previous session persisted under `persistent_index_dir(file,
     PQ_BOOKS_PREFIX + <stable plan fp>, ...)`, or trains and persists
-    them; a tree whose `books.npy` is unreadable or mis-shaped is
-    never served: it is deleted and rebuilt with retrained books.
+    them; a tree whose `books.npy` is unreadable, empty or mis-shaped
+    is never served: it is deleted and rebuilt with retrained books.
     Multi-file frames, non-file frames and a plan without a stable
     fingerprint retrain and persist nothing."""
     from urllib.parse import urlparse
@@ -140,6 +140,7 @@ def trained_codebooks(emb: DataFrame) -> np.ndarray:
     from data_framework_spark.similarity import train
     from data_framework_spark.sources.formats import (
         build_source_fp,
+        load_index_array,
         persistent_index_dir,
     )
 
@@ -175,7 +176,9 @@ def trained_codebooks(emb: DataFrame) -> np.ndarray:
             )
 
         d = tree()
-        books = _load_books(d)
+        books = load_index_array(
+            f"{d}/books.npy", (PQ_M, range(1, PQ_K + 1), _SUB)
+        )
         if books is None:
             # the manifest still vouches for the tree: drop it so the
             # retrained books replace the bad file
@@ -187,18 +190,6 @@ def trained_codebooks(emb: DataFrame) -> np.ndarray:
     return artifacts.get_or_build(
         emb.sparkSession, "pq_books", key, build, src=local
     )
-
-
-def _load_books(d: str) -> np.ndarray | None:
-    """The codebooks persisted in tree `d`, or None when its books.npy
-    is unreadable or mis-shaped."""
-    try:
-        books = np.load(f"{d}/books.npy")
-    except (OSError, ValueError):
-        return None
-    if books.ndim != 3 or (books.shape[0], books.shape[2]) != (PQ_M, _SUB):
-        return None
-    return books
 
 
 def _stable_plan_fp(df: DataFrame) -> str | None:

@@ -23,6 +23,8 @@ import os
 import shutil
 import tempfile
 
+import numpy as np
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -309,6 +311,26 @@ def get_index_dir(sf_dir: str, prefix: str) -> str | None:
         except (OSError, ValueError):
             continue
     return None
+
+
+def load_index_array(path: str, shape: tuple) -> np.ndarray | None:
+    """The float64 array an index build saved at `path` with np.save,
+    or None when the file is missing, unreadable or truncated, or its
+    shape does not fit `shape`. `shape` gives each axis its exact
+    length, a `range` of allowed lengths, or None for any length of at
+    least 1; no axis may be empty. The shape is checked on the
+    memory-mapped header, so an oversized file is refused unread."""
+    try:
+        arr = np.load(path, mmap_mode="r")
+    except (OSError, ValueError, EOFError):
+        return None
+    if arr.ndim != len(shape) or not all(
+        n >= 1
+        and (want is None or n == want or isinstance(want, range) and n in want)
+        for n, want in zip(arr.shape, shape)
+    ):
+        return None
+    return np.array(arr, dtype=np.float64)
 
 
 def write_csv(df: DataFrame, path: str) -> None:

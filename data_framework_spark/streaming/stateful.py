@@ -176,13 +176,13 @@ def run_stateful_to_completion(
     captured at stream start and restored afterwards. At production
     cardinality this knob scales up with keys, not data volume —
     MEASURED, not assumed: on a 10x-keys corpus (15k users, 1M rows;
-    scripts/measure_streaming_scale.py) user-totals runs 11.1 s at 8
+    SURVEY.md §8, round-15 changelog) user-totals runs 11.1 s at 8
     partitions, 8.1 at 16, 6.6 at 32. The shipped SFs stay at the
     defaults; re-derive the knob from key cardinality when deploying
     against a real stream.
 
     Two fixed harness cuts (hashes verified unchanged on all four
-    replay queries, scripts/ablate_streaming.py): NO-DATA micro-
+    replay queries, SURVEY.md §8, round-15 changelog): NO-DATA micro-
     batches are disabled for the run — they exist to advance the
     watermark for state eviction and outer-join/appendable-window
     emission, none of which a bounded inner-join/update-mode replay

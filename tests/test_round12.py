@@ -1,13 +1,12 @@
 """Round-12 tests: the hier semantic-dedup assignment route on its
-two_level and tie corpora and its refusals, the K=256 PQ codebook
-adoption invariants and the distributed CCL. The BPE trainer pins
-live in tests/test_bpe.py; the other assignment pins, and the corpora
-and route helpers used here, in tests/test_semantic_assign.py."""
+two_level and tie corpora and its refusals, and the distributed CCL.
+The K=256 refine-recall pin lives in tests/test_ivfpq.py, the BPE
+trainer pins in tests/test_bpe.py; the other assignment pins, and the
+corpora and route helpers used here, in tests/test_semantic_assign.py."""
 
 from __future__ import annotations
 
 import json
-import os
 
 import numpy as np
 import pytest
@@ -65,35 +64,6 @@ def test_assign_clusters_empty_centroids_raise(spark):
     for route in ("flat", "hier"):
         with pytest.raises(ValueError, match="centroid"):
             _assign(spark, route, emb, [])
-
-
-# --- K=256 codebooks: the adopted operating point -----------------------------
-
-
-def test_k256_refine_recall_sits_at_coverage_ceiling(spark):
-    """The round-12 headline, re-pinned over the r13 operating point
-    (32 cells / refine nprobe=16): with 8-bit codebooks the refine
-    route's recall EQUALS its nprobe coverage ceiling (r13 measured
-    0.99/0.96/1.00 at sf0.001/0.01/0.1) — the ADC shortlist drops no
-    covered true neighbor before the exact re-rank. Pinned at the
-    test SF against the sweep row matching IVFPQ_REFINE_NPROBE; a
-    future K/M/nprobe change that reopens the ADC-ranking gap fails
-    here and must re-measure."""
-    from data_framework_spark.similarity.ivfpq import (
-        IVFPQ_REFINE_NPROBE,
-        q_ivfpq_nprobe_curve,
-        q_ivfpq_refine_recall,
-    )
-    from data_framework_spark.similarity.pq import PQ_K
-
-    assert PQ_K == 256  # the r12 adoption; comments/floors assume it
-    sf = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-    refine = q_ivfpq_refine_recall(spark, sf).collect()[0]
-    curve = {r["nprobe"]: r for r in q_ivfpq_nprobe_curve(spark, sf).collect()}
-    assert refine["meets_floor"]
-    assert refine["recall"] == pytest.approx(
-        curve[IVFPQ_REFINE_NPROBE]["coverage"], abs=1e-9
-    )
 
 
 # --- distributed CCL: label-identical to the single-tile kernel --------------

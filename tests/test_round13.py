@@ -1,8 +1,9 @@
 """Round-13 additions: the sharded semantic-dedup assignment route on
 its two_level and tie corpora and its refusals, and the r12 advisory
-guards (ivfpq partial-index refusal, distributed-label coordinate
-contract). The other assignment pins, and the corpora and route
-helpers used here, live in tests/test_semantic_assign.py."""
+distributed-label coordinate contract. The other assignment pins, and
+the corpora and route helpers used here, live in
+tests/test_semantic_assign.py; the IVF-PQ component refusals in
+tests/test_ivfpq.py."""
 
 from __future__ import annotations
 
@@ -57,88 +58,6 @@ def test_sharded_refuses_degenerate_inputs(spark):
         _assign(spark, "sharded", emb, ZERO_IN_SEEDS).collect()
     with pytest.raises(Exception, match="zero-norm"):
         _assign(spark, "sharded", emb, ZERO_PAST_SEEDS).collect()
-
-
-# --- ivfpq partial-index refusal (r12 advisory) -------------------------------
-
-
-def test_ivfpq_empty_books_dir_fails_loudly(spark, tmp_path):
-    """An index dir whose pq_books is empty must raise a clear
-    rebuild-pointing error, not a bare 'max() arg is an empty
-    sequence'."""
-    from data_framework_spark.similarity.ivfpq import (
-        _load_index_driver_side,
-    )
-
-    path = str(tmp_path / "idx")
-    spark.createDataFrame(
-        [(0, [1.0, 0.0])], "cid int, embedding array<double>"
-    ).write.parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [], "subspace int, code int, vec array<double>"
-    ).write.parquet(f"{path}/pq_books")
-    with pytest.raises(ValueError, match="empty"):
-        _load_index_driver_side(spark, path)
-
-
-def test_ivfpq_partial_books_fail_loudly(spark, tmp_path):
-    """A partially written pq_books (a missing (subspace, code) slot)
-    must refuse to load rather than silently shrinking the codebook to
-    max(code)+1 with zero-filled holes."""
-    from data_framework_spark.similarity.ivfpq import (
-        PQ_M,
-        _load_index_driver_side,
-    )
-
-    path = str(tmp_path / "idx2")
-    spark.createDataFrame(
-        [(0, [1.0, 0.0])], "cid int, embedding array<double>"
-    ).write.parquet(f"{path}/centroids")
-    # dense grid for codes 0..1 across all subspaces, minus one slot
-    rows = [
-        (s, c, [0.1 * s, 0.2 * c])
-        for s in range(PQ_M)
-        for c in range(2)
-        if not (s == 1 and c == 1)
-    ]
-    spark.createDataFrame(
-        rows, "subspace int, code int, vec array<double>"
-    ).write.parquet(f"{path}/pq_books")
-    with pytest.raises(ValueError, match="incomplete"):
-        _load_index_driver_side(spark, path)
-
-
-def test_ivfpq_rebuild_at_reused_path_serves_new_components(spark, tmp_path):
-    """Rebuilding an index at a path this session already searched
-    must serve the NEW build's centroids, not the session-cached
-    components of the old one (ivfpq_index_write drops the entry)."""
-    from data_framework_spark.similarity.ivfpq import (
-        _load_index_driver_side,
-        ivfpq_index_write,
-    )
-
-    rng = np.random.default_rng(5)
-    path = str(tmp_path / "idx")
-
-    def build(offset: float) -> list:
-        emb = spark.createDataFrame(
-            [
-                (vid, [float(x) for x in rng.normal(size=64) + offset])
-                for vid in range(60)
-            ],
-            "vec_id long, embedding array<float>",
-        )
-        ivfpq_index_write(emb, path, ncells=4)
-        return _load_index_driver_side(spark, path)[0]
-
-    old = build(0.0)
-    new = build(10.0)
-    on_disk = [
-        [float(x) for x in r["embedding"]]
-        for r in spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
-    ]
-    assert new == on_disk
-    assert new != old
 
 
 # --- distributed-label coordinate contract (r12 advisory) ---------------------

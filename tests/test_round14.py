@@ -3,7 +3,8 @@
 session-first-call Lloyd retrain was the suite's only structurally
 growing cold cost; a fresh session now RELOADS a persisted index
 whose source fingerprint and build knobs match), plus the integral
-`div` tile keys in the distributed CCL (r13 advisory)."""
+`div` tile keys in the distributed CCL (r13 advisory). The IVF-PQ
+reload and refine-shortlist pins live in tests/test_ivfpq.py."""
 
 from __future__ import annotations
 
@@ -11,8 +12,6 @@ import json
 import os
 import shutil
 import struct
-
-import pytest
 
 from tests.conftest import SF_SMALL
 
@@ -106,44 +105,6 @@ def test_persistent_index_corrupt_manifest_rebuilds(cache_root):
         params={"fmt": 1},
     )
     assert p2 == p1 and len(builds) == 2  # same digest path, rebuilt
-
-
-@pytest.mark.slow  # r18: >9 s; slow lane (see pytest.ini)
-def test_ivfpq_reload_path_matches_build_path(spark, cache_root):
-    """Query-level contract for ask 2: q_ivfpq_persist_topk answered
-    from a RELOADED persistent index (fresh-session simulation) must
-    return exactly the rows the building session returned — the
-    hashes-can-never-change property of reload-not-retrain."""
-    from data_framework_spark import artifacts
-    from data_framework_spark.similarity.ann import evict_route
-    from data_framework_spark.similarity.ivfpq import q_ivfpq_persist_topk
-
-    built = [tuple(r) for r in q_ivfpq_persist_topk(spark, SF_SMALL).collect()]
-    assert built
-    # what a fresh session would not have: the cached route result and
-    # the driver-side index components
-    evict_route(spark, SF_SMALL, "ivfpq_topk")
-    artifacts.evict(spark, "ivfpq_components")
-    reloaded = [
-        tuple(r) for r in q_ivfpq_persist_topk(spark, SF_SMALL).collect()
-    ]
-    assert reloaded == built
-
-
-@pytest.mark.slow  # r18: >10 s; slow lane (see pytest.ini)
-def test_ivfpq_stale_cache_unreachable_after_fmt_bump(spark, cache_root, monkeypatch):
-    """Bumping IVFPQ_INDEX_FMT (the build-code-change discipline) must
-    diverge the digest so the persisted pre-bump index is never
-    served."""
-    from data_framework_spark.similarity import ivfpq
-    from data_framework_spark.sources.formats import get_index_dir
-
-    ivfpq.q_ivfpq_persist_topk(spark, SF_SMALL).collect()
-    p1 = get_index_dir(SF_SMALL, ivfpq.IVFPQ_INDEX_PREFIX)
-    assert p1 is not None
-    monkeypatch.setattr(ivfpq, "IVFPQ_INDEX_FMT", ivfpq.IVFPQ_INDEX_FMT + 1)
-    p2 = ivfpq.session_ivfpq_index(spark, SF_SMALL)
-    assert p2 != p1
 
 
 # --- shared island-family upstream (r13 verdict ask 4) -----------------------
@@ -281,50 +242,6 @@ def test_family_upstream_missing_columns_refused(spark):
         find_structures(
             ds, "b1", "b2", smoothing=1, multi_t=True, upstream=bad
         )
-
-
-# --- refine-shortlist R ~ pool/10 policy (r13 verdict ask 3) ------------------
-
-
-def test_refine_shortlist_r_values():
-    """The wired policy's pinned operating points: shipped SFs stay at
-    the 100 floor (hashes unchanged), the 10x/100x corpora get the
-    1000/10000-row shortlists that recover their recall (measured
-    0.80 -> 1.00 and 0.50 -> 1.00, SURVEY §8 r14), and the cap binds
-    at extreme N where scan-fraction, not shortlist, is the lever."""
-    from data_framework_spark.similarity.ivfpq import (
-        IVFPQ_REFINE_R_CAP,
-        refine_shortlist_r,
-    )
-
-    assert refine_shortlist_r(500) == 100
-    assert refine_shortlist_r(2000) == 100
-    assert refine_shortlist_r(20000) == 1000
-    assert refine_shortlist_r(200000) == 10000
-    assert refine_shortlist_r(10**9) == IVFPQ_REFINE_R_CAP
-
-
-@pytest.mark.slow  # r18: >10 s; slow lane (see pytest.ini)
-def test_refine_r_sql_matches_python_policy():
-    """The oracle's count(*)-derived R expression must yield the exact
-    integer refine_shortlist_r computes, for counts spanning the
-    floor, the live band, and the cap — the hash-divergence property
-    the wiring relies on."""
-    import duckdb
-
-    from data_framework_spark.similarity.ivfpq import (
-        _REFINE_R_SQL,
-        refine_shortlist_r,
-    )
-
-    con = duckdb.connect()
-    for n in (1, 7, 500, 2000, 3200, 3201, 20000, 199999, 524288, 10**9):
-        con.execute("DROP TABLE IF EXISTS embeddings")
-        con.execute(
-            f"CREATE TABLE embeddings AS SELECT * FROM range({n}) t(vec_id)"
-        )
-        got = con.execute(f"SELECT {_REFINE_R_SQL}").fetchone()[0]
-        assert got == refine_shortlist_r(n), n
 
 
 # --- r14 verify-window rotation (r13 verdict ask 1) ---------------------------

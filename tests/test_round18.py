@@ -254,34 +254,6 @@ class TestFunnelRestructure:
         assert new == old
 
 
-class TestIvfpqCodesLayout:
-    def test_one_file_per_cell(self, spark):
-        """The r18 repartition("cell") before the partitioned codes
-        write must keep the persisted layout at ≤1 parquet file per
-        cell — the r17 widened build fanned it to ~tasks×cells tiny
-        files, which every warm ADC scan re-paid (measured 409-903
-        files; A/B: fragmented layout costs +0.2-0.4 s per ADC query
-        and ~2x on the codes distinct scan)."""
-        import os
-
-        from data_framework_spark.similarity import ivfpq as M
-
-        path = M.session_ivfpq_index(spark, SF001)
-        cells = [
-            d
-            for d in os.listdir(os.path.join(path, "codes"))
-            if d.startswith("cell=")
-        ]
-        assert cells, "no cell partitions written"
-        for d in cells:
-            files = [
-                f
-                for f in os.listdir(os.path.join(path, "codes", d))
-                if f.endswith(".parquet")
-            ]
-            assert len(files) == 1, f"{d}: {len(files)} files"
-
-
 class TestClustersRoutedFlag:
     def test_flag_matches_route(self, spark):
         """connected_components_routed must report driver_side=True

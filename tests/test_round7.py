@@ -200,58 +200,6 @@ def test_pagerank_lsh_edges_match_exact(spark, sf_dir):
     assert len(exact) > 0
 
 
-# --- persistable IVF index ------------------------------------------------
-
-
-def test_ivf_index_reload_matches_in_memory_build(spark, sf_dir, tmp_path):
-    """An index written to parquet and reloaded must search to exactly
-    the in-memory build's results (same _probe_and_score tail; the
-    roundtrip only moves the assignment through the partitioned
-    layout)."""
-    from data_framework_spark.similarity.ivf import (
-        ivf_index_write,
-        ivf_topk,
-        ivf_topk_from_index,
-    )
-    from data_framework_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    mem = ivf_topk(emb, queries, "vec_id", "embedding", k=5, ncells=16, nprobe=4)
-    path = str(tmp_path / "ivf")
-    ivf_index_write(emb, path, "vec_id", "embedding", ncells=16)
-    disk = ivf_topk_from_index(
-        spark, path, queries, "vec_id", "embedding", k=5, nprobe=4
-    )
-    assert sorted(map(tuple, mem.collect())) == sorted(map(tuple, disk.collect()))
-    # the on-disk inverted lists are cell-partitioned (directory-
-    # prunable at scale)
-    import os
-
-    assert any(d.startswith("cell=") for d in os.listdir(f"{path}/lists"))
-
-
-# --- physical-plan properties of the new operators ------------------------
-
-
-def test_ivf_index_cell_read_is_partition_pruned(spark, sf_dir, tmp_path):
-    """The persisted inverted lists are partitioned by cell, so a
-    single-cell probe must show up as a PartitionFilter on the scan
-    (directory pruning — the layout claim the index makes), not a
-    post-scan filter."""
-    from data_framework_spark.similarity.ivf import ivf_index_write
-    from data_framework_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivf_plan")
-    ivf_index_write(emb, path, "vec_id", "embedding", ncells=16)
-    df = spark.read.parquet(f"{path}/lists").filter(F.col("cell") == 3)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    seg = plan.split("PartitionFilters", 1)[1][:200]
-    assert "cell" in seg, seg
-
-
 # --- GEMM association matches the oracle ----------------------------------
 
 

@@ -1,13 +1,10 @@
 """Round-8 hardening: property tests against obviously-correct pure
-references for the span extractor, build-determinism for the IVF-PQ
-index, and the repeated-digest stress (the round-7 convention) for
-the three new oracle queries."""
+references for the span extractor and the repeated-digest stress (the
+round-7 convention) for the three new oracle queries. The IVF-PQ
+build-determinism pins live in tests/test_ivfpq.py."""
 
 from __future__ import annotations
 
-import os
-
-import numpy as np
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -175,103 +172,6 @@ def test_ngram_jaccard_arrow_short_texts_and_empty_probe(spark):
         ).count()
         == 0
     )
-
-
-# --- IVF-PQ build determinism ----------------------------------------------
-
-
-@pytest.mark.slow  # r18: >9 s; slow lane (see pytest.ini)
-def test_ivfpq_two_independent_builds_agree(spark, tmp_path):
-    """Two from-scratch builds of the same corpus into different
-    directories must produce byte-identical code tables and identical
-    search results — Arrow batching, mapInPandas partition order, and
-    parquet write order must not leak into the index (the determinism
-    the oracle hash relies on)."""
-    from data_framework_spark.similarity.ivfpq import (
-        ivfpq_index_write,
-        ivfpq_topk_from_index,
-    )
-
-    rng = np.random.default_rng(11)
-    emb = spark.createDataFrame(
-        [
-            (vid, [float(x) for x in rng.normal(size=64)])
-            for vid in range(150)
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    pa, pb = os.path.join(str(tmp_path), "a"), os.path.join(str(tmp_path), "b")
-    ivfpq_index_write(emb, pa)
-    ivfpq_index_write(emb, pb)
-    codes_a = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{pa}/codes").collect()
-    )
-    codes_b = sorted(
-        tuple(r)
-        for r in spark.read.parquet(f"{pb}/codes").collect()
-    )
-    assert codes_a == codes_b
-    queries = [
-        (r["vec_id"], [float(x) for x in r["embedding"]])
-        for r in emb.filter(F.col("vec_id") < 20).orderBy("vec_id").collect()
-    ]
-    ra = [tuple(r) for r in ivfpq_topk_from_index(spark, pa, queries).collect()]
-    rb = [tuple(r) for r in ivfpq_topk_from_index(spark, pb, queries).collect()]
-    assert ra == rb
-
-
-def test_ivfpq_neighbors_come_from_probed_cells(spark):
-    """Structural invariant of the pruned search: every returned
-    neighbor's assigned cell is one of its query's nprobe probed
-    cells (recomputed independently from the persisted centroids)."""
-    import pandas as pd
-
-    from data_framework_spark.similarity.ivf import _rounded_centroid_cosines
-    from data_framework_spark.similarity.ivfpq import (
-        IVFPQ_INDEX_PREFIX,
-        IVFPQ_NPROBE,
-        q_ivfpq_persist_topk,
-    )
-    from data_framework_spark.sources.formats import get_index_dir
-    from data_framework_spark.sources.tables import load_table
-    from tests.conftest import SF_SMALL
-
-    got = q_ivfpq_persist_topk(spark, SF_SMALL).collect()
-    path = get_index_dir(SF_SMALL, IVFPQ_INDEX_PREFIX)
-    cents = [
-        [float(x) for x in r["embedding"]]
-        for r in spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
-    ]
-    cell_of = {
-        r["vec_id"]: r["cell"]
-        for r in spark.read.parquet(f"{path}/codes")
-        .select("vec_id", "cell")
-        .distinct()
-        .collect()
-    }
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    q_rows = (
-        emb.filter(F.col("vec_id") < 20).orderBy("vec_id").collect()
-    )
-    cos = _rounded_centroid_cosines(cents)(
-        pd.Series([
-            np.asarray([float(x) for x in r["embedding"]]) for r in q_rows
-        ])
-    )
-    cell_ids = np.arange(len(cents))
-    probed = {
-        r["vec_id"]: set(
-            np.lexsort((cell_ids, -cos[i]))[:IVFPQ_NPROBE].tolist()
-        )
-        for i, r in enumerate(q_rows)
-    }
-    assert len(got) > 0
-    for r in got:
-        assert cell_of[r.neighbor_id] in probed[r.query_id], (
-            r.query_id,
-            r.neighbor_id,
-        )
 
 
 # --- repeated-digest stress for the round-8 queries -------------------------

@@ -85,76 +85,6 @@ def test_bm25_adhoc_reuses_postings_index(spark):
     assert scores == sorted(scores, key=lambda s: (-s[0], s[1]))
 
 
-# --- IVFADC refine: shares the index, recall dominates plain ADC -------------
-
-
-def test_ivfpq_refine_shares_index_and_beats_adc(spark):
-    """The refine stage must (a) reuse the persisted IVFADC index —
-    no rebuild — and (b) never lose to the plain ADC route on recall:
-    it re-ranks a SUPERSET of the ADC top-k with the exact metric."""
-    from data_framework_spark.similarity.ivfpq import (
-        IVFPQ_INDEX_PREFIX,
-        q_ivfpq_persist_topk,
-        q_ivfpq_recall_contract,
-        q_ivfpq_refine_recall,
-    )
-    from data_framework_spark.sources.formats import get_index_dir
-
-    q_ivfpq_persist_topk(spark, SF_SMALL).collect()
-    p1 = get_index_dir(SF_SMALL, IVFPQ_INDEX_PREFIX)
-    assert p1 is not None
-    refined = q_ivfpq_refine_recall(spark, SF_SMALL).collect()[0]
-    assert get_index_dir(SF_SMALL, IVFPQ_INDEX_PREFIX) == p1
-    plain = q_ivfpq_recall_contract(spark, SF_SMALL).collect()[0]
-    assert refined["recall"] >= plain["recall"]
-    assert refined["meets_floor"]
-
-
-# --- ADC written-order fold: Spark == oracle under permuted input ------------
-
-
-def test_adc_fold_is_subspace_ordered(spark):
-    """The PQ/IVFPQ ADC aggregation folds the 8 subspace lookups in
-    subspace order regardless of row arrival order — the property
-    F.sum does NOT guarantee (round-8 advisory)."""
-    rows = [(1, 7, 0.3), (1, 0, 0.1), (1, 3, 0.2)]
-    df = spark.createDataFrame(rows, "neighbor_id int, subspace int, dlook double")
-    folded = df.groupBy("neighbor_id").agg(
-        F.round(
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("subspace"), F.col("dlook")))
-                ),
-                F.lit(0.0),
-                lambda acc, s: acc + s["dlook"],
-            ),
-            6,
-        ).alias("adc_dist")
-    )
-    assert folded.collect()[0]["adc_dist"] == round(0.0 + 0.1 + 0.2 + 0.3, 6)
-
-
-# --- nprobe curve: recall bounded by the coverage ceiling --------------------
-
-
-def test_nprobe_curve_recall_bounded_by_coverage(spark):
-    """Per swept nprobe, ADC recall can never exceed the coverage
-    ceiling (a true neighbor outside every probed cell cannot be
-    returned), and coverage is non-decreasing in nprobe (probed sets
-    are nested)."""
-    from data_framework_spark.similarity.ivfpq import (
-        IVFPQ_NPROBE_SWEEP,
-        q_ivfpq_nprobe_curve,
-    )
-
-    rows = q_ivfpq_nprobe_curve(spark, SF_SMALL).collect()
-    assert [r["nprobe"] for r in rows] == list(IVFPQ_NPROBE_SWEEP)
-    for r in rows:
-        assert r["recall"] <= r["coverage"] + 1e-9, r
-    covs = [r["coverage"] for r in rows]
-    assert covs == sorted(covs)
-
-
 # --- minhash verify: Arrow route equals the JVM join route -------------------
 
 
