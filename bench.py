@@ -20,8 +20,8 @@ alongside (this VM's wall times swing up to 10× on identical code, so
 a single warm sample can't separate noise from regression). Most
 cold-query cost is codegen/JIT charged to whichever queries happen to
 run first. Both passes iterate a FIXED sorted query
-order, decoupled from the registry's rotating verify window, so
-per-query cold deltas are comparable across rounds. The one-time bucketed
+order, decoupled from registry insertion order, so per-query cold
+deltas are comparable across rounds. The one-time bucketed
 table layout is materialized BEFORE timing (reported separately as
 layout_build_s): queries should measure the exchange-free join the
 layout buys, not mkdir+write.
@@ -102,11 +102,10 @@ def main() -> None:
     def run_subset(names: list[str]) -> dict[str, float]:
         # THE timing loop (run_all delegates here — one copy of the
         # eviction/sink/rounding protocol, round-9 review). Canonical
-        # sorted order, NOT registry insertion order: the registry
-        # front-loads the driver's rotating verify window, so
-        # iterating it would re-shuffle which queries absorb the cold
-        # codegen/JIT charge every round and make cross-round cold
-        # deltas unreadable (round-4 postmortem). Binds `spark` late,
+        # sorted order, NOT registry insertion order: a registry
+        # edit would otherwise re-shuffle which queries absorb the
+        # cold codegen/JIT charge and make cross-round cold deltas
+        # unreadable (round-4 postmortem). Binds `spark` late,
         # so the cold2/cold3 blocks below reuse it after their
         # session swap.
         t: dict[str, float] = {}

@@ -24,6 +24,8 @@ import logging
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_framework_spark.session import scoped_conf
+
 logger = logging.getLogger(__name__)
 
 # one shuffle task per this many directed edges during the label-
@@ -103,12 +105,8 @@ def connected_components_routed(
         _MIN_PARTITIONS,
         min(_MAX_PARTITIONS, -(-n_edges // _EDGES_PER_PARTITION)),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(parts)}):
         return _cc_rounds(sym, max_rounds), False
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _cc_driver_side(sym: DataFrame) -> DataFrame:

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_framework_spark.session import scoped_conf
 from data_framework_spark.similarity.ann import (
     blocked_cosine_pairs,
     lsh_bucketed_pairs,
@@ -248,12 +249,9 @@ def q_pagerank_neardup(
     # the iteration frames are graph-sized, not corpus-sized — ~15
     # shuffle stages over a few thousand rows pay pure per-partition
     # overhead at the session's corpus-tuned partition count, so the
-    # iterations run at a graph-scaled count (same capture/restore
-    # pattern as streaming.run_stateful_to_completion; at real graph
-    # sizes this knob scales up with edge count)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # iterations run at a graph-scaled count (at real graph sizes
+    # this knob scales up with edge count)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         ranks = pagerank(nodes, edges)
         deg = edges.groupBy(F.col("a").alias("node")).agg(
             F.count(F.lit(1)).alias("deg")
@@ -270,8 +268,6 @@ def q_pagerank_neardup(
         )
         # materialize before the persisted frames are released
         pdf = out.toPandas()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     ranks.unpersist()
     pairs.unpersist()
     return spark.createDataFrame(pdf, schema=out.schema)

@@ -85,7 +85,13 @@ def _digest(rows: list[tuple], colnames: list[str]) -> int:
 
 
 def compare(spark: SparkSession, sf_dir: str, name: str) -> dict:
-    """Run query `name` on Spark and DuckDB; return a comparison report."""
+    """Run query `name` on Spark and DuckDB; return a comparison report.
+
+    Each side executes once. An oracle report also carries both
+    engines' column types (`spark_types`: Spark simple strings,
+    `duck_types`: DuckDB type names), taken from the same executions:
+    a relation's `.types` names HUGEINT where a cursor's `description`
+    says only NUMBER."""
     from data_framework_spark.registry import QUERIES
 
     q = QUERIES[name]
@@ -106,12 +112,14 @@ def compare(spark: SparkSession, sf_dir: str, name: str) -> dict:
         return report
 
     con = duckdb_connection(sf_dir)
-    res = con.execute(q.oracle)
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
+    rel = con.sql(q.oracle)
+    duck_cols = rel.columns
+    duck_rows = rel.fetchall()
 
     report.update(
         mode="oracle",
+        spark_types={f.name: f.dataType.simpleString() for f in sdf.schema.fields},
+        duck_types={c: str(t) for c, t in zip(duck_cols, rel.types)},
         duck_rows=len(duck_rows),
         duck_cols=sorted(duck_cols),
         rows_match=len(spark_rows) == len(duck_rows),

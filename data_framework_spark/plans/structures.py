@@ -652,7 +652,7 @@ def island_family_upstream(
     )
     return fam.filter(
         F.col("t").isin([float(p) for _, p in tmap])
-    ).withColumn("t", remap.getItem(F.col("t")))
+    ).withColumn("t", remap[F.col("t")])
 
 
 # --- driver-checkable end-to-end query (rows-only, oracle=None) ------------

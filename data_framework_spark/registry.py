@@ -635,7 +635,7 @@ QUERIES: dict[str, Query] = {
         corpus_mod.Q_LABEL_CENTROIDS_SQL,
         "per-label embedding centroid norm via positional aggregation",
     ),
-    # --- round-3 late additions (driver-checked on next rotation) ---
+    # --- round-3 late additions ---
     "orc_roundtrip": Query(
         formats_mod.q_orc_roundtrip,
         formats_mod.Q_ORC_ROUNDTRIP_SQL,
@@ -1003,7 +1003,7 @@ QUERIES: dict[str, Query] = {
         "persisted index — quantifies the cell-coverage knob the "
         "refine floor notes name",
     ),
-    # --- round-10 additions (driver-checked on the next rotation) ---
+    # --- round-10 additions ---
     "bpe_batched_merges": Query(
         bpe_mod.q_bpe_batched_merges,
         bpe_mod.Q_BPE_BATCHED_MERGES_SQL,
@@ -1019,113 +1019,6 @@ QUERIES: dict[str, Query] = {
         "beats_seed boolean — both regimes re-derived from scratch "
         "in the oracle (r9 verdict ask 3 as a permanent pin)",
     ),
-}
-
-# The driver's correctness harness verifies only the FIRST 50 registry
-# entries in insertion order. To keep cumulative hard-signal coverage
-# fresh, the least-recently-driver-verified entries are hoisted to the
-# front each round. STALENESS BUDGET (r9 verdict ask 7): no query's
-# driver row may be older than 3 rounds, and net registry additions
-# stay <= 3-4/round so the 50-slot window can service the budget; each
-# round's window arithmetic below is derived from that budget.
-#
-# Round-18 rotation (the r17 verdict's top-ranked ask — the r17
-# window did NOT rotate, so the r16 comment's named debt aged one
-# more round; at r18 the past-budget set is 16@r13 + 44@r14 = 60
-# queries for 50 slots, and the TOUCH policy additionally demands
-# driver rows for the r17-rewritten paths, 22 of which have none).
-# Composition, in priority order:
-# (a) the FULL 16-query last-green-r13 cohort (5 rounds stale, may
-#     not be deferred again; includes 4 r17-rewritten paths:
-#     semantic_dedup, cluster_purity, pagerank_neardup,
-#     funnel_stages), registry order;
-# (b) the 18 remaining r17-rewritten/touched paths with no r17
-#     driver row (TOUCH policy: plan/kernel change outranks merely-
-#     old rows) — 9 from the r14 cohort (minhash_near_dup_pairs,
-#     dedup_clusters, ivf_persist_roundtrip, halo_smooth_multi_t +
-#     the 5-query ivfpq family) and
-#     9 from the r15 cohort (sketch/hll splits, simhash pair
-#     enumeration, the pq widens, pagerank_neardup_lsh,
-#     semantic_dedup_scaled), registry order within each;
-# (c) 6 slots reserved for the paths round 18 itself plans to touch
-#     (streaming block ×4, benchmark_decontam, and
-#     tpch_q2_min_cost_supplier — the last also r14-stale);
-# (d) the FIRST 10 of the remaining r14 cohort in registry order.
-# 16 + 18 + 6 + 10 = exactly 50.
-#
-# After this window: staleness histogram is 50@r18 / 50@r17 / 36@r15
-# / 24@r14. The 24-query r14 remainder (tpch_q8_market_share onward
-# in registry order, minus the rows serviced here) is the named debt
-# that must LEAD the next rotation; the r15 block follows. The
-# r17-touched trio already driver-certified in r17
-# (dedup_incremental, chunk_dedup, dup_span_extract) and the
-# r17-green curation/ann rows deliberately yield their slots to the
-# stale cohorts.
-#
-# Retire-or-keep: registry stays FLAT at 160 — optimization rounds
-# change no contracts, only plans; every rewrite is oracle-pinned.
-_VERIFY_FIRST: list[str] = [
-    # -- (a) the full last-green-r13 cohort, registry order --
-    "stratified_split",
-    "unigram_logprob",
-    "zipf_fit",
-    "semantic_dedup",
-    "domain_mix",
-    "ks_drift",
-    "cluster_purity",
-    "cdc_chunks",
-    "snapshot_diff",
-    "k_anonymity",
-    "pagerank_neardup",
-    "multimodal_embed_topk",
-    "text_normalize",
-    "incremental_agg_refresh",
-    "funnel_stages",
-    "bpe_detok_roundtrip",
-    # -- (b) r17-rewritten paths without an r17 driver row --
-    # r14-stale members, registry order:
-    "minhash_near_dup_pairs",
-    "dedup_clusters",
-    "ivf_persist_roundtrip",
-    "halo_smooth_multi_t",
-    "ivfpq_persist_topk",
-    "ivfpq_recall_contract",
-    "ivfpq_refine_topk",
-    "ivfpq_refine_recall",
-    "ivfpq_nprobe_curve",
-    # r15-stale members, registry order:
-    "sketch_accuracy_events",
-    "hll_union_contract_events",
-    "dedup_simhash",
-    "simhash_near_dups",
-    "semantic_dedup_scaled",
-    "pq_codes",
-    "pq_adc_topk",
-    "pagerank_neardup_lsh",
-    "pq_train_gain",
-    # -- (c) round-18 planned-touch reservations --
-    "stateful_user_totals_live",
-    "streaming_dedup_events",
-    "streaming_interval_join",
-    "streaming_heavy_hitters",
-    "benchmark_decontam",
-    "tpch_q2_min_cost_supplier",
-    # -- (d) first 10 of the remaining r14 cohort, registry order --
-    "distributed_label_contract",
-    "json_props_events",
-    "tpch_q1",
-    "tpch_q3",
-    "tpch_q5",
-    "tpch_q6",
-    "top_k_orders",
-    "group_rollup",
-    "tpch_q4_semijoin",
-    "tpch_q7_volume",
-]
-
-QUERIES = {
-    **{k: QUERIES[k] for k in _VERIFY_FIRST},
-    **{k: v for k, v in QUERIES.items() if k not in _VERIFY_FIRST},
 }
 
 

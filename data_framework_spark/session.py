@@ -41,11 +41,14 @@ could not bind it.
 from __future__ import annotations
 
 import atexit
+import contextlib
 import functools
 import os
 import shutil
 import tempfile
+import threading
 import uuid
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -116,6 +119,34 @@ def ensure_session_conventions(spark: SparkSession) -> SparkSession:
         if spark.conf.get(k, None) != v:
             spark.conf.set(k, v)
     return spark
+
+
+_SCOPED_CONF_LOCK = threading.RLock()
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set the session-global `confs` for the body of the `with`, and
+    restore each one's previous value (or unset it) on exit, also on
+    an exception.
+
+    One process-wide re-entrant lock is held for the whole scope: two
+    scopes on one session would otherwise restore each other's
+    transient values. A scope opened from another thread waits for
+    the open one to close; a nested scope on the same thread does
+    not."""
+    with _SCOPED_CONF_LOCK:
+        prev = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
 
 #: AF_UNIX's limit on a socket path, in bytes (108 with the NUL).

@@ -84,6 +84,7 @@ from data_framework_spark.similarity.pq import (
 )
 from data_framework_spark.sources.tables import (
     collect_bounded,
+    local_rows,
     load_table,
     read_parquet,
 )
@@ -785,9 +786,7 @@ def ivfpq_refine_topk(
     cand = ivfpq_topk_from_index(spark, path, queries, k=r, nprobe=nprobe).select(
         "query_id", "neighbor_id"
     )
-    qdf = spark.createDataFrame(
-        [(qid, qv) for qid, qv in queries], "query_id long, qv array<double>"
-    )
+    qdf = local_rows(spark, queries, "query_id long, qv array<double>")
     fetched = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
     ).join(F.broadcast(cand), "neighbor_id")
@@ -1020,8 +1019,9 @@ def q_ivfpq_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         cov_rows.append(
             (n, math.floor(cov / len(exact_rows) * 1e4 + 0.5) / 1e4)
         )
-    cov_df = spark.createDataFrame(cov_rows, "nprobe int, coverage double")
-    exact_sweep = spark.createDataFrame(
+    cov_df = local_rows(spark, cov_rows, "nprobe int, coverage double")
+    exact_sweep = local_rows(
+        spark,
         [
             (n, qid, nid)
             for n in IVFPQ_NPROBE_SWEEP

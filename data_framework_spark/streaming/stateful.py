@@ -25,7 +25,6 @@ exactly what the driver-checked query below asserts against DuckDB.
 from __future__ import annotations
 
 import os
-import threading
 import uuid
 from typing import Any, Iterator
 
@@ -35,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from data_framework_spark.session import scoped_conf
 from data_framework_spark.sources.tables import load_table
 
 OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
@@ -162,8 +162,8 @@ def run_stateful_to_completion(
     temp view is copied out and DROPPED before returning — each run
     otherwise pins its full emitted-row set in driver memory for the
     session's lifetime (round-9 review). The emitted sets here are
-    bounded (per-key updates / distinct pairs / windowed matches), and
-    every caller materializes them to the driver anyway.
+    bounded (per-key updates / distinct pairs / windowed matches); the
+    copy is a driver-local relation, so callers can build on it lazily.
 
     Stateful streaming maintains one state store (four for
     stream-stream joins) per shuffle partition per micro-batch, so
@@ -195,54 +195,35 @@ def run_stateful_to_completion(
     import shutil
 
     name = f"stateful_{uuid.uuid4().hex[:12]}"
-    # The capture/set/run/restore cycle mutates two SESSION-global
-    # confs; two concurrent calls on one SparkSession could interleave
-    # and restore each other's transient values (r15 advisory — the
-    # per-plan partition knobs make concurrent use likelier). The
-    # module lock serializes whole runs; replay harness runs are
-    # already sequential per session, so there is no lost parallelism.
-    with _CONF_SWAP_LOCK:
-        return _run_stateful_locked(
-            spark, stream_out, output_mode, shuffle_partitions, name
-        )
-
-
-_CONF_SWAP_LOCK = threading.Lock()
-
-
-def _run_stateful_locked(spark, stream_out, output_mode, shuffle_partitions, name):
-    import shutil
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nd = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     ckpt = (
         os.path.join("/dev/shm", f"spark_graft_ckpt_{name}")
         if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)
         else None
     )
+    # the two session-global confs are set for the run only (see
+    # session.scoped_conf for why concurrent runs serialize)
     try:
-        w = (
-            stream_out.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-        )
-        if ckpt:
-            w = w.option("checkpointLocation", ckpt)
-        q = w.start()
-        try:
-            q.processAllAvailable()
-            progress = list(q.recentProgress)
-        finally:
-            q.stop()
+        with scoped_conf(
+            spark,
+            {
+                "spark.sql.shuffle.partitions": str(shuffle_partitions),
+                "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+            },
+        ):
+            w = (
+                stream_out.writeStream.outputMode(output_mode)
+                .format("memory")
+                .queryName(name)
+            )
+            if ckpt:
+                w = w.option("checkpointLocation", ckpt)
+            q = w.start()
+            try:
+                q.processAllAvailable()
+                progress = list(q.recentProgress)
+            finally:
+                q.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nd
-        )
         if ckpt:
             shutil.rmtree(ckpt, ignore_errors=True)
     sink = spark.table(name)
@@ -281,9 +262,7 @@ def q_stateful_user_totals_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("user_id")
     )
-    # materialize before the memory sink table is dropped/overwritten
-    pdf = final.toPandas()
-    return spark.createDataFrame(pdf, schema=final.schema)
+    return final
 
 
 Q_STATEFUL_USER_TOTALS_LIVE_SQL = """
@@ -319,9 +298,7 @@ def q_streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_batches = len([p for p in progress if p["numInputRows"] > 0])
     assert n_batches >= 3, f"expected >=3 data micro-batches, got {n_batches}"
-    final = emitted.orderBy("user_id", "event_type")
-    pdf = final.toPandas()
-    return spark.createDataFrame(pdf, schema=final.schema)
+    return emitted.orderBy("user_id", "event_type")
 
 
 Q_STREAMING_DEDUP_EVENTS_SQL = """
@@ -385,9 +362,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_batches = len([p for p in progress if p["numInputRows"] > 0])
     assert n_batches >= 3, f"expected >=3 data micro-batches, got {n_batches}"
-    final = emitted.orderBy("event_id", "gap_us")
-    pdf = final.toPandas()
-    return spark.createDataFrame(pdf, schema=final.schema)
+    return emitted.orderBy("event_id", "gap_us")
 
 
 Q_STREAMING_INTERVAL_JOIN_SQL = """

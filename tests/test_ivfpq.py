@@ -462,6 +462,18 @@ def test_nprobe_curve_recall_bounded_by_coverage(spark):
     assert covs == sorted(covs)
 
 
+def test_nprobe_curve_runs_no_python_rdd_scan(spark):
+    """The curve's driver-side inputs (the exact x sweep grid, the
+    coverage rows) are LocalRelations, not parallelized Python RDDs
+    that run Python tasks for a few dozen rows."""
+    from data_framework_spark.similarity.ivfpq import q_ivfpq_nprobe_curve
+
+    df = q_ivfpq_nprobe_curve(spark, SF_SMALL)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan ExistingRDD") == 0, plan
+
+
 def test_k256_refine_recall_sits_at_coverage_ceiling(spark):
     """The round-12 headline, re-pinned over the r13 operating point
     (32 cells / refine nprobe=16): with 8-bit codebooks the refine

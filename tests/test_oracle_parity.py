@@ -1,6 +1,7 @@
 """Replicates the driver's DuckDB-oracle comparison for every
 registered query at the small scale factor. This is the primary
-correctness gate during development (SURVEY.md §5.1)."""
+correctness gate during development (SURVEY.md §5.1): each case
+executes its query once on each engine."""
 
 from __future__ import annotations
 
@@ -8,18 +9,6 @@ import pytest
 
 from data_framework_spark.oracle import compare, diff_sample
 from data_framework_spark.registry import QUERIES
-
-
-@pytest.mark.slow  # r18: the 160-query digest is the suite's main
-# wall cost (>20 min); the round driver hash-checks the same surface
-# at sf0.01 every round, and developers run it via `-m slow`
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_oracle_parity(spark, sf_dir, name):
-    report = compare(spark, sf_dir, name)
-    if not report["ok"] and report.get("mode") == "oracle":
-        report["diff"] = diff_sample(spark, sf_dir, name)
-    assert report["ok"], report
-
 
 _DUCK_INTEGRAL = {
     "TINYINT", "SMALLINT", "INTEGER", "BIGINT",
@@ -30,48 +19,35 @@ _SPARK_INTEGRAL = {"byte", "short", "int", "long"}
 _SPARK_FLOATING = {"float", "double"}
 
 
-@pytest.mark.slow  # r18: >10 s; slow lane (see pytest.ini)
-def test_oracle_output_types(spark, sf_dir):
+def _type_problems(report: dict) -> list[str]:
     """The driver fetches oracle results via pandas/Arrow, where DuckDB
     HUGEINT (e.g. an uncast window sum over BIGINT) canonicalizes to
     float64 and fails the type-sensitive digest even when values match
-    (round-3 pack_sequences red row). Pin the whole class: DESCRIBE each
-    oracle (no execution) and assert (a) no HUGEINT output column
-    anywhere, (b) integral/floating type class agrees with the Spark
-    schema column-by-column."""
-    from data_framework_spark.oracle import duckdb_connection
-
-    con = duckdb_connection(sf_dir)
+    (round-3 pack_sequences red row). So no oracle column may be
+    HUGEINT, and each column's integral/floating class must agree with
+    the Spark schema's."""
     problems = []
-    for name, q in QUERIES.items():
-        if q.oracle is None:
+    for col, dt in report["duck_types"].items():
+        if "HUGEINT" in dt:
+            problems.append(f"{col}: oracle emits {dt}")
             continue
-        duck_types = {
-            c: t.upper()
-            for c, t, *_ in con.execute("DESCRIBE " + q.oracle).fetchall()
-        }
-        spark_types = {
-            f.name: f.dataType.simpleString()
-            for f in q.fn(spark, sf_dir).schema.fields
-        }
-        for col, dt in duck_types.items():
-            if "HUGEINT" in dt:
-                problems.append(f"{name}.{col}: oracle emits {dt}")
-                continue
-            st = spark_types.get(col)
-            if st in _SPARK_INTEGRAL and dt in _DUCK_FLOATING:
-                problems.append(f"{name}.{col}: spark {st} vs oracle {dt}")
-            elif st in _SPARK_FLOATING and dt in _DUCK_INTEGRAL:
-                problems.append(f"{name}.{col}: spark {st} vs oracle {dt}")
-    assert not problems, problems
+        st = report["spark_types"].get(col)
+        if (st in _SPARK_INTEGRAL and dt in _DUCK_FLOATING) or (
+            st in _SPARK_FLOATING and dt in _DUCK_INTEGRAL
+        ):
+            problems.append(f"{col}: spark {st} vs oracle {dt}")
+    return problems
 
 
-@pytest.mark.slow  # r18: >10 s; slow lane (see pytest.ini)
-def test_every_query_returns_rows(spark, sf_dir):
-    """Queries should be non-trivially populated at sf0.001 (a 0-row
-    result can hash-match while verifying nothing)."""
-    empty = []
-    for name, q in QUERIES.items():
-        if q.fn(spark, sf_dir).limit(1).count() == 0:
-            empty.append(name)
-    assert not empty, f"queries returning 0 rows at sf0.001: {empty}"
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_oracle_parity(spark, sf_dir, name):
+    report = compare(spark, sf_dir, name)
+    # a 0-row result can hash-match while verifying nothing
+    assert report["spark_rows"] > 0, report
+    if report["mode"] == "rows_only":
+        return
+    problems = _type_problems(report)
+    assert not problems, (problems, report)
+    if not report["ok"]:
+        report["diff"] = diff_sample(spark, sf_dir, name)
+    assert report["ok"], report

@@ -8,76 +8,10 @@ equivalences the optimizations rely on.
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from pyspark.sql import functions as F
 
 SF001 = "/root/testdata/sf0.001"
-SF01 = "/root/testdata/sf0.01"
-
-
-def test_r18_verify_window_arithmetic():
-    """The driver verifies the FIRST 50 registry entries. Round 18's
-    rotation (the r17 verdict's top ask — r17 did not rotate):
-    (a) the FULL 16-query last-green-r13 cohort; (b) the 18
-    r17-rewritten paths without an r17 driver row; (c) 6 slots for
-    the paths r18 itself touches (streaming ×4, benchmark_decontam,
-    tpch_q2); (d) the first 10 of the remaining r14 cohort. Cohort
-    membership is re-derived from the committed CORRECTNESS files so
-    the pin fails if the list drifts from the actual staleness
-    record."""
-    import json
-    import os
-
-    from data_framework_spark.registry import QUERIES, _VERIFY_FIRST
-
-    here = os.path.dirname(__file__)
-    root = os.path.join(here, "..")
-
-    def load(n):
-        with open(os.path.join(root, f"CORRECTNESS_r{n:02d}.json")) as f:
-            return set(json.load(f))
-
-    last = {}
-    for n in range(1, 18):
-        p = os.path.join(root, f"CORRECTNESS_r{n:02d}.json")
-        if os.path.exists(p):
-            for q in load(n):
-                last[q] = n
-
-    assert len(_VERIFY_FIRST) == 50
-    assert len(set(_VERIFY_FIRST)) == 50
-    assert set(_VERIFY_FIRST) <= set(QUERIES)
-    assert list(QUERIES)[:50] == _VERIFY_FIRST  # hoisting applied
-
-    a, b, c, d = (
-        _VERIFY_FIRST[:16],
-        _VERIFY_FIRST[16:34],
-        _VERIFY_FIRST[34:40],
-        _VERIFY_FIRST[40:50],
-    )
-    # (a) == the ENTIRE last-green-r13 cohort (5 rounds stale at r18)
-    cohort13 = {q for q in QUERIES if last.get(q) == 13}
-    assert set(a) == cohort13 and len(a) == 16
-    # (b) r17-rewritten paths lacking an r17 driver row — all from
-    # the r14/r15 cohorts (the four r13-cohort rewrites sit in (a))
-    assert all(last.get(q) in (14, 15) for q in b), [
-        (q, last.get(q)) for q in b
-    ]
-    assert set(b) >= {
-        "minhash_near_dup_pairs", "dedup_clusters", "halo_smooth_multi_t",
-        "ivfpq_persist_topk", "ivfpq_nprobe_curve", "sketch_accuracy_events",
-        "hll_union_contract_events", "pq_codes", "pq_adc_topk",
-        "pagerank_neardup_lsh", "semantic_dedup_scaled", "pq_train_gain",
-    }
-    # (c) the r18 planned-touch reservations
-    assert c == [
-        "stateful_user_totals_live", "streaming_dedup_events",
-        "streaming_interval_join", "streaming_heavy_hitters",
-        "benchmark_decontam", "tpch_q2_min_cost_supplier",
-    ]
-    # (d) oldest r14 rows with the returned slots
-    assert all(last.get(q) == 14 for q in d), [(q, last.get(q)) for q in d]
 
 
 class TestChunkedDedupCounts:

@@ -324,6 +324,18 @@ def test_hessian_variable_matches_kernel(found):
     assert np.array_equal(got.view(np.int64), want.view(np.int64))
 
 
+def test_island_family_upstream_uses_no_deprecated_api(spark, sf_dir):
+    """The family slice's t remap indexes the map column, not the
+    deprecated `Column.getItem(Column)`."""
+    import warnings
+
+    from data_framework_spark.plans.structures import island_family_upstream
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        island_family_upstream(spark, sf_dir, [(0.0, 0), (1.0, 2)])
+
+
 @pytest.mark.parametrize(
     "name",
     [
